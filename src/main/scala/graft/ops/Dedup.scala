@@ -333,7 +333,16 @@ object Dedup {
   /** [[dedupClusters]] over an ALREADY-STAGED bucket incidence — so a
     * composed consumer ([[graft.ops.TrainingPrep.clusterSplit]]) that
     * also needs the incidence for its own candidate pairs builds the
-    * shingle+minhash pass ONCE instead of twice (r14, guide §2.4). */
+    * shingle+minhash pass ONCE instead of twice (r14, guide §2.4).
+    *
+    * Deliberately NOT [[Similarity.minLabelComponents]]: this loop runs
+    * on the bipartite doc↔bucket incidence, two key-partitioned
+    * aggregates per round and no pointer jump. Rewriting it as star
+    * edges (doc, bucket-min doc) fed to the shared path-halving loop
+    * gave identical labels in 2 rounds, but slowed `q_dedup_clusters`
+    * on the llm_curation benchmark in all 4 alternating pairs (seeds
+    * 11–14: 3.11/3.34/5.98/4.94 s vs 2.93/2.59/3.87/3.55 s; op_tail_s
+    * +12–57%). The two loops share no logic, so they stay separate. */
   private[graft] def dedupClustersFrom(buckets: DataFrame): DataFrame = {
     // seed with one propagation round already applied: label(doc) = min
     // doc_id over the doc's buckets (each doc is in its own buckets, so the

@@ -1,7 +1,7 @@
 package graft.ops
 
 import graft.Tables
-import graft.functions.VectorExpressions.floatDot
+import graft.functions.VectorExpressions.{doubleDot, floatDot}
 import graft.util.Det
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
@@ -56,6 +56,89 @@ object Similarity {
     * Loop-carried frames stay on [[once]] — persist does not truncate
     * lineage. */
   private def keep(df: DataFrame): DataFrame = graft.util.Ckpt.share(df)
+
+  /** The deterministic coarse sample: every 100th vector seeds the IVF
+    * quantizer ([[seedCentroids]]) and the PQ codebooks ([[pqCodebook]]). */
+  private val SeedRow: Column = col("vec_id") % 100 === 0
+
+  /** The seed coarse quantizer: the [[SeedRow]] sample of a (vec_id, v,
+    * norm) frame as the (cid, cv, cn) frame [[nearestCell]] and
+    * [[probeCells]] read. */
+  private def seedCentroids(n: DataFrame): DataFrame =
+    n.filter(SeedRow)
+      .select(col("vec_id").as("cid"), col("v").as("cv"), col("norm").as("cn"))
+
+  /** THE cell-assignment rule: each (vec_id, v, norm) row joins its
+    * highest quantized-cosine centroid of a broadcast (cid, cv, cn)
+    * frame, ties going to the lowest cid. Returns (vec_id, `carry`…,
+    * cid, ccos). `dot` is the caller's oracle parity: [[dot]] (float) or
+    * [[graft.functions.VectorExpressions.doubleDot]] (trained quantizer).
+    *
+    * Scale shape: centroids broadcast (k ≪ corpus); the argmax is
+    * max(struct(ccos, -cid)) over NARROW (vec_id, ccos, cid) rows, map-side
+    * combinable, so vectors never ride the shuffle — the window
+    * formulation would carry the payload once per centroid. */
+  private[graft] def nearestCell(n: DataFrame, cents: DataFrame,
+                                 dot: (Column, Column) => Column,
+                                 carry: Seq[String] = Nil): DataFrame = {
+    val keys = col("vec_id") +: carry.map(col)
+    n.crossJoin(broadcast(cents))
+      .select(keys ++ Seq(
+        Det.q4(dot(col("v"), col("cv")) / (col("norm") * col("cn"))).as("ccos"),
+        col("cid")): _*)
+      .groupBy(keys: _*)
+      .agg(max(struct(col("ccos"), (-col("cid")).as("negcid"))).as("b"))
+      .select(keys ++ Seq((-col("b.negcid")).as("cid"), col("b.ccos").as("ccos")): _*)
+  }
+
+  /** THE probe rule: each query row (qid, qv, qn, …) keeps its 2 nearest
+    * cells of a broadcast (cid, cv, cn) frame by (quantized cosine desc,
+    * cid asc). Returns the query columns plus cid, two rows per qid. */
+  private def probeCells(q: DataFrame, cents: DataFrame,
+                         dot: (Column, Column) => Column): DataFrame = {
+    val w = Window.partitionBy("qid").orderBy(col("ccos").desc, col("cid").asc)
+    q.crossJoin(broadcast(cents))
+      .withColumn("ccos", Det.q4(dot(col("qv"), col("cv")) / (col("qn") * col("cn"))))
+      .withColumn("crn", row_number().over(w))
+      .filter(col("crn") <= 2)
+      .select(q.columns.map(col) :+ col("cid"): _*)
+  }
+
+  /** THE min-label connected-components loop, the Spark twin of the
+    * oracle's [[minLabelCtes]]: from base labels (vec_id, label) over
+    * undirected (src, dst) edges, each round takes the min over
+    * neighbors' labels, then path-halves l ← min(l, l(l)), stages, and
+    * counts changed labels; at most 30 rounds, one `[cc] <tag>` stderr
+    * line per round. Every label must be a vertex of `labels0` so the
+    * halving self-join resolves; rounds drop from component DIAMETER to
+    * ~log(diameter). Returns the final labels and the rounds run. */
+  private[graft] def minLabelComponents(labels0: DataFrame, edges: DataFrame,
+                                        tag: String): (DataFrame, Int) = {
+    var labels = labels0
+    var rounds = 0
+    var changed = 1L
+    while (changed > 0 && rounds < 30) {
+      val nbrMin = edges.join(labels, edges("dst") === labels("vec_id"))
+        .groupBy("src").agg(min("label").as("nl"))
+      val stepped = labels.join(nbrMin, labels("vec_id") === nbrMin("src"), "left")
+        .select(labels("vec_id"), col("label").as("old"),
+          least(col("label"), coalesce(col("nl"), col("label"))).as("l1"))
+      val ptr = stepped.select(col("vec_id").as("pv"), col("l1").as("pl"))
+      val next = stepped.join(ptr, stepped("l1") === ptr("pv"))
+        .select(stepped("vec_id"), least(col("l1"), col("pl")).as("label"),
+          (least(col("l1"), col("pl")) < col("old")).cast("int").as("chg"))
+        .transform(once)
+      changed = next.agg(coalesce(sum("chg"), lit(0L))).collect()(0).getLong(0)
+      labels = next.select("vec_id", "label")
+      rounds += 1
+      // NOTE (r14, measured): do NOT fuse two propagate+halve steps into
+      // one staged round — Spark has no common-subexpression reuse across
+      // join branches, so the inner step's edge join recomputes once per
+      // consumer branch (up to 4×): 6 rounds → 4, but 3.3 s → 4.5 s.
+      System.err.println(s"[cc] $tag round $rounds changed=$changed")
+    }
+    (labels, rounds)
+  }
 
   /** [[cosineTopk]]'s query stride: every [[CosineStride]]-th vector is a
     * query. Named (ADVICE r10) because [[rboRankings]]' b-leg filters
@@ -281,13 +364,12 @@ object Similarity {
     * χ² keyness of its doc-presence terms — the human-readable answer to
     * "what IS this embedding cluster?" that semantic-dedup and
     * cluster-sampling reports need before anyone trusts them. Cells are
-    * [[clusterSample]]'s quantizer (every 100th vector as a centroid,
-    * argmax quantized cosine, tie → smallest cid); scoring is
+    * [[nearestCell]] over the [[seedCentroids]] quantizer; scoring is
     * [[TextAnalysis.termChi2]]'s 2×2 presence χ², keyed by cell instead
     * of language; top-3 terms per cell.
     *
-    * Determinism: the assignment is the established argmax-over-
-    * quantized-cosine struct-max; all margins are exact BIGINTs; the χ²
+    * Determinism: the assignment is [[nearestCell]]'s quantized-cosine
+    * argmax; all margins are exact BIGINTs; the χ²
     * value is the termChi2 expression verbatim (DECIMAL(38,0) cross
     * products, one IEEE division, 6-dp floor-quantize, undiscriminating
     * margins defined as exactly 0).
@@ -299,15 +381,7 @@ object Similarity {
   def clusterTopics(s: SparkSession, d: String): DataFrame = {
     val dec0 = org.apache.spark.sql.types.DecimalType(38, 0)
     val n = once(withNorm(Tables.embeddings(s, d)).select("vec_id", "v", "norm"))
-    val cents = n.filter(col("vec_id") % 100 === 0)
-      .select(col("vec_id").as("cid"), col("v").as("cv"), col("norm").as("cn"))
-    val asg = once(n.crossJoin(broadcast(cents))
-      .select(col("vec_id"),
-        Det.q4(dot(col("v"), col("cv")) / (col("norm") * col("cn"))).as("ccos"),
-        col("cid"))
-      .groupBy("vec_id")
-      .agg(max(struct(col("ccos"), (-col("cid")).as("negcid"))).as("b"))
-      .select(col("vec_id"), (-col("b.negcid")).as("cid")))
+    val asg = once(nearestCell(n, seedCentroids(n), dot).select("vec_id", "cid"))
     val dw = once(Tables.documents(s, d)
       .select(col("doc_id"), explode(split(col("text"), " ")).as("word"))
       .filter(length(col("word")) > 0).distinct()
@@ -636,8 +710,8 @@ object Similarity {
     *
     * Scale shape: the ε-graph comes from the banded [[bandedPairs]]
     * candidates (never all-pairs); degrees and the label loop move only
-    * (id, label) pairs; rounds = core-subgraph diameter with the
-    * [[semanticDedup]] checkpoint discipline. */
+    * (id, label) pairs; the core clusters are [[minLabelComponents]]
+    * over the core-core subgraph. */
   def dbscan(s: SparkSession, d: String): DataFrame = {
     val pairs = once(bandedPairs(once(withNorm(Tables.embeddings(s, d))), DbEps)
       .select("id1", "id2"))
@@ -648,38 +722,14 @@ object Similarity {
       .join(deg, col("vec_id") === col("src"), "left")
       .select(col("vec_id"), coalesce(col("n_neighbors"), lit(0L)).as("n_neighbors")))
     val coreIds = once(base.filter(col("n_neighbors") >= DbMinPts).select("vec_id"))
-    // min-label propagation over the core-core subgraph only — STAGED
-    // (r14): previously rebuilt from `und` by two joins inside EVERY
-    // label round; the loop now reads the materialized core-core edges
+    // staged, so every label round reads the materialized core-core
+    // edges instead of re-joining `und` against the core ids
     val cc = once(und
       .join(coreIds.select(col("vec_id").as("cs")), col("src") === col("cs"))
       .join(coreIds.select(col("vec_id").as("cd")), col("dst") === col("cd"))
       .select("src", "dst"))
-    var labels = once(coreIds.select(col("vec_id"), col("vec_id").as("label")))
-    var rounds = 0
-    var changed = 1L
-    while (changed > 0 && rounds < 30) {
-      val nbrMin = cc.join(labels, cc("dst") === labels("vec_id"))
-        .groupBy("src").agg(min("label").as("nl"))
-      val stepped = labels.join(nbrMin, labels("vec_id") === nbrMin("src"), "left")
-        .select(labels("vec_id"), col("label").as("old"),
-          least(col("label"), coalesce(col("nl"), col("label"))).as("l1"))
-      // path halving (pointer jumping): l ← min(l, l(l)). Every label is
-      // the id of a real core vertex (mins over core ids), so the
-      // self-join resolves; rounds drop from component DIAMETER to
-      // ~log(diameter) — the difference between 20 and 5 shuffle rounds
-      // on a chain-shaped ε-graph, at the cost of one extra narrow join
-      val ptr = stepped.select(col("vec_id").as("pv"), col("l1").as("pl"))
-      val next = stepped.join(ptr, stepped("l1") === ptr("pv"))
-        .select(stepped("vec_id"), least(col("l1"), col("pl")).as("label"),
-          (least(col("l1"), col("pl")) < col("old")).cast("int").as("chg"))
-        .transform(once)
-      changed = next.agg(coalesce(sum("chg"), lit(0L))).collect()(0).getLong(0)
-      labels = next.select("vec_id", "label")
-      rounds += 1
-      // see the semanticComponents loop note: do NOT fuse rounds (r14)
-      System.err.println(s"[cc] dbscan round $rounds changed=$changed")
-    }
+    val (labels, _) = minLabelComponents(
+      once(coreIds.select(col("vec_id"), col("vec_id").as("label"))), cc, "dbscan")
     val clab = labels.select(col("vec_id").as("cv"), col("label").as("core_cluster"))
     // border: non-core with a core neighbor takes the min neighboring label
     val borderLab = und
@@ -705,7 +755,7 @@ object Similarity {
     * the label structure is recoverable from the geometry (so
     * label-blocked dedup and semantic clustering are trustworthy).
     *
-    * Scale shape: the [[annIvf]] serve shape end-to-end (VERDICT round-8
+    * Scale shape: the [[ivfServe]] shape end-to-end (VERDICT round-8
     * item 2 — the previous revision broadcast the probe set, which grows
     * WITH the corpus and OOMs executors at real scale): only the
     * centroid set broadcasts (k centroids, fixed by the quantizer, not
@@ -715,28 +765,13 @@ object Similarity {
     * run per probe over ≤ 2 cells' occupancy. */
   def knnClassify(s: SparkSession, d: String): DataFrame = {
     val n = once(withNorm(Tables.embeddings(s, d)))
-    val cents = n.filter(col("vec_id") % 100 === 0)
-      .select(col("vec_id").as("cid"), col("v").as("cv"), col("norm").as("cn"))
-    // voters (probes held out) assigned to their single best cell — the
-    // same narrow map-side-combinable argmax as annIvf
+    val cents = seedCentroids(n)
+    // voters (probes held out) assigned to their single best cell
     val voters = n.filter(col("vec_id") % 50 =!= 0)
-    val best = voters.crossJoin(broadcast(cents))
-      .select(col("vec_id"),
-        Det.q4(dot(col("v"), col("cv")) / (col("norm") * col("cn"))).as("ccos"),
-        col("cid"))
-      .groupBy("vec_id")
-      .agg(max(struct(col("ccos"), (-col("cid")).as("negcid"))).as("b"))
-      .select(col("vec_id"), (-col("b.negcid")).as("cid"))
-    val assigned = voters.join(best, "vec_id")
-    val wCell = Window.partitionBy("qid").orderBy(col("pcos").desc, col("cid").asc)
-    val pr = n.filter(col("vec_id") % 50 === 0)
+    val assigned = voters.join(nearestCell(voters, cents, dot), "vec_id")
+    val pr = probeCells(n.filter(col("vec_id") % 50 === 0)
       .select(col("vec_id").as("qid"), col("label").as("true_label"),
-        col("v").as("qv"), col("norm").as("qn"))
-      .crossJoin(broadcast(cents))
-      .withColumn("pcos", Det.q4(dot(col("qv"), col("cv")) / (col("qn") * col("cn"))))
-      .withColumn("crn", row_number().over(wCell))
-      .filter(col("crn") <= 2)
-      .select(col("qid"), col("true_label"), col("qv"), col("qn"), col("cid"))
+        col("v").as("qv"), col("norm").as("qn")), cents, dot)
     val wTop = Window.partitionBy("qid").orderBy(col("cos").desc, col("vec_id").asc)
     val votes = assigned.join(pr, "cid")
       .withColumn("cos", Det.q4(dot(col("v"), col("qv")) / (col("norm") * col("qn"))))
@@ -754,48 +789,17 @@ object Similarity {
       .orderBy("qid")
   }
 
-  /** IVF-style ANN: a deterministic coarse quantizer (every 100th vector is
-    * a centroid), vectors assigned to their max-cosine centroid, queries
-    * probing their 2 nearest centroid cells. All assignment ranks order by
-    * the *rounded* cosine with centroid-id tie-breaks, so the partition of
-    * the corpus is deterministic and oracle-reproducible. At 100 TB the
-    * centroid set stays a broadcast and the corpus shuffles once on its
-    * assigned cell — the standard IVF layout. */
+  /** IVF-style ANN: [[ivfServe]] over the deterministic seed quantizer
+    * ([[seedCentroids]]) with the float [[dot]] — vectors assigned by
+    * [[nearestCell]], queries probing their 2 nearest cells by
+    * [[probeCells]]. All assignment ranks order by the *rounded* cosine
+    * with centroid-id tie-breaks, so the partition of the corpus is
+    * deterministic and oracle-reproducible. At 100 TB the centroid set
+    * stays a broadcast and the corpus shuffles once on its assigned cell —
+    * the standard IVF layout. */
   def annIvf(s: SparkSession, d: String): DataFrame = {
     val n = once(withNorm(Tables.embeddings(s, d)).select("vec_id", "v", "norm"))
-    val cents = n.filter(col("vec_id") % 100 === 0)
-      .select(col("vec_id").as("cid"), col("v").as("cv"), col("norm").as("cn"))
-    // cell assignment as a max-struct aggregation over NARROW rows
-    // (vec_id, ccos, cid): the argmax is map-side combinable and the
-    // vectors never ride the shuffle — the window formulation would carry
-    // the 64-float payload once per centroid. max(struct(ccos, -cid))
-    // picks the same (highest quantized cosine, lowest cid) cell the
-    // row_number()=1 rank would.
-    val best = n.crossJoin(broadcast(cents))
-      .select(col("vec_id"),
-        Det.q4(dot(col("v"), col("cv")) / (col("norm") * col("cn"))).as("ccos"),
-        col("cid"))
-      .groupBy("vec_id")
-      .agg(max(struct(col("ccos"), (-col("cid")).as("negcid"))).as("b"))
-      .select(col("vec_id"), (-col("b.negcid")).as("cid"))
-    val assigned = n.join(best, "vec_id")
-      .select(col("vec_id"), col("v"), col("norm"), col("cid"))
-    val wProbe = Window.partitionBy("qid").orderBy(col("ccos").desc, col("cid").asc)
-    val probes = n.filter(col("vec_id") % 50 === 0)
-      .select(col("vec_id").as("qid"), col("v").as("qv"), col("norm").as("qn"))
-      .crossJoin(broadcast(cents))
-      .withColumn("ccos", Det.q4(dot(col("qv"), col("cv")) / (col("qn") * col("cn"))))
-      .withColumn("crn", row_number().over(wProbe))
-      .filter(col("crn") <= 2)
-      .select(col("qid"), col("qv"), col("qn"), col("cid"))
-    val wTop = Window.partitionBy("qid").orderBy(col("cos").desc, col("vec_id").asc)
-    assigned.join(broadcast(probes), Seq("cid"))
-      .filter(col("vec_id") =!= col("qid"))
-      .withColumn("cos", Det.q4(dot(col("v"), col("qv")) / (col("norm") * col("qn"))))
-      .withColumn("rn", row_number().over(wTop))
-      .filter(col("rn") <= 5)
-      .select(col("qid"), col("rn"), col("vec_id"), col("cos"))
-      .orderBy("qid", "rn")
+    ivfServe(n, seedCentroids(n), dot)
   }
 
   /** Symmetric int8 quantization audit: per vector, the max-abs scale, the
@@ -876,7 +880,7 @@ object Similarity {
 
   /** Per-subspace codebook from the deterministic coarse sample. */
   private def pqCodebook(sv: DataFrame): DataFrame =
-    sv.filter(col("vec_id") % 100 === 0)
+    sv.filter(SeedRow)
       .select(col("sub").as("csub"), col("vec_id").as("cid"), col("sv").as("cv"))
 
   /** Raw (unquantized) squared L2 via the 3-dot identity — the same IEEE
@@ -1152,8 +1156,8 @@ object Similarity {
     * OTHER index axis: recall audits the scoring (do approximate
     * distances find the true neighbors?), purity audits the PARTITIONING
     * (do the coarse cells group semantically-alike vectors?). Each
-    * vector joins its nearest coarse centroid ([[annIvf]]'s assignment
-    * rule, unchanged — max-struct argmax over broadcast centroids); per
+    * vector joins its nearest coarse centroid ([[nearestCell]] over the
+    * [[seedCentroids]] quantizer, carrying its label); per
     * cell: vector count, distinct labels, the majority label
     * (count-desc, label-asc tie-break) and its floor-quantized share. A
     * purity collapse after a re-ingest is the signal to retrain the
@@ -1165,15 +1169,7 @@ object Similarity {
     * everything after is |cells|·|labels|-bounded. */
   def clusterPurity(s: SparkSession, d: String): DataFrame = {
     val n = once(withNorm(Tables.embeddings(s, d)))
-    val cents = n.filter(col("vec_id") % 100 === 0)
-      .select(col("vec_id").as("cid"), col("v").as("cv"), col("norm").as("cn"))
-    val asg = n.crossJoin(broadcast(cents))
-      .select(col("vec_id"), col("label"),
-        Det.q4(dot(col("v"), col("cv")) / (col("norm") * col("cn"))).as("ccos"),
-        col("cid"))
-      .groupBy("vec_id", "label")
-      .agg(max(struct(col("ccos"), (-col("cid")).as("negcid"))).as("b"))
-      .select(col("vec_id"), col("label"), (-col("b.negcid")).as("cid"))
+    val asg = nearestCell(n, seedCentroids(n), dot, carry = Seq("label"))
     val cl = asg.groupBy("cid", "label").agg(count(lit(1)).as("cnt"))
     cl.groupBy("cid")
       .agg(sum("cnt").as("n_vecs"), count(lit(1)).as("n_labels"),
@@ -1213,9 +1209,9 @@ object Similarity {
   }
 
   /** The composed IVF-PQ serve — the production ANN layout whole:
-    * queries probe their 2 nearest coarse cells ([[annIvf]]'s quantizer
-    * and probe rule, unchanged), and the candidates inside probed cells
-    * are scored by ASYMMETRIC DISTANCE over their PQ codes
+    * queries probe their 2 nearest coarse cells ([[seedCentroids]],
+    * [[nearestCell]] and [[probeCells]]), and the candidates inside
+    * probed cells are scored by ASYMMETRIC DISTANCE over their PQ codes
     * ([[pqAdc]]'s integer lookup tables) instead of exact dot products.
     * This is what a 100 TB ANN service actually executes: the coarse
     * probe bounds the scan to probes/k of the corpus, and inside the
@@ -1230,7 +1226,7 @@ object Similarity {
     * codes; every aggregate is map-side combinable. */
   def annIvfPq(s: SparkSession, d: String): DataFrame = {
     val n = once(withNorm(Tables.embeddings(s, d)).select("vec_id", "v", "norm"))
-    val cents = ivfPqCentroidsOf(n)
+    val cents = seedCentroids(n)
     val sv = pqSubvectors(s, d)
     val cb = pqCodebook(sv)
     ivfPqScore(
@@ -1240,35 +1236,17 @@ object Similarity {
       ivfPqLutOf(sv, cb))
   }
 
-  /** Coarse sample centroids for the IVF-PQ layout — identical rule to
-    * [[annIvf]]'s quantizer sample. */
-  private def ivfPqCentroidsOf(n: DataFrame): DataFrame =
-    n.filter(col("vec_id") % 100 === 0)
-      .select(col("vec_id").as("ccid"), col("v").as("ccv"), col("norm").as("ccn"))
-
   /** Corpus cell assignment (vec_id, cell) — the INVERTED LISTS of the
     * IVF-PQ index; an index-time artifact ([[ivfPqModelMaterialize]]). */
   private def ivfPqCellsOf(n: DataFrame, cents: DataFrame): DataFrame =
-    n.crossJoin(broadcast(cents))
-      .select(col("vec_id"),
-        Det.q4(dot(col("v"), col("ccv")) / (col("norm") * col("ccn"))).as("ccos"),
-        col("ccid"))
-      .groupBy("vec_id")
-      .agg(max(struct(col("ccos"), (-col("ccid")).as("negcid"))).as("b"))
-      .select(col("vec_id"), (-col("b.negcid")).as("cell"))
+    nearestCell(n, cents, dot).select(col("vec_id"), col("cid").as("cell"))
 
   /** Per-query 2-nearest-cell probes (qid, cell) — query-time, computed
     * against the (materialized or inline) centroid frame. */
-  private def ivfPqProbesOf(n: DataFrame, cents: DataFrame): DataFrame = {
-    val wProbe = Window.partitionBy("qid").orderBy(col("ccos").desc, col("ccid").asc)
-    n.filter(col("vec_id") % 50 === 0)
-      .select(col("vec_id").as("qid"), col("v").as("qv"), col("norm").as("qn"))
-      .crossJoin(broadcast(cents))
-      .withColumn("ccos", Det.q4(dot(col("qv"), col("ccv")) / (col("qn") * col("ccn"))))
-      .withColumn("crn", row_number().over(wProbe))
-      .filter(col("crn") <= 2)
-      .select(col("qid"), col("ccid").as("cell"))
-  }
+  private def ivfPqProbesOf(n: DataFrame, cents: DataFrame): DataFrame =
+    probeCells(n.filter(col("vec_id") % 50 === 0)
+      .select(col("vec_id").as("qid"), col("v").as("qv"), col("norm").as("qn")), cents, dot)
+      .select(col("qid"), col("cid").as("cell"))
 
   /** [[pqLutOf]] with the IVF-PQ join-side column names. */
   private def ivfPqLutOf(sv: DataFrame, cb: DataFrame): DataFrame =
@@ -1308,10 +1286,12 @@ object Similarity {
     graft.util.Served.dir(s, "ivfpq_model", IvfPqModelVersion, d,
       Seq("embeddings.parquet")) { runDir =>
       val n = once(withNorm(Tables.embeddings(s, d)).select("vec_id", "v", "norm"))
-      val cents = ivfPqCentroidsOf(n)
+      val cents = seedCentroids(n)
       val sv = pqSubvectors(s, d)
       val cb = pqCodebook(sv)
-      cents.coalesce(1).write.mode("overwrite").parquet(s"$runDir/centroids")
+      // the v1 artifact keeps its first-published column names
+      cents.toDF("ccid", "ccv", "ccn").coalesce(1)
+        .write.mode("overwrite").parquet(s"$runDir/centroids")
       ivfPqCellsOf(n, cents).write.mode("overwrite").parquet(s"$runDir/cells")
       cb.coalesce(1).write.mode("overwrite").parquet(s"$runDir/codebook")
       pqCodesOf(sv, cb).write.mode("overwrite").parquet(s"$runDir/codes")
@@ -1331,7 +1311,7 @@ object Similarity {
     val nq = once(withNorm(Tables.embeddings(s, d)).select("vec_id", "v", "norm"))
     ivfPqScore(
       s.read.parquet(s"$runDir/cells"),
-      ivfPqProbesOf(nq, s.read.parquet(s"$runDir/centroids")),
+      ivfPqProbesOf(nq, s.read.parquet(s"$runDir/centroids").toDF("cid", "cv", "cn")),
       s.read.parquet(s"$runDir/codes"),
       ivfPqLutOf(pqSubvectors(s, d), s.read.parquet(s"$runDir/codebook")))
   }
@@ -1349,7 +1329,7 @@ object Similarity {
   def semanticDedup(s: SparkSession, d: String): DataFrame =
     semanticComponents(s, d, once(embedNeardup(s, d).select("id1", "id2")))
 
-  /** The component-label loop behind [[semanticDedup]], over an
+  /** [[minLabelComponents]] behind [[semanticDedup]], over an
     * already-STAGED (id1, id2) pair frame — shared with
     * [[Dedup.familyFlags]] so a flag query generates the banded
     * candidate pairs ONCE and derives both the semantic components and
@@ -1359,36 +1339,8 @@ object Similarity {
     val edges = pairs
       .unionAll(pairs.select(col("id2").as("id1"), col("id1").as("id2")))
       .toDF("src", "dst")
-    var labels = once(Tables.embeddings(s, d)
-      .select(col("vec_id"), col("vec_id").as("label")))
-    var rounds = 0
-    var changed = 1L
-    while (changed > 0 && rounds < 30) {
-      val nbrMin = edges.join(labels, edges("dst") === labels("vec_id"))
-        .groupBy("src").agg(min("label").as("nl"))
-      val stepped = labels.join(nbrMin, labels("vec_id") === nbrMin("src"), "left")
-        .select(labels("vec_id"), col("label").as("old"),
-          least(col("label"), coalesce(col("nl"), col("label"))).as("l1"))
-      // path halving (the dbscan loop's recipe): l ← min(l, l(l)). Every
-      // label is a real vertex id (reflexive base), so the self-join
-      // resolves; rounds drop from component DIAMETER to ~log(diameter),
-      // and `stepped` recomputes only one narrow join off the STAGED
-      // previous labels
-      val ptr = stepped.select(col("vec_id").as("pv"), col("l1").as("pl"))
-      val next = stepped.join(ptr, stepped("l1") === ptr("pv"))
-        .select(stepped("vec_id"), least(col("l1"), col("pl")).as("label"),
-          (least(col("l1"), col("pl")) < col("old")).cast("int").as("chg"))
-        .transform(once)
-      changed = next.agg(coalesce(sum("chg"), lit(0L))).collect()(0).getLong(0)
-      labels = next.select("vec_id", "label")
-      rounds += 1
-      // per-round evidence on stderr (the kmeans-loop discipline). NOTE
-      // (r14, measured): do NOT fuse two propagate+halve steps into one
-      // staged round — Spark has no common-subexpression reuse across
-      // join branches, so the inner step's edge join recomputes once per
-      // consumer branch (up to 4×): 6 rounds → 4, but 3.3 s → 4.5 s.
-      System.err.println(s"[cc] semantic round $rounds changed=$changed")
-    }
+    val (labels, _) = minLabelComponents(once(Tables.embeddings(s, d)
+      .select(col("vec_id"), col("vec_id").as("label"))), edges, "semantic")
     labels
       .withColumn("is_dup", (col("label") < col("vec_id")).cast("int"))
       .withColumnRenamed("label", "cluster")
@@ -1396,28 +1348,19 @@ object Similarity {
   }
 
   /** One Lloyd (k-means) update step for the [[annIvf]] coarse quantizer:
-    * assign every vector to its max-cosine centroid (the identical
-    * assignment rule IVF uses), then emit the recomputed centroid matrix
-    * long-form — (cell, dim, mean, member count) — the iteration a
+    * assign every vector to its cell by [[nearestCell]], then emit the
+    * recomputed centroid matrix long-form — (cell, dim, mean, member
+    * count) — the iteration a
     * pipeline runs to TRAIN the quantizer it serves ANN from.
     *
-    * Scale: centroids broadcast; assignment is the same narrow
-    * map-side-combinable argmax as IVF; the mean recompute shuffles
-    * (cell, dim, partial decimal sum) — 64·k cells of state regardless of
+    * Scale: centroids broadcast into [[nearestCell]]; the mean recompute
+    * shuffles (cell, dim, partial decimal sum) — 64·k cells of state regardless of
     * corpus size, and the decimal sum makes the means bit-stable under
     * any partitioning. */
   def kmeansStep(s: SparkSession, d: String): DataFrame = {
     val n = once(withNorm(Tables.embeddings(s, d)).select("vec_id", "v", "norm"))
-    val cents = n.filter(col("vec_id") % 100 === 0)
-      .select(col("vec_id").as("cid"), col("v").as("cv"), col("norm").as("cn"))
-    val best = n.crossJoin(broadcast(cents))
-      .select(col("vec_id"),
-        Det.q4(dot(col("v"), col("cv")) / (col("norm") * col("cn"))).as("ccos"),
-        col("cid"))
-      .groupBy("vec_id")
-      .agg(max(struct(col("ccos"), (-col("cid")).as("negcid"))).as("b"))
-      .select(col("vec_id"), (-col("b.negcid")).as("cid"))
-    val members = n.join(best, "vec_id")
+    val members = n
+      .join(nearestCell(n, seedCentroids(n), dot).select("vec_id", "cid"), "vec_id")
       .select(col("cid"), posexplode(col("v")).as(Seq("dim", "x")))
     members
       .groupBy("cid", "dim")
@@ -1493,7 +1436,6 @@ object Similarity {
     * convergence counts are the loop's own stop condition, so neither
     * caller pays for the other's output. */
   private def lloydRun(n: DataFrame): (DataFrame, Seq[(Int, Long)]) = {
-    import graft.functions.VectorExpressions.doubleDot
     val q4 = graft.util.Det.q4 _
     // Per-pass job structure (r14, guide §1.2/§3): each pass runs exactly
     // TWO jobs — the staged assignment (which folds in last pass's cid as
@@ -1518,8 +1460,7 @@ object Similarity {
     // but its (vec_id,dim,x) rows carry the same payload bytes anyway —
     // and its staged partitioning was erased by the checkpoint, so every
     // pass re-exchanged AND re-sorted the 64×-row frame.)
-    var cents = n.filter(col("vec_id") % 100 === 0)
-      .select(col("vec_id").as("cid"), col("v").as("cv"), col("norm").as("cn"))
+    var cents = seedCentroids(n)
     var prevAsg: DataFrame = null
     var means: DataFrame = null
     var converged = false
@@ -1529,13 +1470,7 @@ object Similarity {
         changes += ((i, 0L))
       } else {
         val t0 = System.nanoTime()
-        val asgNew = n.crossJoin(broadcast(cents))
-          .select(col("vec_id"),
-            q4(doubleDot(col("v"), col("cv")) / (col("norm") * col("cn"))).as("ccos"),
-            col("cid"))
-          .groupBy("vec_id")
-          .agg(max(struct(col("ccos"), (-col("cid")).as("negcid"))).as("b"))
-          .select(col("vec_id"), (-col("b.negcid")).as("cid"))
+        val asgNew = nearestCell(n, cents, doubleDot).select("vec_id", "cid")
         val asg = once(
           if (prevAsg == null) asgNew
           else asgNew.join(prevAsg.select(col("vec_id"), col("cid").as("pcid")),
@@ -1597,11 +1532,11 @@ object Similarity {
     * column: the diversity-balancing step a curation pipeline runs when
     * one topic dominates the crawl (proportional sampling reproduces the
     * imbalance; equal-per-cell sampling flattens it). Each vector is
-    * assigned to its max-cosine centroid (the [[kmeansStep]]/[[annIvf]]
-    * assignment rule), the total budget K = [[ClusterSampleK]] is split
-    * into EQUAL per-cell quotas by largest remainder (extras to the
-    * largest cells first, cid tie-break; a cell smaller than its quota
-    * yields all members), and each cell fills its quota in deterministic
+    * assigned to its cell by [[nearestCell]], the total budget
+    * K = [[ClusterSampleK]] is split into EQUAL per-cell quotas by
+    * largest remainder (extras to the largest cells first, cid
+    * tie-break; a cell smaller than its quota yields all members), and
+    * each cell fills its quota in deterministic
     * md5 order — the [[graft.ops.TrainingPrep]] split-hash discipline, so
     * the sample is stable across runs, partitionings, and appends.
     *
@@ -1616,15 +1551,7 @@ object Similarity {
     * ranks that k-row model frame, never corpus rows. */
   def clusterSample(s: SparkSession, d: String): DataFrame = {
     val n = once(withNorm(Tables.embeddings(s, d)).select("vec_id", "v", "norm"))
-    val cents = n.filter(col("vec_id") % 100 === 0)
-      .select(col("vec_id").as("cid"), col("v").as("cv"), col("norm").as("cn"))
-    val asg = once(n.crossJoin(broadcast(cents))
-      .select(col("vec_id"),
-        Det.q4(dot(col("v"), col("cv")) / (col("norm") * col("cn"))).as("ccos"),
-        col("cid"))
-      .groupBy("vec_id")
-      .agg(max(struct(col("ccos"), (-col("cid")).as("negcid"))).as("b"))
-      .select(col("vec_id"), (-col("b.negcid")).as("cid")))
+    val asg = once(nearestCell(n, seedCentroids(n), dot).select("vec_id", "cid"))
     val sizes = asg.groupBy("cid").agg(count(lit(1)).as("n_members"))
     val nc = sizes.agg(count(lit(1)).as("nc"))
     // one row per quantizer cell (model state, k << corpus)
@@ -1672,15 +1599,7 @@ object Similarity {
     * self-join; the corpus is scanned once. */
   def embedOutliers(s: SparkSession, d: String): DataFrame = {
     val n = once(withNorm(Tables.embeddings(s, d)).select("vec_id", "v", "norm"))
-    val cents = n.filter(col("vec_id") % 100 === 0)
-      .select(col("vec_id").as("cid"), col("v").as("cv"), col("norm").as("cn"))
-    val asg = once(n.crossJoin(broadcast(cents))
-      .select(col("vec_id"),
-        Det.q4(dot(col("v"), col("cv")) / (col("norm") * col("cn"))).as("ccos"),
-        col("cid"))
-      .groupBy("vec_id")
-      .agg(max(struct(col("ccos"), (-col("cid")).as("negcid"))).as("b"))
-      .select(col("vec_id"), (-col("b.negcid")).as("cid"), col("b.ccos").as("ccos"))
+    val asg = once(nearestCell(n, seedCentroids(n), dot)
       .withColumn("ci", floor(col("ccos") * 10000 + lit(0.5)).cast("long")))
     val stats = asg.groupBy("cid")
       .agg(count(lit(1)).as("n_members"), sum("ci").as("sc"))
@@ -1703,40 +1622,27 @@ object Similarity {
     * shuffled once on its assigned cell. */
   def annIvfTrained(s: SparkSession, d: String): DataFrame = {
     val n = kmeansCorpus(s, d)
-    ivfServe(n, once(centroidList(kmeansTrainFrom(n))))
+    ivfServe(n, once(centroidList(kmeansTrainFrom(n))), doubleDot)
   }
 
-  /** The IVF SERVE shape — the one implementation behind the composed
-    * [[annIvfTrained]] and the materialized-model [[annIvfServed]]:
-    * centroids broadcast into the assignment argmax, corpus shuffled once
-    * on its assigned cell, queries probe their 2 nearest cells. Inherits
-    * the training loop's parity discipline ([[graft.functions.VectorExpressions.DoubleVectorDot]]
-    * + floor-quantized cosines) so both callers reproduce the same
-    * unrolled-CTE oracle. */
-  private def ivfServe(n: DataFrame, cents: DataFrame): DataFrame = {
-    import graft.functions.VectorExpressions.doubleDot
-    val q4 = graft.util.Det.q4 _
-    val best = n.crossJoin(broadcast(cents))
-      .select(col("vec_id"),
-        q4(doubleDot(col("v"), col("cv")) / (col("norm") * col("cn"))).as("ccos"),
-        col("cid"))
-      .groupBy("vec_id")
-      .agg(max(struct(col("ccos"), (-col("cid")).as("negcid"))).as("b"))
-      .select(col("vec_id"), (-col("b.negcid")).as("cid"))
-    val assigned = n.join(best, "vec_id")
+  /** The IVF SERVE shape — the one implementation behind the seed-quantizer
+    * [[annIvf]], the composed [[annIvfTrained]] and the materialized-model
+    * [[annIvfServed]]: centroids broadcast into [[nearestCell]], corpus
+    * shuffled once on its assigned cell, queries probe their 2 nearest
+    * cells by [[probeCells]]. `dot` is each caller's oracle parity: the
+    * float [[dot]] for annIvf, [[graft.functions.VectorExpressions.doubleDot]]
+    * for the trained quantizer (the training loop's discipline), so each
+    * reproduces its own oracle. */
+  private def ivfServe(n: DataFrame, cents: DataFrame,
+                       dot: (Column, Column) => Column): DataFrame = {
+    val assigned = n.join(nearestCell(n, cents, dot), "vec_id")
       .select(col("vec_id"), col("v"), col("norm"), col("cid"))
-    val wProbe = Window.partitionBy("qid").orderBy(col("ccos").desc, col("cid").asc)
-    val probes = n.filter(col("vec_id") % 50 === 0)
-      .select(col("vec_id").as("qid"), col("v").as("qv"), col("norm").as("qn"))
-      .crossJoin(broadcast(cents))
-      .withColumn("ccos", q4(doubleDot(col("qv"), col("cv")) / (col("qn") * col("cn"))))
-      .withColumn("crn", row_number().over(wProbe))
-      .filter(col("crn") <= 2)
-      .select(col("qid"), col("qv"), col("qn"), col("cid"))
+    val probes = probeCells(n.filter(col("vec_id") % 50 === 0)
+      .select(col("vec_id").as("qid"), col("v").as("qv"), col("norm").as("qn")), cents, dot)
     val wTop = Window.partitionBy("qid").orderBy(col("cos").desc, col("vec_id").asc)
     assigned.join(broadcast(probes), Seq("cid"))
       .filter(col("vec_id") =!= col("qid"))
-      .withColumn("cos", q4(doubleDot(col("v"), col("qv")) / (col("norm") * col("qn"))))
+      .withColumn("cos", Det.q4(dot(col("v"), col("qv")) / (col("norm") * col("qn"))))
       .withColumn("rn", row_number().over(wTop))
       .filter(col("rn") <= 5)
       .select(col("qid"), col("rn"), col("vec_id"), col("cos"))
@@ -1776,7 +1682,7 @@ object Similarity {
     * and the doubles round-trip parquet exactly. */
   def annIvfServed(s: SparkSession, d: String): DataFrame = {
     val runDir = ivfModelMaterialize(s, d)
-    ivfServe(kmeansCorpus(s, d), s.read.parquet(s"$runDir/centroids"))
+    ivfServe(kmeansCorpus(s, d), s.read.parquet(s"$runDir/centroids"), doubleDot)
   }
 
   /** Selection depth and relevance weight for [[mmrSelect]]. λ = 0.7 is
@@ -2230,7 +2136,7 @@ object Similarity {
   private[ops] val LabelRounds = 12
 
   /** Unrolled min-label propagation with pointer jumping, the oracle
-    * twin of the Spark label loops in [[semanticDedup]]/[[dbscan]]: from
+    * twin of [[minLabelComponents]]: from
     * base labels `$l0`(v, l) over undirected edges `$edges`(src, dst),
     * each round takes the min over neighbors' labels then jumps l ←
     * min(l, l(l)). Converges to the component minimum in ≤

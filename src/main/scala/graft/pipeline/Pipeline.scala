@@ -32,10 +32,25 @@ object Pipeline {
   /** `metadata.json` shape, per `demo-etl-2a-notebook.py:68`. */
   case class RunManifest(timestamp: String, input_files: Seq[String])
 
-  private def manifestJson(m: RunManifest): String = {
-    def q(s: String) = "\"" + s.replace("\\", "\\\\").replace("\"", "\\\"") + "\""
-    s"""{"timestamp": ${q(m.timestamp)}, "input_files": [${m.input_files.map(q).mkString(", ")}]}"""
+  /** `s` as a JSON string literal: quotes, backslashes and every control
+    * character escaped, so the literal never spans lines. The one
+    * escaper behind the manifest and the KV sink. */
+  private def jsonString(s: String): String = {
+    val b = new StringBuilder(s.length + 2).append('"')
+    s.foreach {
+      case '"' => b.append("\\\"")
+      case '\\' => b.append("\\\\")
+      case '\n' => b.append("\\n")
+      case '\r' => b.append("\\r")
+      case '\t' => b.append("\\t")
+      case c if c < ' ' => b.append(f"\\u${c.toInt}%04x")
+      case c => b.append(c)
+    }
+    b.append('"').toString
   }
+
+  private def manifestJson(m: RunManifest): String =
+    s"""{"timestamp": ${jsonString(m.timestamp)}, "input_files": [${m.input_files.map(jsonString).mkString(", ")}]}"""
 
   /** Stage-A sink: results as Parquet + manifest beside them (R10+R11). */
   def writeWithManifest(df: DataFrame, runDir: String, manifest: RunManifest): Unit = {
@@ -87,7 +102,7 @@ object Pipeline {
           it.grouped(batchSize).foreach { batch =>
             // one "BatchWriteItem" per group of 25
             batch.foreach { r =>
-              out.write(s"""{"id": "${r.getString(0)}", "word": "${r.getString(1)}", "count": ${r.getInt(2)}}""")
+              out.write(s"""{"id": ${jsonString(r.getString(0))}, "word": ${jsonString(r.getString(1))}, "count": ${r.getInt(2)}}""")
               out.newLine()
             }
             out.flush()

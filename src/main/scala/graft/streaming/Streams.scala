@@ -76,24 +76,18 @@ object Streams {
     * against a static (cid, cv array&lt;double&gt;, cn) centroid frame — e.g.
     * [[graft.ops.Similarity.kmeansTrain]]'s output reshaped to lists. Run
     * inside `foreachBatch`, where the batch is a plain DataFrame, so the
-    * SAME broadcast-argmax aggregation the batch ANN path uses applies
-    * unchanged — the standard pattern for reusing batch logic on a stream.
+    * batch path's cell-assignment rule, [[graft.ops.Similarity.nearestCell]],
+    * applies unchanged — the standard pattern for reusing batch logic on a
+    * stream.
     * Stateless by design: no watermark, no state store; each vector's cell
     * depends only on its own row and the broadcast centroids, so the
     * streaming ingestion side of an IVF index scales with batch size, not
     * stream history. */
   def assignCells(batch: DataFrame, cents: DataFrame): DataFrame = {
     import graft.functions.VectorExpressions.doubleDot
-    val q4 = graft.util.Det.q4 _
     val n = batch.select(col("vec_id"), col("embedding").cast("array<double>").as("v"))
       .withColumn("norm", sqrt(doubleDot(col("v"), col("v"))))
-    n.crossJoin(broadcast(cents))
-      .select(col("vec_id"),
-        q4(doubleDot(col("v"), col("cv")) / (col("norm") * col("cn"))).as("ccos"),
-        col("cid"))
-      .groupBy("vec_id")
-      .agg(max(struct(col("ccos"), (-col("cid")).as("negcid"))).as("b"))
-      .select(col("vec_id"), (-col("b.negcid")).as("cid"), col("b.ccos").as("ccos"))
+    graft.ops.Similarity.nearestCell(n, cents, doubleDot)
   }
 
   /** Micro-batch PSI drift against a broadcast baseline histogram — the

@@ -117,7 +117,6 @@ class BroadcastDisciplineSpec extends AnyFunSuite {
     (("graft/ops/ScaleOps.scala", "perKey.crossJoin(broadcast(totals))"), 1),
     (("graft/ops/ScaleOps.scala", "val ev = Tables.events(s, d).crossJoin(broadcast(ext))"), 1),
     // ---- graft/ops/Similarity.scala
-    (("graft/ops/Similarity.scala", ".crossJoin(broadcast(cents))"), 4),
     (("graft/ops/Similarity.scala", ".crossJoin(broadcast(q))"), 1),
     (("graft/ops/Similarity.scala", ".crossJoin(broadcast(tot))"), 1),
     (("graft/ops/Similarity.scala", ".join(broadcast(cb), col(\"qsub\") === col(\"csub\"))"), 1),
@@ -131,24 +130,21 @@ class BroadcastDisciplineSpec extends AnyFunSuite {
     (("graft/ops/Similarity.scala", ".join(broadcast(quotas), \"cid\")"), 1),
     (("graft/ops/Similarity.scala", "a.join(broadcast(b), col(\"b_vec_id\") > col(\"a_vec_id\"))"), 1),
     (("graft/ops/Similarity.scala", "asg.join(broadcast(stats), \"cid\")"), 1),
-    (("graft/ops/Similarity.scala", "assigned.join(broadcast(probes), Seq(\"cid\"))"), 2),
+    (("graft/ops/Similarity.scala", "assigned.join(broadcast(probes), Seq(\"cid\"))"), 1),
     (("graft/ops/Similarity.scala", "base.join(broadcast(q), col(\"bucket\") === col(\"qb\") && col(\"vec_id\") =!= col(\"qid\"))"), 2),
     (("graft/ops/Similarity.scala", "broadcast(pick.select(col(\"qid\").as(\"pq\"), col(\"vec_id\").as(\"pid\"),"), 1),
     (("graft/ops/Similarity.scala", "cand = once(cand.crossJoin(broadcast("), 1),
     (("graft/ops/Similarity.scala", "codes.join(broadcast(lut),"), 1),
+    // nearestCell (cell assignment) and probeCells (2-cell probes): the
+    // k seed or trained centroids, bounded model state — every quantizer
+    // query and Streams.assignCells broadcasts its centroids only here
     (("graft/ops/Similarity.scala", "n.crossJoin(broadcast(cents))"), 1),
+    (("graft/ops/Similarity.scala", "q.crossJoin(broadcast(cents))"), 1),
     (("graft/ops/Similarity.scala", "n.crossJoin(broadcast(q))"), 2),
     (("graft/ops/Similarity.scala", "n.join(broadcast(q), col(\"bucket\") === col(\"qb\") && col(\"vec_id\") =!= col(\"qid\"))"), 1),
     (("graft/ops/Similarity.scala", "n.join(broadcast(short), \"vec_id\")"), 1),
     (("graft/ops/Similarity.scala", "sv.join(broadcast(cb), col(\"sub\") === col(\"csub\"))"), 1),
     (("graft/ops/Similarity.scala", "sv.join(broadcast(pqCodebook(sv)), col(\"sub\") === col(\"csub\"))"), 1),
-    (("graft/ops/Similarity.scala", "val asg = n.crossJoin(broadcast(cents))"), 1),
-    (("graft/ops/Similarity.scala", "val asg = once(n.crossJoin(broadcast(cents))"), 3),
-    // lloydRun's per-pass assignment (bounded centroid state broadcast;
-    // r14: renamed asgNew when the convergence count was folded in)
-    (("graft/ops/Similarity.scala", "val asgNew = n.crossJoin(broadcast(cents))"), 1),
-    (("graft/ops/Similarity.scala", "val best = n.crossJoin(broadcast(cents))"), 3),
-    (("graft/ops/Similarity.scala", "val best = voters.crossJoin(broadcast(cents))"), 1),
     (("graft/ops/Similarity.scala", "val cand = assigned.join(broadcast(probes), \"cell\")"), 1),
     (("graft/ops/Similarity.scala", "val d2 = ex.join(broadcast(cent), \"dim\")"), 1),
     (("graft/ops/Similarity.scala", "val j = once(base.crossJoin(broadcast(q))"), 1),
@@ -254,7 +250,6 @@ class BroadcastDisciplineSpec extends AnyFunSuite {
     (("graft/streaming/Streams.scala", ".join(broadcast(baseline.select(col(\"bkt\"), col(\"cnt\").as(\"r2\"))),"), 1),
     (("graft/streaming/Streams.scala", ".join(broadcast(baseline.select(col(\"event_type\"), col(\"cnt\").as(\"o2\"))),"), 1),
     (("graft/streaming/Streams.scala", "events.join(broadcast(stats), \"event_type\")"), 1),
-    (("graft/streaming/Streams.scala", "n.crossJoin(broadcast(cents))"), 1),
     (("graft/streaming/Streams.scala", "org.apache.spark.sql.functions.broadcast("), 1),
     (("graft/streaming/Streams.scala", "perType.crossJoin(broadcast(chi2))"), 1),
   ).map { case (k, v) => k -> v }

@@ -26,6 +26,29 @@ class PipelineSpec extends AnyFunSuite {
     assert(kvLines.forall(_.contains("\"id\": \"word_")))
   }
 
+  test("KV sink writes one valid JSON object per line for any token") {
+    import spark.implicits._
+    // split(" ") keeps quotes, backslashes, tabs, newlines and other
+    // control characters inside tokens; each must stay one parseable line
+    val text = "plain say\"hi back\\slash tab\tin line\nbreak bell\u0007 plain"
+    val sfDir = Files.createTempDirectory("graft_kv_escape").toString
+    Seq((1L, text)).toDF("doc_id", "text")
+      .write.parquet(s"$sfDir/documents.parquet")
+    val work = Files.createTempDirectory("graft_kv_escape_work").toString
+    val n = Pipeline.runWordCountPipeline(spark, sfDir, work, runId = "20240101_000000")
+
+    val mapper = new com.fasterxml.jackson.databind.ObjectMapper()
+      .enable(com.fasterxml.jackson.databind.DeserializationFeature.FAIL_ON_TRAILING_TOKENS)
+    val items = Files.list(Paths.get(s"$work/kv_table")).iterator().asScala
+      .flatMap(p => Files.readAllLines(p).asScala).map(mapper.readTree).toSeq
+    val expected = text.split(" ").filter(_.nonEmpty).toSet
+    assert(items.size.toLong === n && n === expected.size.toLong)
+    val words = items.map(_.get("word").asText)
+    assert(words.toSet === expected)
+    assert(items.forall(i => i.get("id").asText == "word_" + i.get("word").asText))
+    assert(items.find(_.get("word").asText == "plain").map(_.get("count").asInt) === Some(2))
+  }
+
   test("latestRun picks the greatest manifest timestamp") {
     val work = Files.createTempDirectory("graft_latest").toString
     for (ts <- Seq("20240101_000000", "20240202_000000", "20231231_235959")) {

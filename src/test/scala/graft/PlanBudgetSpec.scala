@@ -21,17 +21,20 @@ class PlanBudgetSpec extends AnyFunSuite {
     * the previous pass's frame 3-4 times, so the unstaged lineage is
     * exponential in the pass count (q_kcore_peel: ~4^6 subtree copies —
     * the optimizer itself OOMs before any exchange could be counted).
-    * The six-family flag queries transit [[ops.Similarity.semanticDedup]]'s
-    * label loop, whose unstaged lineage is likewise exponential — and
-    * since round 9 every lineage copy carries the 72-plane banded-LSH
-    * expression tree, so even the EXPLAIN string OOMs the audit JVM.
+    * The six-family flag queries transit
+    * [[ops.Similarity.minLabelComponents]], whose unstaged lineage is
+    * likewise exponential — and since round 9 every lineage copy carries
+    * the 72-plane banded-LSH expression tree, so even the EXPLAIN string
+    * OOMs the audit JVM.
     * q_zorder_pruning's stage is load-bearing, not just a perf hint: the
     * offsets aggregate and the main branch must observe the SAME
-    * materialized monotonically_increasing_id values.
+    * materialized monotonically_increasing_id values. q_dbscan and
+    * q_dedup_semantic run the same loop directly.
     * The staged plan IS the production plan for these; the budget pins
     * the final executed plan over the staged leaves, exactly what
     * graft.PlanAudit measures. */
-  private val stagedAudit = Set("q_kcore_peel", "q_zorder_pruning")
+  private val stagedAudit = Set("q_kcore_peel", "q_zorder_pruning", "q_dbscan",
+    "q_dedup_semantic")
 
   private def counts(name: String): (Int, Int) = {
     // stage.disable: Ckpt.stage truncates lineage, which would HIDE every
@@ -72,6 +75,12 @@ class PlanBudgetSpec extends AnyFunSuite {
     ("q_join_star", 1, 5),            // TPC-H Q5: all five dims must broadcast
     // round-4 additions (audit-mode = staged subtrees recomputed inline)
     ("q_pagerank", 10, 1),            // 5 unrolled iterations over the staged edge list
+    // staged audits over the min-label loop's final labels
+    ("q_dbscan", 5, 2),               // degree agg + border min-label agg +
+                                      // label joins; core/border labels
+                                      // broadcast (audited 5/2)
+    ("q_dedup_semantic", 1, 0),       // the presentation sort over the
+                                      // staged labels (audited 1/0)
     // round-10 wave: graph metrics + late-interaction + epoch order
     // (r14: modularity/assortativity/reciprocity iterate driver-side over
     // the collected bounded lane matrix — the returned plan is the
