@@ -62,14 +62,8 @@ object GraftExtensions {
   private val tokenLcpBuilder: Seq[Expression] => Expression = args =>
     TokenLcp(args(0), args(1), args(2), args(3))
 
-  private val ngramsBuilder: Seq[Expression] => Expression = args => {
-    val n = args(1).eval() match {
-      case i: Int => i
-      case l: Long => l.toInt
-      case other => sys.error(s"ngrams_ws: n must be a literal integer, got $other")
-    }
-    StringNgrams(args(0), n)
-  }
+  private val ngramsBuilder: Seq[Expression] => Expression = args =>
+    StringNgrams(args(0), litInt(args(1), "ngrams_ws: n"))
 
   /** Register the engine's SQL functions on an already-built session. */
   def register(spark: SparkSession): Unit = {

@@ -276,6 +276,7 @@ object Aggregations {
       count(lit(1)).as("n"))
     val bucketed = per.crossJoin(broadcast(ext))
       .withColumn("bkt",
+        // not Statistics.equalWidthBucket: DECIMAL differences cast to double first
         when(col("hi") === col("lo"), lit(0)).otherwise(
           least(lit(nb - 1),
             floor((col("v") - col("lo")).cast("double") * nb /
@@ -331,8 +332,7 @@ object Aggregations {
         .groupBy("user_id")
         .agg(expr("(max(wm) - max(unix_micros(ts))) div 86400000000").as("rec_days"),
           count(lit(1)).as("freq"),
-          sum((col("value").cast(DecimalType(24, 6)) * lit(1000000)).cast("long"))
-            .as("mon"))
+          sum(microExact(col("value"))).as("mon"))
     }
     // four rank-selected quintile boundaries of one integer metric,
     // returned as a 1-row frame (t1..t4)
@@ -359,8 +359,7 @@ object Aggregations {
         score("mon").as("q_m"), col("mon"))
       .groupBy("q_r", "q_f", "q_m")
       .agg(count(lit(1)).as("n_users"),
-        (floor(sum("mon").cast("double") / count(lit(1)).cast("double")
-          / lit(1000000.0) * lit(1000000.0) + lit(0.5)) / lit(1000000.0))
+        q6(sum("mon").cast("double") / count(lit(1)).cast("double") / lit(1000000.0))
           .as("avg_value"))
       .orderBy("q_r", "q_f", "q_m")
   }

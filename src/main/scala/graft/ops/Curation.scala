@@ -3,7 +3,7 @@ package graft.ops
 import graft.util.Det
 import graft.Tables
 import graft.functions.TextFeatures.words
-import graft.util.Det.{dsum, q4}
+import graft.util.Det.{dsum, q4, q6}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -619,8 +619,7 @@ object Curation {
     Tables.events(s, d)
       .groupBy("event_type").agg(count(lit(1)).as("n_true"))
       .select(col("event_type"), lit(DpEpsilon).as("epsilon"),
-        (floor((col("n_true").cast("double") + noise)
-          * lit(1000000.0) + lit(0.5)) / lit(1000000.0)).as("noisy_n"))
+        q6(col("n_true").cast("double") + noise).as("noisy_n"))
       .orderBy("event_type")
   }
 

@@ -1,6 +1,7 @@
 package graft.ops
 
 import graft.util.Det
+import graft.util.Det.Dec0
 import graft.Tables
 import graft.functions.TextFeatures._
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
@@ -501,7 +502,6 @@ object Dedup {
     * band keys — per-shingle hashing is the dominant cost at scale and
     * must not run twice. */
   def minhashEstimate(s: SparkSession, d: String): DataFrame = {
-    val q4 = graft.util.Det.q4 _
     val nPerms = WideR * WideB
     val sh = graft.util.Spread(
       Tables.documents(s, d).select(col("doc_id"), col("text")), col("doc_id"))
@@ -544,9 +544,9 @@ object Dedup {
       .join(sizes.select(col("doc_id").as("d2"), col("n").as("n2")), "d2")
       .withColumn("inter", coalesce(col("inter"), lit(0L)))
       .select(col("d1"), col("d2"), col("n_match"),
-        q4(col("n_match") / lit(nPerms.toDouble)).as("est_j"),
-        q4(col("inter") / (col("n1") + col("n2") - col("inter"))).as("exact_j"))
-      .withColumn("abs_err", q4(abs(col("est_j") - col("exact_j"))))
+        Det.q4(col("n_match") / lit(nPerms.toDouble)).as("est_j"),
+        Det.q4(col("inter") / (col("n1") + col("n2") - col("inter"))).as("exact_j"))
+      .withColumn("abs_err", Det.q4(abs(col("est_j") - col("exact_j"))))
       .orderBy("d1", "d2")
   }
 
@@ -860,7 +860,6 @@ object Dedup {
   /** [[dedupKappa]] off an already-aggregated compare row (the
     * [[dedupReport]] sharing seam). */
   private def kappaFrom(cmp: DataFrame): DataFrame = {
-    val dec0 = org.apache.spark.sql.types.DecimalType(38, 0)
     val prs = for {
       i <- CompareFams.indices; j <- CompareFams.indices if i < j
     } yield struct(
@@ -874,13 +873,13 @@ object Dedup {
         col("p.bt").as("n_both"))
     val n = col("n_docs")
     val agree = n - col("n_a") - col("n_b") + lit(2) * col("n_both")
-    val peNum = col("n_a").cast(dec0) * col("n_b").cast(dec0) +
-      (n - col("n_a")).cast(dec0) * (n - col("n_b")).cast(dec0)
-    val denom = n.cast(dec0) * n.cast(dec0) - peNum
+    val peNum = col("n_a").cast(Dec0) * col("n_b").cast(Dec0) +
+      (n - col("n_a")).cast(Dec0) * (n - col("n_b")).cast(Dec0)
+    val denom = n.cast(Dec0) * n.cast(Dec0) - peNum
     px.select(col("family_a"), col("family_b"), col("n_docs"),
         col("n_a"), col("n_b"), col("n_both"), agree.as("n_agree"),
         when(denom === lit(0), lit(null).cast("double"))
-          .otherwise(Det.q6((n.cast(dec0) * agree.cast(dec0) - peNum).cast("double") /
+          .otherwise(Det.q6((n.cast(Dec0) * agree.cast(Dec0) - peNum).cast("double") /
               denom.cast("double"))).as("kappa"))
       .orderBy("family_a", "family_b")
   }
@@ -930,13 +929,12 @@ object Dedup {
   /** [[cochranQ]] off an already-aggregated rater-stats row (the
     * [[dedupReport]] sharing seam). */
   private def cochranFrom(rs: DataFrame): DataFrame = {
-    val dec0 = org.apache.spark.sql.types.DecimalType(38, 0)
     val k = lit(6L)
     val sumG2 = CompareFams.map { case (_, _, nm) =>
-      col(nm).cast(dec0) * col(nm).cast(dec0) }.reduce(_ + _)
-    val num = (k - lit(1L)).cast(dec0) *
-      (k.cast(dec0) * sumG2 - col("t").cast(dec0) * col("t").cast(dec0))
-    val den = (k * col("t") - col("sum_l2")).cast(dec0)
+      col(nm).cast(Dec0) * col(nm).cast(Dec0) }.reduce(_ + _)
+    val num = (k - lit(1L)).cast(Dec0) *
+      (k.cast(Dec0) * sumG2 - col("t").cast(Dec0) * col("t").cast(Dec0))
+    val den = (k * col("t") - col("sum_l2")).cast(Dec0)
     rs.select(
       col("n_docs"), lit(6).as("k_raters"), col("t").as("n_flags"),
       col("sum_l2"),
@@ -969,13 +967,12 @@ object Dedup {
   /** [[fleissKappa]] off an already-aggregated rater-stats row (the
     * [[dedupReport]] sharing seam). */
   private def fleissFrom(rs: DataFrame): DataFrame = {
-    val dec0 = org.apache.spark.sql.types.DecimalType(38, 0)
-    val n = col("n_docs").cast(dec0)
-    val t = col("t").cast(dec0)
-    val k = lit(6L).cast(dec0)
-    val a = lit(2L).cast(dec0) * col("sum_l2").cast(dec0) +
-      n * k * k - lit(2L).cast(dec0) * k * t - n * k
-    val dd = n * k * (k - lit(1L).cast(dec0))
+    val n = col("n_docs").cast(Dec0)
+    val t = col("t").cast(Dec0)
+    val k = lit(6L).cast(Dec0)
+    val a = lit(2L).cast(Dec0) * col("sum_l2").cast(Dec0) +
+      n * k * k - lit(2L).cast(Dec0) * k * t - n * k
+    val dd = n * k * (k - lit(1L).cast(Dec0))
     val e = t * t + (n * k - t) * (n * k - t)
     val m = (n * k) * (n * k)
     rs.select(
@@ -1230,8 +1227,6 @@ object Dedup {
       .select(col("cfg.r").as("r"), col("cfg.b").as("b"),
         (col("i").cast("double") / lit(20.0)).as("s"))
     val sq = (c: org.apache.spark.sql.Column) => c * c
-    val q6 = (c: org.apache.spark.sql.Column) =>
-      floor(c * lit(1000000.0) + lit(0.5)) / lit(1000000.0)
     val powered = grid
       .withColumn("s2", sq(col("s"))).withColumn("s4", sq(col("s2")))
       .withColumn("s8", sq(col("s4"))).withColumn("s16", sq(col("s8")))
@@ -1244,7 +1239,7 @@ object Dedup {
       .withColumn("u4", sq(col("u2"))).withColumn("u8", sq(col("u4")))
       .withColumn("u16", sq(col("u8"))).withColumn("u32", sq(col("u16")))
       .withColumn("u64", sq(col("u32")))
-      .withColumn("p", q6(lit(1.0) -
+      .withColumn("p", Det.q6(lit(1.0) -
         when(col("b") === 4, col("u4")).when(col("b") === 8, col("u8"))
           .when(col("b") === 16, col("u16")).when(col("b") === 32, col("u32"))
           .otherwise(col("u64"))))
@@ -1314,8 +1309,6 @@ object Dedup {
   def spanCoverage(s: SparkSession, d: String): DataFrame = {
     import graft.functions.TextFeatures.words
     import graft.functions.StringNgrams
-    val q6 = (c: org.apache.spark.sql.Column) =>
-      floor(c * lit(1000000.0) + lit(0.5)) / lit(1000000.0)
     val grams = graft.util.Ckpt.stage(Tables.documents(s, d)
       .select(col("doc_id"),
         posexplode(StringNgrams.ngrams(words(col("text")), 8)).as(Seq("pos", "gram"))))
@@ -1341,7 +1334,7 @@ object Dedup {
       .select(col("doc_id"), col("n_tokens"),
         coalesce(col("n_spans"), lit(0L)).as("n_spans"),
         coalesce(col("covered"), lit(0L)).as("covered_tokens"),
-        q6(coalesce(col("covered"), lit(0L)).cast("double") /
+        Det.q6(coalesce(col("covered"), lit(0L)).cast("double") /
           col("n_tokens").cast("double")).as("share"))
       .orderBy("doc_id")
   }

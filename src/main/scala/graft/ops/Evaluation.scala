@@ -1,6 +1,7 @@
 package graft.ops
 
 import graft.util.Det
+import graft.util.Det.Dec0
 import graft.Tables
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
@@ -23,10 +24,6 @@ import org.apache.spark.sql.functions._
   * but never shuffled wide.
   */
 object Evaluation {
-
-  /** floor-quantize to 6 dp — bit-identical in Spark and DuckDB (each step
-    * is one correctly-rounded IEEE op; floor is exact). */
-  private def q6(c: Column): Column = floor(c * lit(1000000.0) + lit(0.5)) / lit(1000000.0)
 
   /** Exact ROC-AUC of `n_chars` as a ranking score for the binary label
     * `lang = 'en'`, per source — the standard offline-eval primitive for
@@ -58,7 +55,7 @@ object Evaluation {
       sum(col("c1") * (lit(2) * col("prev") + col("c") + lit(1))).as("r1x2"))
     a.select(col("source"), col("n_pos"), col("n_neg"),
         when(col("n_pos") > 0 && col("n_neg") > 0,
-          q6((col("r1x2") - col("n_pos") * (col("n_pos") + 1)).cast("double") /
+          Det.q6((col("r1x2") - col("n_pos") * (col("n_pos") + 1)).cast("double") /
              (lit(2) * col("n_pos") * col("n_neg")).cast("double"))).as("auc"))
       .orderBy("source")
   }
@@ -106,9 +103,9 @@ object Evaluation {
     scoredFrame(s, d).groupBy("bin")
       .agg(sum("c").as("n_bin"), sum("c1").as("n_pos"),
         sum(col("c") * col("prev")).as("sp"), first("nt").as("nt"))
-      .withColumn("pos_rate", q6(col("n_pos").cast("double") / col("n_bin").cast("double")))
+      .withColumn("pos_rate", Det.q6(col("n_pos").cast("double") / col("n_bin").cast("double")))
       .withColumn("mean_score",
-        q6(col("sp").cast("double") / ((col("nt") - 1) * col("n_bin")).cast("double")))
+        Det.q6(col("sp").cast("double") / ((col("nt") - 1) * col("n_bin")).cast("double")))
       .select(col("bin"), col("n_bin"), col("n_pos"), col("pos_rate"),
         col("mean_score"), (col("pos_rate") - col("mean_score")).as("gap"))
       .orderBy("bin")
@@ -172,8 +169,8 @@ object Evaluation {
       .join(broadcast(singles.select(col("event_type").as("type_b"), col("ns").as("nb"))), "type_b")
       .crossJoin(broadcast(n))
       .select(col("type_a"), col("type_b"), col("n_both"),
-        q6(col("n_both").cast("double") / col("nu").cast("double")).as("support"),
-        q6((col("n_both") * col("nu")).cast("double") /
+        Det.q6(col("n_both").cast("double") / col("nu").cast("double")).as("support"),
+        Det.q6((col("n_both") * col("nu")).cast("double") /
            (col("na") * col("nb")).cast("double")).as("lift"))
       .orderBy("type_a", "type_b")
   }
@@ -221,6 +218,7 @@ object Evaluation {
     val ext = ev.agg(min("value").as("lo"), max("value").as("hi"))
     val keyed = ev.crossJoin(broadcast(ext))
       .withColumn("bx",
+        // not Statistics.equalWidthBucket: BIGINT bucket ids for spread5
         when(col("hi") === col("lo"), lit(0L)).otherwise(
           least(lit(31L),
             floor((col("value") - col("lo")) * lit(32) / (col("hi") - col("lo"))).cast("long"))))
@@ -275,6 +273,7 @@ object Evaluation {
     val ext = ev.agg(min("value").as("lo"), max("value").as("hi"))
     val keyed = graft.util.Ckpt.stage(ev.crossJoin(broadcast(ext))
       .withColumn("bx",
+        // not Statistics.equalWidthBucket: BIGINT bucket ids for spread5
         when(col("hi") === col("lo"), lit(0L)).otherwise(
           least(lit(31L),
             floor((col("value") - col("lo")) * lit(32) / (col("hi") - col("lo"))).cast("long"))))
@@ -347,11 +346,11 @@ object Evaluation {
   def ece(s: SparkSession, d: String): DataFrame =
     calibrationBins(s, d)
       .select(col("n_bin"), col("gap"))
-      .withColumn("gm", floor(abs(col("gap")) * lit(1000000.0) + lit(0.5)).cast("long"))
+      .withColumn("gm", Det.micro(abs(col("gap"))))
       .agg(count(lit(1)).as("n_bins"), sum("n_bin").as("n_total"),
         sum(col("n_bin") * col("gm")).as("wsum"), max("gm").as("mg"))
       .select(col("n_bins"), col("n_total"),
-        q6(col("wsum").cast("double") /
+        Det.q6(col("wsum").cast("double") /
           (col("n_total").cast("double") * lit(1000000.0))).as("ece"),
         (col("mg").cast("double") / lit(1000000.0)).as("mce"))
 
@@ -389,7 +388,7 @@ object Evaluation {
       .groupBy("i").agg(max("mk").as("iso"))
     bins.join(broadcast(iso), col("bin") === col("i"))
       .select(col("bin"), col("n_bin"), col("n_pos"), col("pos_rate"),
-        q6(col("iso")).as("iso"))
+        Det.q6(col("iso")).as("iso"))
       .orderBy("bin")
   }
 
@@ -416,12 +415,12 @@ object Evaluation {
       .withColumn("cumrel", sum("rel").over(
         w.rowsBetween(Window.unboundedPreceding, Window.currentRow)))
     ranked.filter(col("rel") === 1)
-      .withColumn("p_at_k", q6(col("cumrel").cast("double") / col("k").cast("double"))
+      .withColumn("p_at_k", Det.q6(col("cumrel").cast("double") / col("k").cast("double"))
         .cast(org.apache.spark.sql.types.DecimalType(18, 6)))
       .groupBy("source")
       .agg(count(lit(1)).as("n_pos"), sum("p_at_k").as("sp"))
       .select(col("source"), col("n_pos"),
-        q6(col("sp").cast("double") / col("n_pos").cast("double")).as("avg_precision"))
+        Det.q6(col("sp").cast("double") / col("n_pos").cast("double")).as("avg_precision"))
       .orderBy("source")
   }
 
@@ -446,13 +445,14 @@ object Evaluation {
     * aggregate, a 1-row totals broadcast, and a ≤10-row window for the
     * total. */
   def woeIv(s: SparkSession, d: String): DataFrame = {
+    // not Det.qln: these logs stay DOUBLE, the woe terms combine in IEEE
     val qln = (c: Column) => Det.q6(log(c.cast("double")))
     val b = scoredFrame(s, d).groupBy("bin")
       .agg(sum("c").as("n_bin"), sum("c1").as("g"),
         sum(col("c") - col("c1")).as("b"))
     val tot = b.agg(sum("g").as("gt"), sum("b").as("bt"))
     val woe = qln(col("g")) - qln(col("gt")) - qln(col("b")) + qln(col("bt"))
-    val ivTerm = q6(((col("g") * col("bt") - col("b") * col("gt"))).cast("double") /
+    val ivTerm = Det.q6(((col("g") * col("bt") - col("b") * col("gt"))).cast("double") /
       (col("gt") * col("bt")).cast("double") * col("woe"))
       .cast(org.apache.spark.sql.types.DecimalType(18, 6))
     b.crossJoin(broadcast(tot))
@@ -492,9 +492,9 @@ object Evaluation {
       .withColumn("cum_n", sum("n_bin").over(wd))
       .withColumn("cum_pos", sum("g").over(wd))
       .select(col("decile"), col("n_bin"), col("cum_n"), col("cum_pos"),
-        q6(col("cum_pos").cast("double") / col("gt").cast("double")).as("gain"),
+        Det.q6(col("cum_pos").cast("double") / col("gt").cast("double")).as("gain"),
         when(col("cum_n") * col("gt") === 0, lit(null).cast("double"))
-          .otherwise(q6((col("cum_pos") * col("nt")).cast("double") /
+          .otherwise(Det.q6((col("cum_pos") * col("nt")).cast("double") /
             (col("cum_n") * col("gt")).cast("double"))).as("lift"))
       .orderBy("decile")
   }
@@ -519,7 +519,6 @@ object Evaluation {
     * Scale shape: one map-side-combined source aggregate, a 1-row prior
     * reduce broadcast back, row-local shrink. */
   def ebShrink(s: SparkSession, d: String): DataFrame = {
-    val dec0 = org.apache.spark.sql.types.DecimalType(38, 0)
     val per = Tables.documents(s, d)
       .groupBy("source")
       .agg(count(lit(1)).as("n"),
@@ -528,26 +527,26 @@ object Evaluation {
     val prior0 = per.agg(
       count(lit(1)).as("k"),
       sum("r").as("sr"),
-      sum(col("r").cast(dec0) * col("r").cast(dec0)).as("sr2"))
+      sum(col("r").cast(Dec0) * col("r").cast(Dec0)).as("sr2"))
     val m = expr("(sr div k)").cast("double") / lit(1000000.0)
-    val aNum = (col("k").cast(dec0) * col("sr2") -
-      col("sr").cast(dec0) * col("sr").cast(dec0)).cast("double")
+    val aNum = (col("k").cast(Dec0) * col("sr2") -
+      col("sr").cast(Dec0) * col("sr").cast(Dec0)).cast("double")
     val vDen = (col("k") * (col("k") - 1)).cast("double") *
       lit(1000000000000.0)
     val v = aNum / vDen
     val ab = m * (lit(1.0) - m) / v - lit(1.0)
     val fitOk = v > 0.0 && ab > 0.0
     val prior = prior0.select(col("k"),
-      when(fitOk, q6(m * ab)).as("alpha"),
-      when(fitOk, q6((lit(1.0) - m) * ab)).as("beta"),
+      when(fitOk, Det.q6(m * ab)).as("alpha"),
+      when(fitOk, Det.q6((lit(1.0) - m) * ab)).as("beta"),
       fitOk.as("fit_ok"))
     per.crossJoin(broadcast(prior))
       .select(col("source"), col("n"), col("c").as("n_en"),
-        q6(col("c").cast("double") / col("n").cast("double")).as("raw_rate"),
+        Det.q6(col("c").cast("double") / col("n").cast("double")).as("raw_rate"),
         col("alpha"), col("beta"),
         when(!col("fit_ok"),
-          q6(col("c").cast("double") / col("n").cast("double")))
-          .otherwise(q6((col("c").cast("double") + col("alpha")) /
+          Det.q6(col("c").cast("double") / col("n").cast("double")))
+          .otherwise(Det.q6((col("c").cast("double") + col("alpha")) /
             (col("n").cast("double") + col("alpha") + col("beta"))))
           .as("shrunk_rate"))
       .orderBy("source")
@@ -582,9 +581,9 @@ object Evaluation {
       .agg(sum("c").as("n"), sum("c1").as("n_pos"), sum("t").as("se"))
     val pbar = col("n_pos").cast("double") / col("n").cast("double")
     agg.select(col("n"), col("n_pos"),
-      q6(col("se").cast("double") / col("n").cast("double")).as("brier"),
-      q6(pbar * (lit(1.0) - pbar)).as("brier_ref"),
-      q6(lit(1.0) - (col("se").cast("double") / col("n").cast("double")) /
+      Det.q6(col("se").cast("double") / col("n").cast("double")).as("brier"),
+      Det.q6(pbar * (lit(1.0) - pbar)).as("brier_ref"),
+      Det.q6(lit(1.0) - (col("se").cast("double") / col("n").cast("double")) /
         (pbar * (lit(1.0) - pbar))).as("skill"))
   }
 
@@ -611,7 +610,7 @@ object Evaluation {
   def conformal(s: SparkSession, d: String): DataFrame = {
     val ev = Tables.events(s, d).filter(col("value").isNotNull)
       .select(col("event_type"), col("event_id"),
-        floor(col("value") * 1000000 + lit(0.5)).cast("long").as("m"))
+        Det.micro(col("value")).as("m"))
     val tr = ev.filter(col("event_id") % 5 =!= 0)
       .groupBy("event_type")
       // loud guard (ADVICE r9): Spark `div` truncates toward zero, DuckDB
@@ -647,8 +646,7 @@ object Evaluation {
         col("qhat").as("qhat_micro"),
         ((col("mu") - col("qhat")).cast("double") / lit(1000000.0)).as("lo"),
         ((col("mu") + col("qhat")).cast("double") / lit(1000000.0)).as("hi"),
-        (floor(col("n_cover").cast("double") / col("n_cal").cast("double") *
-          lit(1000000.0) + lit(0.5)) / lit(1000000.0)).as("coverage"))
+        Det.q6(col("n_cover").cast("double") / col("n_cal").cast("double")).as("coverage"))
       .orderBy("event_type")
   }
 

@@ -327,8 +327,7 @@ object EventTime {
       .withColumn("k",
         least(lit(62L), expr("CAST(datediff(anchor, dt) AS BIGINT) div 7")))
       .withColumn("wq",
-        floor(col("value") / expr("CAST(shiftleft(CAST(1 AS BIGINT), CAST(k AS INT)) AS DOUBLE)")
-          * 1000000 + lit(0.5)).cast("long"))
+        micro(col("value") / expr("CAST(shiftleft(CAST(1 AS BIGINT), CAST(k AS INT)) AS DOUBLE)")))
       .groupBy("event_type")
       .agg(count(lit(1)).as("n_events"),
         dsum(col("value")).as("raw_sum"),
@@ -393,7 +392,7 @@ object EventTime {
     val daily = graft.util.Ckpt.stage(Tables.events(s, d)
       .filter(col("value").isNotNull)
       .groupBy(col("event_type"), to_date(col("ts")).as("day"))
-      .agg(sum(floor(col("value") * 1000000 + lit(0.5)).cast("long")).as("x")))
+      .agg(sum(micro(col("value"))).as("x")))
     val win = daily.select(col("event_type").as("t"), col("day").as("d0"))
       .join(daily.select(col("event_type").as("t"), col("day").as("db"), col("x")), Seq("t"))
       .filter(datediff(col("d0"), col("db")).between(0, 6))
@@ -466,8 +465,7 @@ object EventTime {
     val daily = Tables.events(s, d).filter(col("value").isNotNull)
       .groupBy(col("event_type"), date_format(col("ts"), "yyyy-MM-dd").as("day"),
         dayofweek(col("ts")).as("dow"))
-      .agg(sum((col("value").cast(DecimalType(24, 6)) * lit(1000000)).cast("long"))
-        .as("vol"))
+      .agg(sum(microExact(col("value"))).as("vol"))
     val wt = Window.partitionBy("event_type").orderBy("day").rowsBetween(-3, 3)
     val trended = daily
       .withColumn("trend",
@@ -552,7 +550,6 @@ object EventTime {
     val daily = Tables.events(s, d)
       .groupBy(col("event_type"), date_format(col("ts"), "yyyy-MM-dd").as("day"))
       .agg(count(lit(1)).as("c"))
-    val q6 = (c: Column) => floor(c * lit(1000000.0) + lit(0.5)) / lit(1000000.0)
     val mean = col("sc").cast("double") / col("n_days").cast("double")
     val variance = (col("n_days") * col("scc") - col("sc") * col("sc")).cast("double") /
       (col("n_days").cast("double") * (col("n_days") - lit(1)).cast("double"))
@@ -621,8 +618,7 @@ object EventTime {
     val daily = Tables.events(s, d).filter(col("value").isNotNull)
       .groupBy(date_format(col("ts"), "yyyy-MM-dd").as("day"), col("event_type"))
       .agg(count(lit(1)).as("n_events"),
-        sum((col("value").cast(DecimalType(24, 6)) * lit(1000000)).cast("long"))
-          .as("vol"))
+        sum(microExact(col("value"))).as("vol"))
     val w = Window.partitionBy("event_type").orderBy("day")
     daily
       .withColumn("lag1", lag("vol", 1).over(w))
@@ -630,8 +626,7 @@ object EventTime {
       .withColumn("roll7", sum("vol").over(w.rowsBetween(-6, 0)))
       .withColumn("pct_change",
         when(col("lag1").isNotNull && col("lag1") =!= 0,
-          floor((col("vol") - col("lag1")).cast("double") / abs(col("lag1")).cast("double")
-            * lit(1000000.0) + lit(0.5)) / lit(1000000.0)))
+          q6((col("vol") - col("lag1")).cast("double") / abs(col("lag1")).cast("double"))))
       .select(col("day"), col("event_type"), col("n_events"), col("vol"),
         col("lag1"), col("lag7"), col("roll7"), col("pct_change"))
       .orderBy("event_type", "day")
@@ -734,19 +729,16 @@ object EventTime {
     }
     val f = startPv.toDF("variant", "pv")
     val base = f.filter(col("variant") === "base").select(col("pv").as("pb"))
-    val q6p = (c: Column) => floor(c.cast("double") / lit(1.0e12) * lit(1000000.0)
-      + lit(0.5)) / lit(1000000.0)
+    val q6p = (c: Column) => q6(c.cast("double") / lit(1.0e12))
     val r = f.filter(col("variant") =!= "base").crossJoin(broadcast(base))
       .withColumn("rem_i",
-        floor((lit(1.0) - col("pv").cast("double") / col("pb").cast("double"))
-          * lit(1000000.0) + lit(0.5)).cast("long"))
+        micro(lit(1.0) - col("pv").cast("double") / col("pb").cast("double")))
     r.crossJoin(broadcast(r.agg(sum("rem_i").as("rtot"))))
       .select(col("variant").as("channel"),
         q6p(col("pb")).as("p_base"),
         q6p(col("pv")).as("p_removed"),
         (col("rem_i").cast("double") / lit(1000000.0)).as("removal_effect"),
-        (floor(col("rem_i").cast("double") / col("rtot").cast("double")
-          * lit(1000000.0) + lit(0.5)) / lit(1000000.0)).as("attrib_share"))
+        q6(col("rem_i").cast("double") / col("rtot").cast("double")).as("attrib_share"))
       .orderBy("channel")
   }
 
@@ -852,8 +844,7 @@ object EventTime {
         sum("c").as("n_actual"),
         sum(abs(col("c") - col("f"))).as("sae"))
       .withColumn("mae",
-        floor(col("sae").cast("double") / col("n_hours").cast("double")
-          * lit(1000000.0) + lit(0.5)) / lit(1000000.0))
+        q6(col("sae").cast("double") / col("n_hours").cast("double")))
       .orderBy("event_type")
   }
 
@@ -1199,7 +1190,7 @@ object EventTime {
   def hampelFilter(s: SparkSession, d: String): DataFrame = {
     val daily = Tables.events(s, d).filter(col("value").isNotNull)
       .groupBy(col("event_type"), fmtDate(col("ts")).as("day"))
-      .agg(sum(floor(col("value") * 1000000 + lit(0.5)).cast("long")).as("x"))
+      .agg(sum(micro(col("value"))).as("x"))
     val w = Window.partitionBy("event_type").orderBy("day")
       .rowsBetween(-2, 2)
     daily

@@ -1,5 +1,6 @@
 package graft.ops
 
+import graft.util.Det
 import graft.Tables
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
@@ -283,9 +284,8 @@ object Graph {
       .join(broadcast(deg.withColumnRenamed("p", "pb").withColumnRenamed("deg", "deg_b")), "pb")
       .select(col("pa").as("supp_a"), col("pb").as("supp_b"),
         col("co"), col("deg_a"), col("deg_b"),
-        (floor(col("co").cast("double") /
-          (col("deg_a") + col("deg_b") - col("co")).cast("double")
-          * lit(1000000.0) + lit(0.5)) / lit(1000000.0)).as("jaccard"))
+        Det.q6(col("co").cast("double") /
+          (col("deg_a") + col("deg_b") - col("co")).cast("double")).as("jaccard"))
       .orderBy("supp_a", "supp_b")
   }
 
@@ -378,11 +378,9 @@ object Graph {
       .crossJoin(broadcast(nOrders))
       .select(col("antecedent"), col("consequent"),
         col("n_ab").as("n_both"), col("n_ante"), col("n_cons"),
-        (floor(col("n_ab").cast("double") / col("n_ante").cast("double")
-          * lit(1000000.0) + lit(0.5)) / lit(1000000.0)).as("confidence"),
-        (floor((col("n_orders") * col("n_ab")).cast("double")
-          / (col("n_ante") * col("n_cons")).cast("double")
-          * lit(1000000.0) + lit(0.5)) / lit(1000000.0)).as("lift"))
+        Det.q6(col("n_ab").cast("double") / col("n_ante").cast("double")).as("confidence"),
+        Det.q6((col("n_orders") * col("n_ab")).cast("double")
+          / (col("n_ante") * col("n_cons")).cast("double")).as("lift"))
       .orderBy(col("lift").desc, col("confidence").desc,
         col("antecedent").asc, col("consequent").asc)
       .limit(50)

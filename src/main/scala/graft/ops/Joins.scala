@@ -352,8 +352,7 @@ object Joins {
       .withColumn("rn", row_number().over(w))
       .filter(col("rn") <= 3)
       .select(col("qid"), col("rn"), col("c_custkey").as("neighbor"),
-        (floor(sqrt(col("dist2")) * lit(1000000.0) + lit(0.5)) / lit(1000000.0))
-          .as("dist_deg"))
+        q6(sqrt(col("dist2"))).as("dist_deg"))
       .orderBy("qid", "rn")
   }
 

@@ -1,7 +1,8 @@
 package graft.ops
 
+import graft.util.Det
 import graft.Tables
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** Table-maintenance operators: the data-quality gate and the snapshot
@@ -167,7 +168,6 @@ object Maintenance {
       .agg(min(unix_micros(col("ts"))).as("lo"), max(unix_micros(col("ts"))).as("hi"))
     val ev = Tables.events(s, d).crossJoin(broadcast(ext))
       .withColumn("pre", unix_micros(col("ts")) < expr("(lo + hi) div 2"))
-    val q6 = (c: Column) => floor(c * lit(1000000.0) + lit(0.5)) / lit(1000000.0)
     def prof(c: String): DataFrame = ev.agg(
       sum(col("pre").cast("long")).as("n_a"),
       sum((!col("pre")).cast("long")).as("n_b"),
@@ -179,11 +179,11 @@ object Maintenance {
     prof("event_id").unionByName(prof("user_id")).unionByName(prof("value"))
       .unionByName(prof("event_type")).unionByName(prof("props"))
       .withColumn("null_rate_delta",
-        q6(col("null_b").cast("double") / col("n_b").cast("double")
+        Det.q6(col("null_b").cast("double") / col("n_b").cast("double")
           - col("null_a").cast("double") / col("n_a").cast("double")))
       .withColumn("ndv_ratio",
         when(col("ndv_a") > 0,
-          q6(col("ndv_b").cast("double") / col("ndv_a").cast("double"))))
+          Det.q6(col("ndv_b").cast("double") / col("ndv_a").cast("double"))))
       .orderBy("column_name")
   }
 

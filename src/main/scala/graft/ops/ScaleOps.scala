@@ -142,8 +142,7 @@ object ScaleOps {
     val ev = Tables.events(s, d).crossJoin(broadcast(ext))
       .select(col("event_type"),
         (unix_micros(col("ts")) < expr("(lo + hi) div 2")).as("pre"),
-        coalesce((col("value").cast(DecimalType(24, 6)) * lit(1000000)).cast("long"),
-          lit(0L)).as("micro"))
+        coalesce(Det.microExact(col("value")), lit(0L)).as("micro"))
     def half(pre: Boolean, cn: String, vn: String): DataFrame =
       ev.filter(if (pre) col("pre") else !col("pre"))
         .groupBy("event_type")
@@ -186,7 +185,6 @@ object ScaleOps {
     * in production `actual` comes from the last run's metrics, not a
     * probe join. */
   def joinCardEst(s: SparkSession, d: String): DataFrame = {
-    val dec0 = DecimalType(38, 0)
     def audit(name: String, l: DataFrame, lk: String, r: DataFrame, rk: String): DataFrame = {
       val ls = l.agg(count(lit(1)).as("n_l"), count_distinct(col(lk)).as("ndv_l"))
       val rs = r.agg(count(lit(1)).as("n_r"), count_distinct(col(rk)).as("ndv_r"))
@@ -205,8 +203,7 @@ object ScaleOps {
       .unionByName(audit("orders_customer", ord.select(col("o_custkey")), "o_custkey",
         cust.select(col("c_custkey")), "c_custkey"))
       .withColumn("err_ratio",
-        floor(col("est_rows").cast("double") / col("actual").cast("double")
-          * lit(1000000.0) + lit(0.5)) / lit(1000000.0))
+        Det.q6(col("est_rows").cast("double") / col("actual").cast("double")))
       .orderBy("join_pair")
   }
 

@@ -3,6 +3,7 @@ package graft.ops
 import graft.Tables
 import graft.functions.VectorExpressions.{doubleDot, floatDot}
 import graft.util.Det
+import graft.util.Det.Dec0
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -379,7 +380,6 @@ object Similarity {
     * scan-local with a distinct on (doc, word); margins are keyed
     * aggregates; the per-cell top-3 is a cell-partitioned window. */
   def clusterTopics(s: SparkSession, d: String): DataFrame = {
-    val dec0 = org.apache.spark.sql.types.DecimalType(38, 0)
     val n = once(withNorm(Tables.embeddings(s, d)).select("vec_id", "v", "norm"))
     val asg = once(nearestCell(n, seedCentroids(n), dot).select("vec_id", "cid"))
     val dw = once(Tables.documents(s, d)
@@ -397,15 +397,14 @@ object Similarity {
       .crossJoin(broadcast(tot))
       .withColumn("det",
         (col("n11") * (col("nn") - col("nc") - (col("nw") - col("n11")))
-          - (col("nc") - col("n11")) * (col("nw") - col("n11"))).cast(dec0))
+          - (col("nc") - col("n11")) * (col("nw") - col("n11"))).cast(Dec0))
       .withColumn("chi2",
         // the termChi2 margin guards: an everywhere-term or a
         // single-cell corpus is undiscriminating — exactly 0
         when(col("nw") < col("nn") && col("nc") < col("nn"),
-          floor((col("nn").cast(dec0) * col("det") * col("det")).cast("double") /
-            (col("nw").cast(dec0) * (col("nn") - col("nw")).cast(dec0) *
-              col("nc").cast(dec0) * (col("nn") - col("nc")).cast(dec0)).cast("double")
-            * lit(1000000.0) + lit(0.5)) / lit(1000000.0))
+          Det.q6((col("nn").cast(Dec0) * col("det") * col("det")).cast("double") /
+            (col("nw").cast(Dec0) * (col("nn") - col("nw")).cast(Dec0) *
+              col("nc").cast(Dec0) * (col("nn") - col("nc")).cast(Dec0)).cast("double")))
           .otherwise(lit(0.0)))
     val w = Window.partitionBy("cid")
       .orderBy(col("chi2").desc, col("word").asc)
@@ -820,9 +819,7 @@ object Similarity {
       .groupBy("vec_id")
       .agg(
         Det.q4(max(col("maxabs"))).as("maxabs"),
-        Det.q8(sum((col("err") * col("err"))
-          .cast(org.apache.spark.sql.types.DecimalType(30, 12))).cast("double")
-          / count(lit(1))).as("mse"),
+        Det.q8(Det.dsumWide(col("err") * col("err")) / count(lit(1))).as("mse"),
         countDistinct(col("q")).as("n_levels"))
       .orderBy("vec_id")
   }
@@ -892,10 +889,9 @@ object Similarity {
   }
 
   def embedPq(s: SparkSession, d: String): DataFrame = {
-    val q4 = graft.util.Det.q4 _
     val sv = pqSubvectors(s, d)
     sv.join(broadcast(pqCodebook(sv)), col("sub") === col("csub"))
-      .withColumn("d2", q4(pqDist2(col("sv"), col("cv"))))
+      .withColumn("d2", Det.q4(pqDist2(col("sv"), col("cv"))))
       .groupBy("vec_id", "sub")
       .agg(min(struct(col("d2"), col("cid"))).as("b"))
       .select(col("vec_id"), col("sub"),
@@ -979,10 +975,9 @@ object Similarity {
   def embedNormAudit(s: SparkSession, d: String): DataFrame = {
     import graft.functions.VectorExpressions.doubleDot
     import org.apache.spark.sql.types.DecimalType
-    val q4 = graft.util.Det.q4 _
     Tables.embeddings(s, d)
       .select(col("label"), col("embedding").cast("array<double>").as("v"))
-      .withColumn("nq", q4(sqrt(doubleDot(col("v"), col("v")))))
+      .withColumn("nq", Det.q4(sqrt(doubleDot(col("v"), col("v")))))
       .groupBy("label")
       .agg(count(lit(1)).as("n_vecs"),
         sum((col("nq") === 0.0).cast("long")).as("n_zero"),
@@ -1037,12 +1032,10 @@ object Similarity {
       val vqd = element_at(typedLit(vq), col("dim") + 1)
       val dq = ex
         .groupBy("vec_id")
-        .agg(sum(floor(col("x") * (vqd.cast("double") / lit(10000.0)) *
-          lit(1000000.0) + lit(0.5)).cast("long")).as("dq"))
+        .agg(sum(Det.micro(col("x") * (vqd.cast("double") / lit(10000.0)))).as("dq"))
       val sd: Array[(Int, Long)] = ex.join(dq, "vec_id")
         .groupBy("dim")
-        .agg(sum(floor(col("x") * (col("dq").cast("double") / lit(1000000.0)) *
-          lit(1000000.0) + lit(0.5)).cast("long")).as("sd"))
+        .agg(sum(Det.micro(col("x") * (col("dq").cast("double") / lit(1000000.0)))).as("sd"))
         .collect().map(r => (r.getInt(0), r.getLong(1)))
       // exact-norm step, driver-side: Σ sd² in unbounded integers (the
       // DECIMAL(38,0) sum, exactly), ONE correctly-rounded sqrt after the
@@ -1365,7 +1358,7 @@ object Similarity {
     members
       .groupBy("cid", "dim")
       .agg(count(lit(1)).as("n_members"),
-        Det.q4(graft.util.Det.davg(col("x"))).as("dim_mean"))
+        Det.q4(Det.davg(col("x"))).as("dim_mean"))
       .select(col("cid"), col("dim"), col("dim_mean"), col("n_members"))
       .orderBy("cid", "dim")
   }
@@ -1436,7 +1429,6 @@ object Similarity {
     * convergence counts are the loop's own stop condition, so neither
     * caller pays for the other's output. */
   private def lloydRun(n: DataFrame): (DataFrame, Seq[(Int, Long)]) = {
-    val q4 = graft.util.Det.q4 _
     // Per-pass job structure (r14, guide §1.2/§3): each pass runs exactly
     // TWO jobs — the staged assignment (which folds in last pass's cid as
     // `pcid`, so the convergence count is a shuffle-free filter over the
@@ -1497,7 +1489,7 @@ object Similarity {
             .select(col("cid"), posexplode(col("v")).as(Seq("dim", "x")))
             .groupBy("cid", "dim")
             .agg(count(lit(1)).as("n_members"),
-              q4(graft.util.Det.davg(col("x"))).as("dim_mean"))
+              Det.q4(Det.davg(col("x"))).as("dim_mean"))
           cents = centroidList(means)
           prevAsg = asg
         }
@@ -1819,7 +1811,7 @@ object Similarity {
     * O(n²) and exactly what a 100 TB corpus cannot run).
     *
     * Determinism: coordinates quantize to micro-unit BIGINTs at the
-    * scan ([[graft.ops.Statistics.q6micro]] discipline); centroids are
+    * scan ([[graft.util.Det.micro]] discipline); centroids are
     * exact integer sums with ONE truncating integer division per
     * coordinate (Spark `div` ≡ DuckDB `//`, both toward zero); squared
     * distances are exact BIGINTs, so argmin-over-centroids is integer
@@ -1837,7 +1829,7 @@ object Similarity {
       .select(col("vec_id"), col("label"),
         posexplode(col("embedding").cast("array<double>")))
       .select(col("vec_id"), col("label"), col("pos").as("dim"),
-        floor(col("col") * 1000000 + lit(0.5)).cast("long").as("xq")))
+        Det.micro(col("col")).as("xq")))
     val cent = ex.groupBy(col("label").as("clab"), col("dim"))
       .agg(sum("xq").as("sx"), count(lit(1)).as("nx"))
       .select(col("clab"), col("dim"), expr("sx div nx").as("cq"))
@@ -1854,11 +1846,9 @@ object Similarity {
           (col("b") - col("a")) / greatest(col("a"), col("b"))).otherwise(lit(0.0)))
     per.groupBy("label")
       .agg(count(lit(1)).as("n_vecs"),
-        sum((floor(col("sil") * lit(1000000.0) + lit(0.5)) / lit(1000000.0))
-          .cast(org.apache.spark.sql.types.DecimalType(18, 6))).as("ssum"))
+        sum(Det.q6(col("sil")).cast(org.apache.spark.sql.types.DecimalType(18, 6))).as("ssum"))
       .select(col("label"), col("n_vecs"),
-        (floor(col("ssum").cast("double") / col("n_vecs").cast("double")
-          * lit(1000000.0) + lit(0.5)) / lit(1000000.0)).as("mean_sil"))
+        Det.q6(col("ssum").cast("double") / col("n_vecs").cast("double")).as("mean_sil"))
       .orderBy("label")
   }
 
@@ -2019,8 +2009,7 @@ object Similarity {
       .agg(sum(coalesce(col("rel"), lit(0L))).as("n_rel"),
         sum("g").cast("long").as("dcg_scaled"))
       .select(col("qid"), col("n_rel"), col("dcg_scaled"),
-        (floor(col("dcg_scaled").cast("double") / lit(2948457.0)
-          * lit(1000000.0) + lit(0.5)) / lit(1000000.0)).as("ndcg"))
+        Det.q6(col("dcg_scaled").cast("double") / lit(2948457.0)).as("ndcg"))
       .orderBy("qid")
   }
 

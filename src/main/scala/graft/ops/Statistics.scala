@@ -208,7 +208,6 @@ object Statistics {
     * Scale shape: rank selection over the pooled distinct-value domain;
     * the 1-row median broadcasts back; one 2-row group aggregate. */
   def moodMedian(s: SparkSession, d: String): DataFrame = {
-    val dec0 = DecimalType(38, 0)
     val ev = Tables.events(s, d)
       .filter(col("event_type").isin("click", "view") && col("value").isNotNull)
       .select(col("event_type").as("grp"), col("value").as("v"))
@@ -227,13 +226,13 @@ object Statistics {
     val a = col("gt_click"); val b = col("n_click") - col("gt_click")
     val c = col("gt_view"); val dd = col("n_view") - col("gt_view")
     val n = col("n_click") + col("n_view")
-    val det = a.cast(dec0) * dd.cast(dec0) - b.cast(dec0) * c.cast(dec0)
-    val denom = col("n_click").cast(dec0) * col("n_view").cast(dec0) *
-      (a + c).cast(dec0) * (b + dd).cast(dec0)
+    val det = a.cast(Dec0) * dd.cast(Dec0) - b.cast(Dec0) * c.cast(Dec0)
+    val denom = col("n_click").cast(Dec0) * col("n_view").cast(Dec0) *
+      (a + c).cast(Dec0) * (b + dd).cast(Dec0)
     row.select(col("n_click"), col("gt_click"), col("n_view"), col("gt_view"),
       col("median"),
       when(denom === lit(0), lit(null).cast("double"))
-        .otherwise(Det.q6((n.cast(dec0) * det * det).cast("double") /
+        .otherwise(Det.q6((n.cast(Dec0) * det * det).cast("double") /
           denom.cast("double"))).as("chi2"))
   }
 
@@ -262,8 +261,6 @@ object Statistics {
     * Scale shape: one map-side-combined (day) aggregate, then a
     * calendar-bounded cumulative window. */
   def sprt(s: SparkSession, d: String): DataFrame = {
-    val q6d = (c: Column) => (floor(c * lit(1000000.0) + lit(0.5)) /
-      lit(1000000.0)).cast(DecimalType(18, 6))
     val daily = Tables.events(s, d)
       .groupBy(to_date(col("ts")).as("day"))
       .agg(sum((col("event_type") === "purchase").cast("long")).as("x"),
@@ -271,8 +268,8 @@ object Statistics {
     val w = Window.orderBy("day")
       .rowsBetween(Window.unboundedPreceding, Window.currentRow)
     daily
-      .withColumn("llr_day", q6d(col("x").cast("double") * lit(SprtLa) +
-        (col("m") - col("x")).cast("double") * lit(SprtLb)))
+      .withColumn("llr_day", q6(col("x").cast("double") * lit(SprtLa) +
+        (col("m") - col("x")).cast("double") * lit(SprtLb)).cast(DecimalType(18, 6)))
       .withColumn("llr_cum", sum("llr_day").over(w))
       .select(date_format(col("day"), "yyyy-MM-dd").as("day"),
         col("x"), col("m"),
@@ -338,8 +335,6 @@ object Statistics {
     * Scale shape: one per-user conversion aggregate (map-side
     * combined), one 1-row arm reduce. */
   def twoPropZ(s: SparkSession, d: String): DataFrame = {
-    val dec0 = DecimalType(38, 0)
-    val q6 = (c: Column) => floor(c * lit(1000000.0) + lit(0.5)) / lit(1000000.0)
     val per = Tables.events(s, d)
       .groupBy("user_id")
       .agg(max((col("event_type") === "purchase").cast("long")).as("conv"))
@@ -350,11 +345,11 @@ object Statistics {
       sum(when(col("arm") === 1, 1L).otherwise(0L)).as("n1"),
       sum(when(col("arm") === 1, col("conv")).otherwise(0L)).as("c1"))
     val c = col("c0") + col("c1"); val n = col("n0") + col("n1")
-    val num = (col("c0").cast(dec0) * col("n1").cast(dec0) -
-      col("c1").cast(dec0) * col("n0").cast(dec0)).cast("double") /
-      (col("n0").cast(dec0) * col("n1").cast(dec0)).cast("double")
-    val varr = (c.cast(dec0) * (n - c).cast(dec0)).cast("double") /
-      (n.cast(dec0) * col("n0").cast(dec0) * col("n1").cast(dec0)).cast("double")
+    val num = (col("c0").cast(Dec0) * col("n1").cast(Dec0) -
+      col("c1").cast(Dec0) * col("n0").cast(Dec0)).cast("double") /
+      (col("n0").cast(Dec0) * col("n1").cast(Dec0)).cast("double")
+    val varr = (c.cast(Dec0) * (n - c).cast(Dec0)).cast("double") /
+      (n.cast(Dec0) * col("n0").cast(Dec0) * col("n1").cast(Dec0)).cast("double")
     row.select(col("n0"), col("c0"), col("n1"), col("c1"),
       q6(col("c0").cast("double") / col("n0").cast("double")).as("p0"),
       q6(col("c1").cast("double") / col("n1").cast("double")).as("p1"),
@@ -381,20 +376,17 @@ object Statistics {
     * Scale shape: one map-side-combined (day) aggregate; everything
     * after runs on the ≤|days| frame with 1-row broadcasts. */
   def spcXbar(s: SparkSession, d: String): DataFrame = {
-    val dec0 = DecimalType(38, 0)
-    val q6 = (c: Column) => floor(c * lit(1000000.0) + lit(0.5)) / lit(1000000.0)
     val daily = Tables.events(s, d).filter(col("value").isNotNull)
       .groupBy(to_date(col("ts")).as("day"))
-      .agg(sum(q6micro(col("value"))).as("tot"), count(lit(1)).as("n"))
+      .agg(sum(micro(col("value"))).as("tot"), count(lit(1)).as("n"))
     val center = daily.agg(
-      (floor(sum("tot").cast("double") / sum("n").cast("double") *
-        lit(1000000.0) + lit(0.5)) / lit(1000000.0)).as("c"),
+      q6(sum("tot").cast("double") / sum("n").cast("double")).as("c"),
       count(lit(1)).as("m"))
     val dq = floor((col("tot").cast("double") / col("n").cast("double") /
       lit(1000000.0) - col("c")) * 1000 + lit(0.5)).cast("long")
     val dev = graft.util.Ckpt.stage(daily.crossJoin(broadcast(center))
       .withColumn("dq", dq))
-    val s2 = dev.agg(sum(col("dq").cast(dec0) * col("dq").cast(dec0)).as("s2"))
+    val s2 = dev.agg(sum(col("dq").cast(Dec0) * col("dq").cast(Dec0)).as("s2"))
     dev.crossJoin(broadcast(s2))
       .filter(col("m") > 1)
       .select(date_format(col("day"), "yyyy-MM-dd").as("day"),
@@ -402,8 +394,8 @@ object Statistics {
         q6(col("tot").cast("double") / col("n").cast("double") /
           lit(1000000.0)).as("xbar"),
         col("dq").as("dev_milli"),
-        (col("dq").cast(dec0) * col("dq").cast(dec0) *
-          (col("m") - 1).cast(dec0) > lit(9).cast(dec0) * col("s2"))
+        (col("dq").cast(Dec0) * col("dq").cast(Dec0) *
+          (col("m") - 1).cast(Dec0) > lit(9).cast(Dec0) * col("s2"))
           .cast("int").as("out_of_control"))
       .orderBy("day")
   }
@@ -482,15 +474,12 @@ object Statistics {
     * (pre-staged (value, c1, c2)) — shared with [[driftReport]], which
     * derives `ev` from its single staged scan of events. */
   private def ksFromAgg(ev: DataFrame): DataFrame = {
-    val nb = KsBuckets
     // staged input: ev feeds extent + bucketing + totals, gaps feeds the
     // argmax join twice — without staging each consumer re-runs the subtree
     val ext = ev.agg(min("value").as("lo"), max("value").as("hi"))
     val bucketed = ev.crossJoin(broadcast(ext))
       .withColumn("bkt",
-        when(col("hi") === col("lo"), lit(0)).otherwise(
-          least(lit(nb - 1),
-            floor((col("value") - col("lo")) * nb / (col("hi") - col("lo"))).cast("int"))))
+        equalWidthBucket(col("value"), col("lo"), col("hi"), KsBuckets))
       .drop("lo", "hi")
     // unpartitioned prefix window over the per-BUCKET totals: exactly
     // <= KsBuckets (32) rows regardless of input scale — the whole point
@@ -527,6 +516,15 @@ object Statistics {
     * trivially broadcastable. */
   private[ops] val KsBuckets = 32
 
+  /** Equal-width bucket of `v` over [lo, hi] into 0..nb−1: v = hi lands in
+    * the last bucket, and a degenerate range (hi = lo) puts every row in
+    * bucket 0. `least` skips NULL in both engines, so a NULL `v` lands in
+    * bucket nb−1. SQL mirror: `CASE WHEN hi = lo THEN 0 ELSE
+    * CAST(least(nb − 1, floor((v − lo) * nb / (hi − lo))) AS INT) END`. */
+  private[graft] def equalWidthBucket(v: Column, lo: Column, hi: Column, nb: Int): Column =
+    when(hi === lo, lit(0)).otherwise(
+      least(lit(nb - 1), floor((v - lo) * nb / (hi - lo)).cast("int")))
+
   /** Two-sample Mann-Whitney U (Wilcoxon rank-sum) test between the
     * click and view `value` distributions — the nonparametric companion
     * to [[ksDrift]]: KS alarms on any ECDF gap, rank-sum alarms
@@ -556,7 +554,6 @@ object Statistics {
     * NULLs excluded explicitly: Spark windows sort them first, DuckDB
     * last, so their presence would shift every rank cross-engine. */
   def mannWhitney(s: SparkSession, d: String): DataFrame = {
-    val nb = KsBuckets
     val ev = graft.util.Ckpt.stage(Tables.events(s, d)
       .filter(col("event_type").isin("click", "view") && col("value").isNotNull)
       .groupBy("value")
@@ -566,9 +563,7 @@ object Statistics {
     val ext = ev.agg(min("value").as("lo"), max("value").as("hi"))
     val bucketed = ev.crossJoin(broadcast(ext))
       .withColumn("bkt",
-        when(col("hi") === col("lo"), lit(0)).otherwise(
-          least(lit(nb - 1),
-            floor((col("value") - col("lo")) * nb / (col("hi") - col("lo"))).cast("int"))))
+        equalWidthBucket(col("value"), col("lo"), col("hi"), KsBuckets))
       .drop("lo", "hi")
     val wb = Window.orderBy("bkt")
       .rowsBetween(Window.unboundedPreceding, Window.currentRow)
@@ -578,13 +573,12 @@ object Statistics {
     val w = Window.partitionBy("bkt").orderBy("value")
       .rowsBetween(Window.unboundedPreceding, Window.currentRow)
     val c = col("c1") + col("c2")
-    val dec0 = DecimalType(38, 0)
     val t = bucketed.join(broadcast(offs), "bkt")
       .withColumn("prev", col("off") + sum(c).over(w) - c)
       .agg(
         sum("c1").as("n1"), sum("c2").as("n2"),
         sum(col("c1") * (lit(2) * col("prev") + c + lit(1))).as("r1_x2"),
-        (sum(c.cast(dec0) * c.cast(dec0) * c.cast(dec0)) - sum(c))
+        (sum(c.cast(Dec0) * c.cast(Dec0) * c.cast(Dec0)) - sum(c))
           .cast("long").as("tie_t"))
     val u1 = col("r1_x2") - col("n1") * (col("n1") + 1)
     val n = col("n1") + col("n2")
@@ -614,7 +608,6 @@ object Statistics {
     * both engines. Scale shape: identical to [[mannWhitney]] — the
     * shared two-phase bucketed rank aggregate, one final row. */
   def cliffDelta(s: SparkSession, d: String): DataFrame = {
-    val q6 = (c: Column) => floor(c * lit(1000000.0) + lit(0.5)) / lit(1000000.0)
     val base = mannWhitney(s, d)
       .select(col("n1"), col("n2"),
         (col("u1_x2") - col("n1") * col("n2")).as("num"))
@@ -649,7 +642,6 @@ object Statistics {
     * chi-square arithmetic on the ≤ r·c-row grid (20×5 here; bounded by
     * the label domains, not the row count). */
   def contingencyAssoc(s: SparkSession, d: String): DataFrame = {
-    val dec0 = DecimalType(38, 0)
     val cells = graft.util.Ckpt.stage(Tables.documents(s, d)
       .groupBy("source", "lang").agg(count(lit(1)).as("o")))
     val rw = cells.groupBy("source").agg(sum("o").as("r"))
@@ -660,8 +652,8 @@ object Statistics {
       .join(cells, Seq("source", "lang"), "left")
       .withColumn("o", coalesce(col("o"), lit(0L)))
       .crossJoin(broadcast(tot))
-    val num = (col("o") * col("n") - col("r") * col("c")).cast(dec0)
-    val den = col("n").cast(dec0) * col("r").cast(dec0) * col("c").cast(dec0)
+    val num = (col("o") * col("n") - col("r") * col("c")).cast(Dec0)
+    val den = col("n").cast(Dec0) * col("r").cast(Dec0) * col("c").cast(Dec0)
     val per = grid.withColumn("contrib",
       Det.q6((num * num).cast("double") / den.cast("double"))
         .cast(DecimalType(18, 6)))
@@ -749,19 +741,18 @@ object Statistics {
     * construction. Returns one row per event_type with (o1, o2, k,
     * contrib). */
   private[graft] def chisqPerType(cells: DataFrame): DataFrame = {
-    val dec0 = DecimalType(38, 0)
     val tot = cells.agg(
       sum("o1").as("c1"), sum("o2").as("c2"),
       sum(col("o1") + col("o2")).as("n"),
       count(lit(1)).as("k"))
     def contrib(o: Column, c: Column, n: Column, r: Column) = {
-      val num = (o * n - r * c).cast(dec0)
+      val num = (o * n - r * c).cast(Dec0)
       // denominator factors promoted to DECIMAL(38,0) BEFORE multiplying
       // (ADVICE r6): a LongType product n·r·c wraps silently past ~2.1M
       // events (n³ > Long.MaxValue) while the oracle's HUGEINT product
       // stays exact — the decimal product keeps both engines exact and
       // loud at any input scale
-      val den = n.cast(dec0) * r.cast(dec0) * c.cast(dec0)
+      val den = n.cast(Dec0) * r.cast(Dec0) * c.cast(Dec0)
       Det.q6((num * num).cast("double") / den.cast("double"))
         .cast(DecimalType(18, 6))
     }
@@ -815,9 +806,7 @@ object Statistics {
     val ext = ev.agg(min("value").as("lo"), max("value").as("hi"))
     val counts = ev.crossJoin(broadcast(ext))
       .withColumn("bkt",
-        when(col("hi") === col("lo"), lit(0)).otherwise(
-          least(lit(nb - 1),
-            floor((col("value") - col("lo")) * nb / (col("hi") - col("lo"))).cast("int"))))
+        equalWidthBucket(col("value"), col("lo"), col("hi"), nb))
       .groupBy("bkt")
       .agg(sum(col("early") * col("c")).as("r1"),
         sum((lit(1L) - col("early")) * col("c")).as("r2"))
@@ -936,18 +925,13 @@ object Statistics {
       .select(col("label"), (col("vec_id") % 2).cast("int").as("half"),
         posexplode(col("embedding")))
       .select(col("label"), col("half"), col("pos").as("dim"),
-        q6micro(col("col").cast("double")).as("xq"))
+        micro(col("col").cast("double")).as("xq"))
     shiftRollup(ex.groupBy("label", "dim").agg(
       coalesce(sum(when(col("half") === 0, col("xq"))), lit(0L)).as("s0"),
       count(when(col("half") === 0, lit(1))).as("n0"),
       coalesce(sum(when(col("half") === 1, col("xq"))), lit(0L)).as("s1"),
       count(when(col("half") === 1, lit(1))).as("n1")))
   }
-
-  /** floor(x·10⁶+0.5) as BIGINT micro-units — the coordinate quantizer
-    * shared by [[embedDrift]] and the streaming monitor path. */
-  private[graft] def q6micro(c: Column): Column =
-    floor(c * 1000000 + lit(0.5)).cast("long")
 
   /** Per-(label, dim) micro-unit coordinate sums of a (label, embedding)
     * frame — the mergeable sufficient statistic the drift arithmetic runs
@@ -957,7 +941,7 @@ object Statistics {
   private[graft] def dimSums(e: DataFrame): DataFrame =
     e.select(col("label"), posexplode(col("embedding")))
       .select(col("label"), col("pos").as("dim"),
-        q6micro(col("col").cast("double")).as("xq"))
+        micro(col("col").cast("double")).as("xq"))
       .groupBy("label", "dim")
       .agg(sum("xq").as("s"), count(lit(1)).as("n"))
 
@@ -1108,7 +1092,7 @@ object Statistics {
     * the break): the day t maximizing |S_t|, S_t = Σ_{i≤t}(x_i − x̄),
     * the classic cumulative-sum change statistic.
     *
-    * Integer-exact: daily totals are BIGINT micro-units ([[q6micro]]),
+    * Integer-exact: daily totals are BIGINT micro-units ([[micro]]),
     * and the curve is computed SCALED — S'_t = nd·cum_t − t·T (both
     * terms exact BIGINT; x̄ never materializes) — so argmax and
     * tie-break (earliest day) are pure integer decisions; the one
@@ -1124,7 +1108,7 @@ object Statistics {
     val daily = graft.util.Ckpt.stage(Tables.events(s, d)
       .filter(col("value").isNotNull)
       .groupBy(to_date(col("ts")).as("day"))
-      .agg(sum(q6micro(col("value"))).as("x")))
+      .agg(sum(micro(col("value"))).as("x")))
     val tot = daily.agg(sum("x").as("tt"), count(lit(1)).as("nd"))
     val wd = Window.orderBy("day")
     val curve = graft.util.Ckpt.stage(daily.crossJoin(broadcast(tot))
@@ -1163,17 +1147,16 @@ object Statistics {
     * totals broadcast back, the lag window partitioned by type over
     * calendar-bounded day rows. The events table streams through once. */
   def autocorr(s: SparkSession, d: String): DataFrame = {
-    val dec0 = DecimalType(38, 0)
     val daily = graft.util.Ckpt.stage(Tables.events(s, d)
       .filter(col("value").isNotNull)
       .groupBy(col("event_type"), to_date(col("ts")).as("day"))
-      .agg(sum(q6micro(col("value"))).as("x")))
+      .agg(sum(micro(col("value"))).as("x")))
     val tt = daily.groupBy(col("event_type").as("t"))
       .agg(sum("x").as("tot"), count(lit(1)).as("nd"))
     val w = Window.partitionBy("event_type").orderBy("day")
     daily.join(broadcast(tt), col("event_type") === col("t"))
       .withColumn("y",
-        col("nd").cast(dec0) * col("x").cast(dec0) - col("tot").cast(dec0))
+        col("nd").cast(Dec0) * col("x").cast(Dec0) - col("tot").cast(Dec0))
       .withColumn("ynext", lead("y", 1).over(w))
       .groupBy("event_type")
       .agg(first("nd").as("n_days"),
@@ -1219,7 +1202,6 @@ object Statistics {
       .agg(sum(col("r") * qlog2(col("r"))).as("srr"), count(lit(1)).as("n_lang"))
     val ss = cells.groupBy("source").agg(sum("c").as("m"))
       .agg(sum(col("m") * qlog2(col("m"))).as("sss"), count(lit(1)).as("n_source"))
-    val q6 = (c: Column) => floor(c * lit(1000000.0) + lit(0.5)) / lit(1000000.0)
     sc.crossJoin(broadcast(sr)).crossJoin(broadcast(ss))
       .withColumn("nl", col("n") * qlog2(col("n")))
       .withColumn("t",  col("scc") - col("srr") - col("sss") + col("nl"))
@@ -1265,21 +1247,19 @@ object Statistics {
         .withColumn(s"r$v", lit(2) * col("prev") + col("c") + lit(1))
         .select(col("flag"), col(v), col(s"r$v"))
     }
-    val dec0 = DecimalType(38, 0)
     val joined = li.join(ranks("x"), Seq("flag", "x"))
       .join(ranks("y"), Seq("flag", "y"))
-    val q6 = (c: Column) => floor(c * lit(1000000.0) + lit(0.5)) / lit(1000000.0)
     joined.groupBy("flag")
       .agg(count(lit(1)).as("n"),
-        sum(col("rx").cast(dec0)).as("sx"),
-        sum(col("ry").cast(dec0)).as("sy"),
-        sum(col("rx").cast(dec0) * col("rx").cast(dec0)).as("sxx"),
-        sum(col("ry").cast(dec0) * col("ry").cast(dec0)).as("syy"),
-        sum(col("rx").cast(dec0) * col("ry").cast(dec0)).as("sxy"))
+        sum(col("rx").cast(Dec0)).as("sx"),
+        sum(col("ry").cast(Dec0)).as("sy"),
+        sum(col("rx").cast(Dec0) * col("rx").cast(Dec0)).as("sxx"),
+        sum(col("ry").cast(Dec0) * col("ry").cast(Dec0)).as("syy"),
+        sum(col("rx").cast(Dec0) * col("ry").cast(Dec0)).as("sxy"))
       .select(col("flag").as("l_returnflag"), col("n"),
-        q6((col("n").cast(dec0) * col("sxy") - col("sx") * col("sy")).cast("double") /
-           (sqrt((col("n").cast(dec0) * col("sxx") - col("sx") * col("sx")).cast("double")) *
-            sqrt((col("n").cast(dec0) * col("syy") - col("sy") * col("sy")).cast("double"))))
+        q6((col("n").cast(Dec0) * col("sxy") - col("sx") * col("sy")).cast("double") /
+           (sqrt((col("n").cast(Dec0) * col("sxx") - col("sx") * col("sx")).cast("double")) *
+            sqrt((col("n").cast(Dec0) * col("syy") - col("sy") * col("sy")).cast("double"))))
           .as("rho"))
       .orderBy("l_returnflag")
   }
@@ -1305,9 +1285,8 @@ object Statistics {
         sum(when(col("arm") === 0, 1L).otherwise(0L)).as("n0"),
         sum(when(col("arm") === 1, 1L).otherwise(0L)).as("n1"))
       .withColumn("chi2",
-        floor(((col("n0") - col("n1")) * (col("n0") - col("n1"))).cast("double") /
-              (col("n0") + col("n1")).cast("double") * lit(1000000.0) + lit(0.5))
-          / lit(1000000.0))
+        q6(((col("n0") - col("n1")) * (col("n0") - col("n1"))).cast("double") /
+          (col("n0") + col("n1")).cast("double")))
       .select(col("n0"), col("n1"), col("chi2"),
         (col("chi2") > lit(3.841459)).as("srm"))
   }
@@ -1333,7 +1312,6 @@ object Statistics {
     * Scale shape: one per-user aggregate (map-side combined), one
     * 1-row pooled-θ reduce broadcast back, one 2-row arm rollup. */
   def cuped(s: SparkSession, d: String): DataFrame = {
-    val dec0 = DecimalType(38, 0)
     val ev = Tables.events(s, d).filter(col("value").isNotNull)
       .select(col("user_id"), unix_micros(col("ts")).as("tsl"),
         col("value").cast(DecimalType(24, 6)).as("v"))
@@ -1352,18 +1330,17 @@ object Statistics {
         .withColumn("arm", pmod(col("user_id"), lit(2))))
     val pooled = per.agg(
       count(lit(1)).as("n"),
-      sum(col("xq").cast(dec0)).as("sx"),
-      sum(col("yq").cast(dec0)).as("sy"),
-      sum(col("xq").cast(dec0) * col("xq").cast(dec0)).as("sxx"),
-      sum(col("xq").cast(dec0) * col("yq").cast(dec0)).as("sxy"))
-    val theta = (col("n").cast(dec0) * col("sxy") - col("sx") * col("sy")).cast("double") /
-      (col("n").cast(dec0) * col("sxx") - col("sx") * col("sx")).cast("double")
+      sum(col("xq").cast(Dec0)).as("sx"),
+      sum(col("yq").cast(Dec0)).as("sy"),
+      sum(col("xq").cast(Dec0) * col("xq").cast(Dec0)).as("sxx"),
+      sum(col("xq").cast(Dec0) * col("yq").cast(Dec0)).as("sxy"))
+    val theta = (col("n").cast(Dec0) * col("sxy") - col("sx") * col("sy")).cast("double") /
+      (col("n").cast(Dec0) * col("sxx") - col("sx") * col("sx")).cast("double")
     val gx = col("sx").cast("double") / (col("n") * lit(1000000L)).cast("double")
-    val q6 = (c: Column) => floor(c * lit(1000000.0) + lit(0.5)) / lit(1000000.0)
     per.groupBy("arm")
       .agg(count(lit(1)).as("n_users"),
-        sum(col("xq").cast(dec0)).as("sxa"),
-        sum(col("yq").cast(dec0)).as("sya"))
+        sum(col("xq").cast(Dec0)).as("sxa"),
+        sum(col("yq").cast(Dec0)).as("sya"))
       .crossJoin(broadcast(pooled))
       .withColumn("mean_y",
         col("sya").cast("double") / (col("n_users") * lit(1000000L)).cast("double"))
@@ -1400,11 +1377,10 @@ object Statistics {
     * Scale shape: one map-side-combined (type, value) aggregate, a rank
     * window over the distinct-value domain, one per-type reduce. */
   def gini(s: SparkSession, d: String): DataFrame = {
-    val dec0 = DecimalType(38, 0)
     val ev = Tables.events(s, d)
       .filter(col("value").isNotNull && col("value") >= 0)
       .select(col("event_type"),
-        (col("value").cast(DecimalType(24, 6)) * lit(1000000)).cast("long").as("micro"))
+        microExact(col("value")).as("micro"))
     val byVal = ev.groupBy("event_type", "micro").agg(count(lit(1)).as("c"))
     val w = Window.partitionBy("event_type").orderBy("micro")
     byVal
@@ -1414,12 +1390,12 @@ object Statistics {
       .withColumn("coef", lit(2) * col("p") + col("c") - col("n"))
       .groupBy("event_type")
       .agg(first("n").as("n"),
-        sum(col("micro").cast(dec0) * col("c").cast(dec0)).as("sx"),
-        sum(col("micro").cast(dec0) * col("c").cast(dec0) * col("coef").cast(dec0))
+        sum(col("micro").cast(Dec0) * col("c").cast(Dec0)).as("sx"),
+        sum(col("micro").cast(Dec0) * col("c").cast(Dec0) * col("coef").cast(Dec0))
           .as("wsum"))
       .select(col("event_type"), col("n"),
-        (floor(col("wsum").cast("double") / (col("n").cast(dec0) * col("sx")).cast("double")
-          * lit(1000000.0) + lit(0.5)) / lit(1000000.0)).as("gini"))
+        q6(col("wsum").cast("double") / (col("n").cast(Dec0) * col("sx")).cast("double"))
+          .as("gini"))
       .orderBy("event_type")
   }
 
@@ -1443,12 +1419,10 @@ object Statistics {
     * (type, value) aggregate, windows over the per-type DISTINCT-value
     * domain, a ≤10-row explode per type. */
   def lorenzCurve(s: SparkSession, d: String): DataFrame = {
-    val dec0 = DecimalType(38, 0)
-    val q6 = (c: Column) => floor(c * lit(1000000.0) + lit(0.5)) / lit(1000000.0)
     val ev = Tables.events(s, d)
       .filter(col("value").isNotNull && col("value") >= 0)
       .select(col("event_type"),
-        (col("value").cast(DecimalType(24, 6)) * lit(1000000)).cast("long").as("micro"))
+        microExact(col("value")).as("micro"))
     val byVal = ev.groupBy("event_type", "micro").agg(count(lit(1)).as("c"))
     val w = Window.partitionBy("event_type").orderBy("micro")
       .rowsBetween(Window.unboundedPreceding, Window.currentRow)
@@ -1456,10 +1430,10 @@ object Statistics {
     byVal
       .withColumn("cum", sum("c").over(w))
       .withColumn("cumv",
-        sum(col("micro").cast(dec0) * col("c").cast(dec0)).over(w))
+        sum(col("micro").cast(Dec0) * col("c").cast(Dec0)).over(w))
       .withColumn("n", sum("c").over(wp))
       .withColumn("tv",
-        sum(col("micro").cast(dec0) * col("c").cast(dec0)).over(wp))
+        sum(col("micro").cast(Dec0) * col("c").cast(Dec0)).over(wp))
       .withColumn("klo", expr("(10 * (cum - c)) div n + 1"))
       .withColumn("khi", expr("least((10 * cum) div n, CAST(10 AS BIGINT))"))
       .filter(col("khi") >= col("klo"))
@@ -1506,7 +1480,6 @@ object Statistics {
     * windows run over DISTINCT lifetimes — bounded by the study length
     * in days, never the customer count. */
   def kaplanMeier(s: SparkSession, d: String): DataFrame = {
-    val qlnL = (c: Column) => Det.q6(log(c.cast("double"))).cast(DecimalType(18, 6))
     val per = Tables.orders(s, d)
       .groupBy("o_custkey")
       .agg(min(unix_micros(col("o_orderdate").cast("timestamp"))).as("mn"),
@@ -1527,7 +1500,7 @@ object Statistics {
       .withColumn("n_risk", col("n_total") - col("before"))
       .filter(col("d") > 0)
       .withColumn("lterm",
-        when(col("n_risk") > col("d"), qlnL(col("n_risk") - col("d")) - qlnL(col("n_risk")))
+        when(col("n_risk") > col("d"), qln(col("n_risk") - col("d")) - qln(col("n_risk")))
           .otherwise(lit(null).cast(DecimalType(18, 6))))
       // first time the whole risk set dies (if any): survival is exactly 0
       // from there on and the log is undefined — SUM would silently skip
@@ -1566,7 +1539,6 @@ object Statistics {
     * Scale shape: one per-user aggregate (map-side combined), one
     * 2-row arm reduce, one 1-row combine. */
   def abMde(s: SparkSession, d: String): DataFrame = {
-    val dec0 = DecimalType(38, 0)
     val per = Tables.events(s, d).filter(col("value").isNotNull)
       .groupBy("user_id")
       .agg((sum(col("value").cast(DecimalType(24, 6))) * lit(1000000))
@@ -1574,8 +1546,8 @@ object Statistics {
       .withColumn("arm", pmod(col("user_id"), lit(2)))
     val arms = per.groupBy("arm")
       .agg(count(lit(1)).as("n"),
-        sum(col("yq").cast(dec0)).as("sx"),
-        sum(col("yq").cast(dec0) * col("yq").cast(dec0)).as("sxx"))
+        sum(col("yq").cast(Dec0)).as("sx"),
+        sum(col("yq").cast(Dec0) * col("yq").cast(Dec0)).as("sxx"))
     // within-arm sum of squared deviations, micro² -> unit² via 1e12
     val ssd = (col("sxx").cast("double")
       - col("sx").cast("double") * col("sx").cast("double") / col("n").cast("double")
@@ -1583,7 +1555,6 @@ object Statistics {
     val armStats = arms.select(col("arm"), col("n"),
       (col("sx").cast("double") / (col("n") * lit(1000000L)).cast("double")).as("mean"),
       ssd.as("ssd"))
-    val q6 = (c: Column) => floor(c * lit(1000000.0) + lit(0.5)) / lit(1000000.0)
     armStats.groupBy()
       .agg(
         max(when(col("arm") === 0, col("n"))).as("n0"),
@@ -1632,8 +1603,7 @@ object Statistics {
         count(lit(1)).as("observed"))
       .withColumn("n_hat", expr("((n1 + 1) * (n2 + 1)) div (m + 1) - 1"))
       .select(col("n1"), col("n2"), col("m"), col("observed"), col("n_hat"),
-        (floor(col("observed").cast("double") / col("n_hat").cast("double")
-          * lit(1000000.0) + lit(0.5)) / lit(1000000.0)).as("coverage"))
+        q6(col("observed").cast("double") / col("n_hat").cast("double")).as("coverage"))
   }
 
   /** Single best changepoint per event stream — binary segmentation's
@@ -1656,11 +1626,9 @@ object Statistics {
   def changepoint(s: SparkSession, d: String): DataFrame = {
     val daily = Tables.events(s, d).filter(col("value").isNotNull)
       .groupBy(col("event_type"), date_format(col("ts"), "yyyy-MM-dd").as("day"))
-      .agg(sum((col("value").cast(DecimalType(24, 6)) * lit(1000000)).cast("long"))
-        .as("vol"))
+      .agg(sum(microExact(col("value"))).as("vol"))
     val w = Window.partitionBy("event_type").orderBy("day")
     val wAll = Window.partitionBy("event_type")
-    val q6 = (c: Column) => floor(c * lit(1000000.0) + lit(0.5)) / lit(1000000.0)
     val meanL = col("cum").cast("double") / col("t").cast("double")
     val meanR = (col("tot") - col("cum")).cast("double") / (col("n") - col("t")).cast("double")
     val scored = daily
@@ -1703,12 +1671,11 @@ object Statistics {
     val k = 50
     // integer micro-log: ln of an exact integer, quantized to an exact
     // BIGINT — downstream arithmetic never touches a float until the end
-    val lq = (c: Column) =>
-      floor(log(c.cast("double")) * lit(1000000.0) + lit(0.5)).cast("long")
+    val lq = (c: Column) => micro(log(c.cast("double")))
     val bv = Tables.events(s, d)
       .filter(col("value").isNotNull && col("value") > 0)
       .select(col("event_type"),
-        (col("value").cast(DecimalType(24, 6)) * lit(1000000)).cast("long").as("micro"))
+        microExact(col("value")).as("micro"))
       .groupBy("event_type", "micro").agg(count(lit(1)).as("cnt"))
     val w = Window.partitionBy("event_type").orderBy(col("micro").desc)
     val sel = bv
@@ -1723,9 +1690,8 @@ object Statistics {
       .withColumn("spread", col("slnx") - col("k_used") * lq(col("xk")))
       .select(col("event_type"), col("k_used").as("k"), col("xk").as("xk_micro"),
         when(col("spread") > 0,
-          floor((col("k_used") * lit(1000000L)).cast("double")
-            / col("spread").cast("double") * lit(1000000.0) + lit(0.5))
-            / lit(1000000.0)).as("alpha"))
+          q6((col("k_used") * lit(1000000L)).cast("double")
+            / col("spread").cast("double"))).as("alpha"))
       .orderBy("event_type")
   }
 
@@ -1755,7 +1721,7 @@ object Statistics {
     anovaFromMeasure(
       Tables.events(s, d).filter(col("value").isNotNull)
         .select(col("event_type"),
-          (col("value").cast(DecimalType(24, 6)) * lit(1000000)).cast("long").as("micro"))
+          microExact(col("value")).as("micro"))
         .select(col("event_type"), expr("micro div 10000").as("m")),
       "f")
 
@@ -1764,11 +1730,10 @@ object Statistics {
     * [[levene]], which runs the identical F on |v − median| deviations
     * (Brown–Forsythe form). `statName` labels the F column. */
   private def anovaFromMeasure(ev: DataFrame, statName: String): DataFrame = {
-    val dec0 = DecimalType(38, 0)
     val g = ev.groupBy("event_type").agg(
       count(lit(1)).as("ng"),
-      sum(col("m").cast(dec0)).as("sg"),
-      sum(col("m").cast(dec0) * col("m").cast(dec0)).as("qg"))
+      sum(col("m").cast(Dec0)).as("sg"),
+      sum(col("m").cast(Dec0) * col("m").cast(Dec0)).as("qg"))
     val t = g.agg(
       count(lit(1)).as("k"),
       sum("ng").as("n"),
@@ -1782,11 +1747,9 @@ object Statistics {
     sAgg.select(
       col("k").cast("long").as("k"), col("n").cast("long").as("n"),
       (col("k") - 1).cast("long").as("df1"), (col("n") - col("k")).cast("long").as("df2"),
-      (floor((col("ssb").cast("double") / (col("k") - 1).cast("double")) /
-        (col("ssw").cast("double") / (col("n") - col("k")).cast("double"))
-        * lit(1000000.0) + lit(0.5)) / lit(1000000.0)).as(statName),
-      (floor(col("ssb").cast("double") / (col("ssb") + col("ssw")).cast("double")
-        * lit(1000000.0) + lit(0.5)) / lit(1000000.0)).as("eta2"))
+      q6((col("ssb").cast("double") / (col("k") - 1).cast("double")) /
+        (col("ssw").cast("double") / (col("n") - col("k")).cast("double"))).as(statName),
+      q6(col("ssb").cast("double") / (col("ssb") + col("ssw")).cast("double")).as("eta2"))
   }
 
   /** Brown–Forsythe/Levene homogeneity-of-variance test across event
@@ -1850,9 +1813,7 @@ object Statistics {
     val ext = ev.agg(min("value").as("lo"), max("value").as("hi"))
     val bucketed = graft.util.Ckpt.stage(ev.crossJoin(broadcast(ext))
       .withColumn("bkt",
-        when(col("hi") === col("lo"), lit(0)).otherwise(
-          least(lit(nb - 1),
-            floor((col("value") - col("lo")) * nb / (col("hi") - col("lo"))).cast("int"))))
+        equalWidthBucket(col("value"), col("lo"), col("hi"), nb))
       .drop("lo", "hi"))
     val wb = Window.orderBy("bkt")
       .rowsBetween(Window.unboundedPreceding, Window.currentRow)
@@ -1876,15 +1837,13 @@ object Statistics {
       .withColumn("nv", coalesce(lead("value", 1).over(wl), col("nextmin")))
       .filter(col("nv").isNotNull)
       .withColumn("term",
-        (floor(abs(col("cum1") * col("n2") - col("cum2") * col("n1")).cast("double")
-          * (col("nv") - col("value")) * lit(1000000.0) + lit(0.5))
-          / lit(1000000.0)).cast(dec6))
+        q6(abs(col("cum1") * col("n2") - col("cum2") * col("n1")).cast("double")
+          * (col("nv") - col("value"))).cast(dec6))
     seg.groupBy("n1", "n2")
       .agg(sum("term").as("wsum"))
       .select(col("n1"), col("n2"),
-        (floor(col("wsum").cast("double") /
-          (col("n1").cast(DecimalType(38, 0)) * col("n2").cast(DecimalType(38, 0)))
-            .cast("double") * lit(1000000.0) + lit(0.5)) / lit(1000000.0)).as("emd"))
+        q6(col("wsum").cast("double") /
+          (col("n1").cast(Dec0) * col("n2").cast(Dec0)).cast("double")).as("emd"))
   }
 
   /** Energy distance between the click and view value distributions —
@@ -1909,25 +1868,20 @@ object Statistics {
     * windows; one ≤3-integer reduce at the end. No global sort, no
     * unpartitioned window. */
   def energyDistance(s: SparkSession, d: String): DataFrame = {
-    val nb = KsBuckets
-    val dec0 = DecimalType(38, 0)
-    val q6 = (c: Column) => floor(c * lit(1000000.0) + lit(0.5)) / lit(1000000.0)
     val ev = graft.util.Ckpt.stage(Tables.events(s, d)
       .filter(col("event_type").isin("click", "view") && col("value").isNotNull)
       .groupBy("value")
       .agg(
         sum((col("event_type") === "click").cast("long")).as("c1"),
         sum((col("event_type") === "view").cast("long")).as("c2"))
-      .withColumn("m", q6micro(col("value"))))
+      .withColumn("m", micro(col("value"))))
     val ext = ev.agg(min("value").as("lo"), max("value").as("hi"))
     val bucketed = graft.util.Ckpt.stage(ev.crossJoin(broadcast(ext))
       .withColumn("bkt",
-        when(col("hi") === col("lo"), lit(0)).otherwise(
-          least(lit(nb - 1),
-            floor((col("value") - col("lo")) * nb / (col("hi") - col("lo"))).cast("int"))))
+        equalWidthBucket(col("value"), col("lo"), col("hi"), KsBuckets))
       .drop("lo", "hi"))
-    val cm1 = col("c1").cast(dec0) * col("m").cast(dec0)
-    val cm2 = col("c2").cast(dec0) * col("m").cast(dec0)
+    val cm1 = col("c1").cast(Dec0) * col("m").cast(Dec0)
+    val cm2 = col("c2").cast(Dec0) * col("m").cast(Dec0)
     val wb = Window.orderBy("bkt")
       .rowsBetween(Window.unboundedPreceding, Window.currentRow)
     val offs = bucketed.groupBy("bkt")
@@ -1949,35 +1903,35 @@ object Statistics {
       .withColumn("cum2", col("off2") + sum("c2").over(w))
       .withColumn("cms1", col("offm1") + sum(cm1).over(w))
       .withColumn("cms2", col("offm2") + sum(cm2).over(w))
-    val md = col("m").cast(dec0)
+    val md = col("m").cast(Dec0)
     // strictly-below / strictly-above integers per side (ties at the
     // row's own value contribute |m - m| = 0 and are excluded exactly)
     def bracket(less: Column, sumLess: Column, greater: Column, sumGr: Column) =
-      (md * less.cast(dec0) - sumLess) + (sumGr - md * greater.cast(dec0))
+      (md * less.cast(Dec0) - sumLess) + (sumGr - md * greater.cast(Dec0))
     val terms = seg.select(
-      (col("c1").cast(dec0) * bracket(
+      (col("c1").cast(Dec0) * bracket(
         col("cum2") - col("c2"), col("cms2") - cm2,
         col("n2") - col("cum2"), col("t2") - col("cms2"))).as("xy"),
-      (col("c1").cast(dec0) * bracket(
+      (col("c1").cast(Dec0) * bracket(
         col("cum1") - col("c1"), col("cms1") - cm1,
         col("n1") - col("cum1"), col("t1") - col("cms1"))).as("xx"),
-      (col("c2").cast(dec0) * bracket(
+      (col("c2").cast(Dec0) * bracket(
         col("cum2") - col("c2"), col("cms2") - cm2,
         col("n2") - col("cum2"), col("t2") - col("cms2"))).as("yy"),
       col("n1"), col("n2"))
     val exy = col("sxy").cast("double") /
-      (col("n1").cast(dec0) * col("n2").cast(dec0)).cast("double") / lit(1000000.0)
+      (col("n1").cast(Dec0) * col("n2").cast(Dec0)).cast("double") / lit(1000000.0)
     val exx = col("sxx").cast("double") /
-      (col("n1").cast(dec0) * col("n1").cast(dec0)).cast("double") / lit(1000000.0)
+      (col("n1").cast(Dec0) * col("n1").cast(Dec0)).cast("double") / lit(1000000.0)
     val eyy = col("syy").cast("double") /
-      (col("n2").cast(dec0) * col("n2").cast(dec0)).cast("double") / lit(1000000.0)
+      (col("n2").cast(Dec0) * col("n2").cast(Dec0)).cast("double") / lit(1000000.0)
     val d2 = lit(2.0) * exy - exx - eyy
     terms.groupBy("n1", "n2")
       .agg(sum("xy").as("sxy"), sum("xx").as("sxx"), sum("yy").as("syy"))
       .select(col("n1"), col("n2"),
         q6(exy).as("e_xy"), q6(exx).as("e_xx"), q6(eyy).as("e_yy"),
         q6(d2).as("energy_dist"),
-        q6((col("n1").cast(dec0) * col("n2").cast(dec0)).cast("double") /
+        q6((col("n1").cast(Dec0) * col("n2").cast(Dec0)).cast("double") /
           (col("n1") + col("n2")).cast("double") * d2).as("e_stat"))
   }
 
@@ -2002,26 +1956,24 @@ object Statistics {
     * arithmetic runs per customer row against a broadcast ≤5-row
     * per-segment totals frame. */
   def theilIndex(s: SparkSession, d: String): DataFrame = {
-    val dec0 = DecimalType(38, 0)
     val x = Tables.orders(s, d)
       .select(col("o_custkey"),
-        (col("o_totalprice").cast(DecimalType(24, 6)) * lit(1000000)).cast("long").as("xm"))
+        microExact(col("o_totalprice")).as("xm"))
       .groupBy("o_custkey").agg(sum("xm").as("x"))
       .join(broadcast(Tables.customer(s, d).select(col("c_custkey"), col("c_mktsegment"))),
         col("o_custkey") === col("c_custkey"))
       .select(col("c_mktsegment").as("seg"), col("x"))
     val t = x.groupBy("seg")
-      .agg(count(lit(1)).as("n"), sum(col("x").cast(dec0)).as("stot"))
+      .agg(count(lit(1)).as("n"), sum(col("x").cast(Dec0)).as("stot"))
     x.join(broadcast(t), "seg")
       .withColumn("pm", expr("CAST((CAST(x AS DECIMAL(38,0)) * 1000000) div stot AS BIGINT)"))
       .withColumn("l",
-        Det.q6(log((col("x").cast(dec0) * col("n").cast(dec0)).cast("double") /
+        Det.q6(log((col("x").cast(Dec0) * col("n").cast(Dec0)).cast("double") /
           col("stot").cast("double"))).cast(DecimalType(18, 6)))
       .groupBy("seg")
       .agg(max("n").as("n_cust"), sum(col("pm") * col("l")).as("tsum"))
       .select(col("seg").as("c_mktsegment"), col("n_cust"),
-        (floor(col("tsum").cast("double") / lit(1000000.0)
-          * lit(1000000.0) + lit(0.5)) / lit(1000000.0)).as("theil_t"))
+        q6(col("tsum").cast("double") / lit(1000000.0)).as("theil_t"))
       .orderBy("c_mktsegment")
   }
 
@@ -2046,7 +1998,7 @@ object Statistics {
   def weightedMedian(s: SparkSession, d: String): DataFrame = {
     val bv = Tables.lineitem(s, d)
       .select(col("l_returnflag"), col("l_quantity").as("q"),
-        (col("l_extendedprice").cast(DecimalType(24, 6)) * lit(1000000)).cast("long").as("wt"))
+        microExact(col("l_extendedprice")).as("wt"))
       .groupBy("l_returnflag", "q").agg(sum("wt").as("w"))
     val win = Window.partitionBy("l_returnflag").orderBy("q")
     bv
@@ -2100,10 +2052,9 @@ object Statistics {
         sum((col("c1") === col("c2")).cast("long")).as("tc"),
         sum((col("v1") === col("v2")).cast("long")).as("tv"))
     pairs.select(col("n0"), col("conc"), col("disc"), col("tc"), col("tv"),
-      (floor((col("conc") - col("disc")).cast("double") /
+      q6((col("conc") - col("disc")).cast("double") /
         (sqrt((col("n0") - col("tc")).cast("double")) *
-          sqrt((col("n0") - col("tv")).cast("double")))
-        * lit(1000000.0) + lit(0.5)) / lit(1000000.0)).as("tau_b"))
+          sqrt((col("n0") - col("tv")).cast("double")))).as("tau_b"))
   }
 
   /** Wald–Wolfowitz runs test on the SIGN of day-over-day volume change
@@ -2149,9 +2100,8 @@ object Statistics {
     runs
       .filter(col("npos") > 0 && col("nneg") > 0 && n > 2)
       .select(col("event_type"), col("npos"), col("nneg"), col("r"),
-        (floor(mu * lit(1000000.0) + lit(0.5)) / lit(1000000.0)).as("mu"),
-        (floor((col("r").cast("double") - mu) / sqrt(sig2)
-          * lit(1000000.0) + lit(0.5)) / lit(1000000.0)).as("z"))
+        q6(mu).as("mu"),
+        q6((col("r").cast("double") - mu) / sqrt(sig2)).as("z"))
       .orderBy("event_type")
   }
 
@@ -2196,8 +2146,7 @@ object Statistics {
       .agg(max("nt").as("n_triples"), max("n_patterns").as("n_patterns"),
         sum(col("cnt") * col("l")).as("hsum"))
       .select(col("event_type"), col("n_triples"), col("n_patterns"),
-        (floor(-col("hsum").cast("double") / col("n_triples").cast("double")
-          * lit(1000000.0) + lit(0.5)) / lit(1000000.0)).as("perm_entropy"))
+        q6(-col("hsum").cast("double") / col("n_triples").cast("double")).as("perm_entropy"))
       .orderBy("event_type")
   }
 
@@ -2227,8 +2176,6 @@ object Statistics {
     * the midrank frame joins back to per-type counts ON the value key
     * (both sides already value-partitioned), then ONE k-row reduce. */
   def kruskalWallis(s: SparkSession, d: String): DataFrame = {
-    val nb = KsBuckets
-    val dec0 = DecimalType(38, 0)
     val evt = graft.util.Ckpt.stage(Tables.events(s, d)
       .filter(col("value").isNotNull)
       .groupBy("value", "event_type").agg(count(lit(1)).as("ct")))
@@ -2236,9 +2183,7 @@ object Statistics {
     val ext = ev.agg(min("value").as("lo"), max("value").as("hi"))
     val bucketed = ev.crossJoin(broadcast(ext))
       .withColumn("bkt",
-        when(col("hi") === col("lo"), lit(0)).otherwise(
-          least(lit(nb - 1),
-            floor((col("value") - col("lo")) * nb / (col("hi") - col("lo"))).cast("int"))))
+        equalWidthBucket(col("value"), col("lo"), col("hi"), KsBuckets))
       .drop("lo", "hi")
     val wb = Window.orderBy("bkt")
       .rowsBetween(Window.unboundedPreceding, Window.currentRow)
@@ -2254,14 +2199,14 @@ object Statistics {
       .groupBy("event_type")
       .agg(sum("ct").as("nt"), sum(col("ct") * col("mid2")).as("r2"))
     val glob = ranked.agg(sum("c").as("n"),
-      (sum(col("c").cast(dec0) * col("c").cast(dec0) * col("c").cast(dec0)) -
+      (sum(col("c").cast(Dec0) * col("c").cast(Dec0) * col("c").cast(Dec0)) -
         sum(col("c"))).cast("long").as("tie_t"))
     // q6big, not q6: term ≈ r2²/(4·nt) grows with n² — past |x| ≥ 1e12
     // Spark's LONG floor would wrap (the r10 sf1 failure; PARITY §4)
     // while the 10⁻⁶ quantum is below the double's own ulp anyway
     val terms = perType.crossJoin(broadcast(glob))
       .withColumn("term",
-        Det.q6big((col("r2").cast(dec0) * col("r2").cast(dec0)).cast("double") /
+        Det.q6big((col("r2").cast(Dec0) * col("r2").cast(Dec0)).cast("double") /
           (lit(4.0) * col("nt").cast("double"))).cast(DecimalType(38, 6)))
     val agg = terms.groupBy("n", "tie_t")
       .agg(count(lit(1)).as("k"), sum("term").as("sq"))
@@ -2269,8 +2214,8 @@ object Statistics {
     val h0 = lit(12.0) * col("sq").cast("double") /
       (nD * (col("n") + 1).cast("double")) - lit(3.0) * (col("n") + 1).cast("double")
     val corr = lit(1.0) - col("tie_t").cast("double") /
-      (col("n").cast(dec0) * col("n").cast(dec0) * col("n").cast(dec0) -
-        col("n").cast(dec0)).cast("double")
+      (col("n").cast(Dec0) * col("n").cast(Dec0) * col("n").cast(Dec0) -
+        col("n").cast(Dec0)).cast("double")
     agg.select(col("k"), col("n"), col("tie_t"), (col("k") - 1).as("df"),
       Det.q6(h0 / corr).as("h"))
   }
@@ -2354,8 +2299,6 @@ object Statistics {
     * broadcast extent + ≤[[KsBuckets]]-row offsets, per-bucket windows,
     * one global reduce. Events are never globally sorted. */
   def cvmDrift(s: SparkSession, d: String): DataFrame = {
-    val nb = KsBuckets
-    val dec0 = DecimalType(38, 0)
     val ev = graft.util.Ckpt.stage(Tables.events(s, d)
       .filter(col("event_type").isin("click", "view") && col("value").isNotNull)
       .groupBy("value")
@@ -2365,9 +2308,7 @@ object Statistics {
     val ext = ev.agg(min("value").as("lo"), max("value").as("hi"))
     val bucketed = ev.crossJoin(broadcast(ext))
       .withColumn("bkt",
-        when(col("hi") === col("lo"), lit(0)).otherwise(
-          least(lit(nb - 1),
-            floor((col("value") - col("lo")) * nb / (col("hi") - col("lo"))).cast("int"))))
+        equalWidthBucket(col("value"), col("lo"), col("hi"), KsBuckets))
       .drop("lo", "hi")
     val wb = Window.orderBy("bkt")
       .rowsBetween(Window.unboundedPreceding, Window.currentRow)
@@ -2383,13 +2324,13 @@ object Statistics {
       .crossJoin(broadcast(ev.agg(sum("c1").as("n1"), sum("c2").as("n2"))))
       .withColumn("cum1", col("off1") + sum("c1").over(w))
       .withColumn("cum2", col("off2") + sum("c2").over(w))
-      .withColumn("wc", (col("c1") + col("c2")).cast(dec0) *
-        gap.cast(dec0) * gap.cast(dec0))
+      .withColumn("wc", (col("c1") + col("c2")).cast(Dec0) *
+        gap.cast(Dec0) * gap.cast(Dec0))
       .groupBy("n1", "n2")
       .agg(count(lit(1)).as("n_values"), sum("wc").as("t_scaled"))
     val n = col("n1") + col("n2")
-    val den = n.cast(dec0) * n.cast(dec0) *
-      col("n1").cast(dec0) * col("n2").cast(dec0)
+    val den = n.cast(Dec0) * n.cast(Dec0) *
+      col("n1").cast(Dec0) * col("n2").cast(Dec0)
     t.select(col("n1"), col("n2"), col("n_values"),
       Det.q6(col("t_scaled").cast("double") / den.cast("double")).as("cvm"))
   }
@@ -2534,7 +2475,7 @@ object Statistics {
       // engines (Spark floor returns LONG; magnitudes stay ≪ 2⁶³), and
       // the hot aggregation becomes two BIGINT sums — the replica mean
       // is then two IEEE ops on identical exact integers
-      .withColumn("vm", floor(col("value") * lit(1000000.0) + lit(0.5)))
+      .withColumn("vm", micro(col("value")))
       .groupBy("event_type", "b")
       .agg(sum("w").as("sw"), sum(col("w") * col("vm")).as("swv"))
       .withColumn("mean_b",
@@ -2575,12 +2516,11 @@ object Statistics {
     * sufficient statistic needs x̄ first), both map-side-combined to a
     * 5-row frame; the mean frame broadcasts. No row-level shuffle. */
   def jarqueBera(s: SparkSession, d: String): DataFrame = {
-    val dec0 = DecimalType(38, 0)
     val ev = Tables.events(s, d).filter(col("value").isNotNull)
       .select(col("event_type"), col("value"))
     val mu = ev.groupBy(col("event_type").as("t"))
-      .agg((floor(davg(col("value")) * 1000000 + lit(0.5)) / 1000000).as("mu"))
-    val dq = floor((col("value") - col("mu")) * 1000 + lit(0.5)).cast(dec0)
+      .agg(q6(davg(col("value"))).as("mu"))
+    val dq = floor((col("value") - col("mu")) * 1000 + lit(0.5)).cast(Dec0)
     val sums = ev.join(broadcast(mu), col("event_type") === col("t"))
       .select(col("event_type"), dq.as("dq"))
       .groupBy("event_type")
@@ -2591,7 +2531,6 @@ object Statistics {
     val nd = col("n").cast("double")
     val g1 = col("s3") * sqrt(nd) / (col("s2") * sqrt(col("s2")))
     val g2 = col("s4") * nd / (col("s2") * col("s2"))
-    val q6 = (c: Column) => floor(c * lit(1000000.0) + lit(0.5)) / lit(1000000.0)
     sums.filter(col("n") > 1 && col("s2") > 0)
       .select(col("event_type"), col("n"),
         q6(g1).as("skew"),
@@ -2625,18 +2564,16 @@ object Statistics {
     * partials). Expressions are byte-identical to the original
     * q_ljung_box body — the refactor moved, not changed, them. */
   private def lagCorr(s: SparkSession, d: String): DataFrame = {
-    val dec0 = DecimalType(38, 0)
     val daily = graft.util.Ckpt.stage(Tables.events(s, d)
       .filter(col("value").isNotNull)
       .groupBy(col("event_type"), to_date(col("ts")).as("day"))
-      .agg(sum(q6micro(col("value"))).as("x")))
+      .agg(sum(micro(col("value"))).as("x")))
     val tt = daily.groupBy(col("event_type").as("t"))
       .agg(sum("x").as("tot"), count(lit(1)).as("nd"))
     val w = Window.partitionBy("event_type").orderBy("day")
-    val q6 = (c: Column) => floor(c * lit(1000000.0) + lit(0.5)) / lit(1000000.0)
     val lagged = daily.join(broadcast(tt), col("event_type") === col("t"))
       .withColumn("y",
-        col("nd").cast(dec0) * col("x").cast(dec0) - col("tot").cast(dec0))
+        col("nd").cast(Dec0) * col("x").cast(Dec0) - col("tot").cast(Dec0))
       .withColumn("y1", lead("y", 1).over(w))
       .withColumn("y2", lead("y", 2).over(w))
       .withColumn("y3", lead("y", 3).over(w))
@@ -2653,7 +2590,6 @@ object Statistics {
   }
 
   def ljungBox(s: SparkSession, d: String): DataFrame = {
-    val q6 = (c: Column) => floor(c * lit(1000000.0) + lit(0.5)) / lit(1000000.0)
     val nd = col("n_days").cast("double")
     lagCorr(s, d)
       .withColumn("q_lb", q6(nd * (nd + lit(2.0)) *
@@ -2684,7 +2620,6 @@ object Statistics {
     * (type, day) aggregate, calendar-bounded lag windows, then ≤5-row
     * scalar algebra. */
   def pacf(s: SparkSession, d: String): DataFrame = {
-    val q6 = (c: Column) => floor(c * lit(1000000.0) + lit(0.5)) / lit(1000000.0)
     val base = lagCorr(s, d)
       .withColumn("den2", lit(1.0) - col("r1") * col("r1"))
       .withColumn("p2", when(col("den2") === lit(0.0), lit(null).cast("double"))
@@ -2724,13 +2659,11 @@ object Statistics {
     * map-side-combined to 5 rows; the mean frame broadcasts — byte-
     * identical shape to [[jarqueBera]]. */
   def grubbs(s: SparkSession, d: String): DataFrame = {
-    val dec0 = DecimalType(38, 0)
     val ev = Tables.events(s, d).filter(col("value").isNotNull)
       .select(col("event_type"), col("value"))
     val mu = ev.groupBy(col("event_type").as("t"))
-      .agg((floor(davg(col("value")) * 1000000 + lit(0.5)) / 1000000).as("mu"))
-    val dq = floor((col("value") - col("mu")) * 1000 + lit(0.5)).cast(dec0)
-    val q6 = (c: Column) => floor(c * lit(1000000.0) + lit(0.5)) / lit(1000000.0)
+      .agg(q6(davg(col("value"))).as("mu"))
+    val dq = floor((col("value") - col("mu")) * 1000 + lit(0.5)).cast(Dec0)
     ev.join(broadcast(mu), col("event_type") === col("t"))
       .select(col("event_type"), dq.as("dq"))
       .groupBy("event_type")
@@ -2774,7 +2707,7 @@ object Statistics {
     val daily = graft.util.Ckpt.stage(Tables.events(s, d)
       .filter(col("value").isNotNull)
       .groupBy(to_date(col("ts")).as("day"))
-      .agg(sum(q6micro(col("value"))).as("x")))
+      .agg(sum(micro(col("value"))).as("x")))
     val tot = daily.agg(sum("x").as("tt"), count(lit(1)).as("nd"))
     val wd = Window.orderBy("day")
     val curve = graft.util.Ckpt.stage(daily.crossJoin(broadcast(tot))
@@ -2795,8 +2728,7 @@ object Statistics {
         col("nd").as("n_days"),
         date_format(col("alarm_day"), "yyyy-MM-dd").as("alarm_day"),
         col("ph_best").as("ph_scaled"),
-        (floor(col("ph_best").cast("double") /
-          (col("nd").cast("double") * lit(1000000.0)) * 1000000 + lit(0.5)) / 1000000)
+        q6(col("ph_best").cast("double") / (col("nd").cast("double") * lit(1000000.0)))
           .as("ph"),
         (col("ph_best").cast("double") >
           (col("nd").cast("double") * lit(1000000.0) * lit(PhLambda))).cast("int")
@@ -2938,9 +2870,8 @@ object Statistics {
   /** The two-sample log-rank test — see [[logRankStat]] for the shared
     * O/E/V machinery; this emits the χ² readout. */
   def logRank(s: SparkSession, d: String): DataFrame = {
-    val dec0 = DecimalType(38, 0)
-    val num = (col("o_a_long").cast(dec0) * lit(1000000L).cast(dec0) -
-      col("e_micro").cast(dec0))
+    val num = (col("o_a_long").cast(Dec0) * lit(1000000L).cast(Dec0) -
+      col("e_micro").cast(Dec0))
     logRankStat(s, d)
       .select(
         lit("AUTOMOBILE").as("seg_a"), lit("BUILDING").as("seg_b"),
@@ -2949,7 +2880,7 @@ object Statistics {
         Det.q6(col("v_micro").cast("double") / lit(1000000.0)).as("v"),
         when(col("v_micro") === lit(0L), lit(null).cast("double"))
           .otherwise(Det.q6((num * num).cast("double") /
-            (col("v_micro").cast(dec0) * lit(1000000L).cast(dec0)).cast("double"))).as("chi2"))
+            (col("v_micro").cast(Dec0) * lit(1000000L).cast(Dec0)).cast("double"))).as("chi2"))
   }
 
   /** Hazard ratio between the two [[logRank]] segments, estimated the
@@ -2969,9 +2900,8 @@ object Statistics {
     * Scale shape: identical to [[logRank]] — the duration-bounded grid,
     * one extra integer column through the same aggregate. */
   def hazardRatio(s: SparkSession, d: String): DataFrame = {
-    val dec0 = DecimalType(38, 0)
-    val num = col("o_a_long").cast(dec0) * col("eb_micro").cast(dec0)
-    val den = col("o_b_long").cast(dec0) * col("e_micro").cast(dec0)
+    val num = col("o_a_long").cast(Dec0) * col("eb_micro").cast(Dec0)
+    val den = col("o_b_long").cast(Dec0) * col("e_micro").cast(Dec0)
     logRankStat(s, d)
       .select(
         lit("AUTOMOBILE").as("seg_a"), lit("BUILDING").as("seg_b"),
@@ -3016,9 +2946,9 @@ object Statistics {
       .groupBy(to_date(col("ts")).as("day"))
       .agg(
         coalesce(sum(when(col("event_type") === "click",
-          q6micro(col("value")))), lit(0L)).as("sc"),
+          micro(col("value")))), lit(0L)).as("sc"),
         coalesce(sum(when(col("event_type") === "view",
-          q6micro(col("value")))), lit(0L)).as("sv"))
+          micro(col("value")))), lit(0L)).as("sv"))
       .withColumn("diff", col("sc") - col("sv"))
       .filter(col("diff") =!= 0L)
     val ties = daily.groupBy(abs(col("diff")).as("adiff"))
@@ -3037,7 +2967,6 @@ object Statistics {
     val n = col("n").cast("double")
     val var12 = (lit(2L) * col("n") * (col("n") + 1L) * (lit(2L) * col("n") + 1L)
       - col("tie3")).cast("double")
-    val q6 = (c: Column) => floor(c * lit(1000000.0) + lit(0.5)) / lit(1000000.0)
     agg.filter(col("n") > 0 && var12 > 0)
       .select(col("n").as("n_pairs"),
         (col("w2p").cast("double") / lit(2.0)).as("w_plus"),
@@ -3076,7 +3005,6 @@ object Statistics {
     * Scale shape: the KM lineage + one lag window over the
     * duration-bounded curve + a 1-row reduce. */
   def rmst(s: SparkSession, d: String): DataFrame = {
-    val q6 = (c: Column) => floor(c * lit(1000000.0) + lit(0.5)) / lit(1000000.0)
     val w = Window.orderBy("dur_days")
     kaplanMeier(s, d)
       .withColumn("prev_surv", lag("surv", 1, 1.0).over(w))
@@ -3105,23 +3033,21 @@ object Statistics {
     * rows), a broadcast self-join over the ≤|types|² pair grid —
     * the events table is scanned once and never shuffled. */
   def cohensD(s: SparkSession, d: String): DataFrame = {
-    val dec0 = DecimalType(38, 0)
-    val q6 = (c: Column) => floor(c * lit(1000000.0) + lit(0.5)) / lit(1000000.0)
     val st = Tables.events(s, d).filter(col("value").isNotNull)
-      .select(col("event_type"), q6micro(col("value")).as("m"))
+      .select(col("event_type"), micro(col("value")).as("m"))
       .groupBy("event_type")
       .agg(count(lit(1)).as("n"), sum("m").as("sm"),
-        sum(col("m").cast(dec0) * col("m").cast(dec0)).as("sm2"))
+        sum(col("m").cast(Dec0) * col("m").cast(Dec0)).as("sm2"))
     val a = st.select(col("event_type").as("type_a"), col("n").as("n_a"),
       col("sm").as("sm_a"), col("sm2").as("sm2_a"))
     val b = st.select(col("event_type").as("type_b"), col("n").as("n_b"),
       col("sm").as("sm_b"), col("sm2").as("sm2_b"))
     val meanA = col("sm_a").cast("double") / col("n_a").cast("double")
     val meanB = col("sm_b").cast("double") / col("n_b").cast("double")
-    val aA = (col("n_a").cast(dec0) * col("sm2_a") -
-      col("sm_a").cast(dec0) * col("sm_a").cast(dec0)).cast("double")
-    val aB = (col("n_b").cast(dec0) * col("sm2_b") -
-      col("sm_b").cast(dec0) * col("sm_b").cast(dec0)).cast("double")
+    val aA = (col("n_a").cast(Dec0) * col("sm2_a") -
+      col("sm_a").cast(Dec0) * col("sm_a").cast(Dec0)).cast("double")
+    val aB = (col("n_b").cast(Dec0) * col("sm2_b") -
+      col("sm_b").cast(Dec0) * col("sm_b").cast(Dec0)).cast("double")
     val sp = sqrt((aA / col("n_a").cast("double") + aB / col("n_b").cast("double")) /
       (col("n_a") + col("n_b") - 2).cast("double"))
     val dEff = (meanA - meanB) / sp

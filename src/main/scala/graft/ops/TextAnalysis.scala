@@ -1,6 +1,7 @@
 package graft.ops
 
 import graft.util.Det
+import graft.util.Det.{Dec0, qln}
 import graft.Tables
 import graft.functions.StringNgrams
 import graft.functions.TextFeatures._
@@ -276,7 +277,6 @@ object TextAnalysis {
     * train); bigram multisets join only on candidate pairs; the per-doc
     * argmax is a top-1 window over the candidate frame. */
   def rougeOverlap(s: SparkSession, d: String): DataFrame = {
-    val q6 = (c: Column) => floor(c * lit(1000000.0) + lit(0.5)) / lit(1000000.0)
     val grams = Tables.documents(s, d)
       .select(col("doc_id"), col("source"),
         explode(StringNgrams.ngrams(words(col("text")), 5)).as("gram"))
@@ -307,7 +307,7 @@ object TextAnalysis {
       .join(refTot, "ed")
       .select(col("ed").as("doc_id"), col("td").as("match_doc"),
         col("n_shared5"), col("clip"), col("ref_bigrams"),
-        q6(col("clip").cast("double") / col("ref_bigrams").cast("double"))
+        Det.q6(col("clip").cast("double") / col("ref_bigrams").cast("double"))
           .as("rouge2"))
       .orderBy("doc_id")
   }
@@ -504,9 +504,6 @@ object TextAnalysis {
     // corpus scale lands some value on a 6-dp rounding boundary (observed
     // 10/19k cells at sf1); ln over the integer count domain is verified
     // bit-identical at 6 dp across Spark and DuckDB for counts ≤ 2M
-    val qln = (c: org.apache.spark.sql.Column) =>
-      Det.q6(log(c.cast("double")))
-        .cast(org.apache.spark.sql.types.DecimalType(18, 6))
     tf.join(broadcast(vocab), "term")
       .crossJoin(broadcast(n))
       .withColumn("sur", qln(col("n_total")) - qln(col("ct")))
@@ -591,9 +588,6 @@ object TextAnalysis {
     val v = Tables.documents(s, d)
       .select(explode(wf).as("term"))
       .agg(countDistinct("term").as("v"))
-    val qln = (c: Column) =>
-      Det.q6(log(c.cast("double")))
-        .cast(org.apache.spark.sql.types.DecimalType(18, 6))
     tf.join(broadcast(c12), "bg")
       .withColumn("w1", substring_index(col("bg"), " ", 1))
       .join(broadcast(c1), "w1")
@@ -629,7 +623,6 @@ object TextAnalysis {
     * (vocabulary-bounded); history/continuation rollups aggregate that
     * table, broadcast back; one TakeOrdered(20). */
   def kneserNey(s: SparkSession, d: String): DataFrame = {
-    val q6 = (c: Column) => floor(c * lit(1000000.0) + lit(0.5)) / lit(1000000.0)
     val wf = filter(words(col("text")), x => x =!= "")
     val c12 = graft.util.Ckpt.stage(Tables.documents(s, d)
       .select(explode(StringNgrams.ngrams(wf, 2)).as("bg"))
@@ -648,8 +641,8 @@ object TextAnalysis {
       .crossJoin(broadcast(tot))
       .select(col("bg").as("bigram"), col("c12"), col("c1"),
         col("nfw").as("n_followers"), col("nbw").as("n_contexts"),
-        q6(pCont).as("p_cont"), q6(lam).as("lambda"),
-        q6((col("c12").cast("double") - lit(0.75)) / c1d + lam * pCont)
+        Det.q6(pCont).as("p_cont"), Det.q6(lam).as("lambda"),
+        Det.q6((col("c12").cast("double") - lit(0.75)) / c1d + lam * pCont)
           .as("p_kn"))
       .orderBy(col("c12").desc, col("bigram").asc)
       .limit(20)
@@ -673,10 +666,6 @@ object TextAnalysis {
     * Scale shape: the corpus bigram table + its history rollup
     * (vocabulary-bounded, broadcast back), one 1-row reduce. */
   def condEntropy(s: SparkSession, d: String): DataFrame = {
-    val qln = (c: Column) =>
-      Det.q6(log(c.cast("double")))
-        .cast(org.apache.spark.sql.types.DecimalType(18, 6))
-    val q6 = (c: Column) => floor(c * lit(1000000.0) + lit(0.5)) / lit(1000000.0)
     val wf = filter(words(col("text")), x => x =!= "")
     val c12 = Tables.documents(s, d)
       .select(explode(StringNgrams.ngrams(wf, 2)).as("bg"))
@@ -688,7 +677,7 @@ object TextAnalysis {
         (col("c12") * (qln(col("c1")) - qln(col("c12")))).as("term"))
       .agg(sum("c12").as("n_bigrams"), sum("term").as("hsum"))
     agg.select(col("n_bigrams"),
-        q6(col("hsum").cast("double") / col("n_bigrams").cast("double"))
+        Det.q6(col("hsum").cast("double") / col("n_bigrams").cast("double"))
           .as("h_cond_nats"))
       .withColumn("perplexity",
         floor(exp(col("h_cond_nats")) * lit(10000.0) + lit(0.5)) / lit(10000.0))
@@ -724,9 +713,6 @@ object TextAnalysis {
     val ct = cts.groupBy("term").agg(sum("c_ts").as("c_t"))
     val cs = cts.groupBy("source").agg(sum("c_ts").as("c_s"))
     val n = cts.agg(sum("c_ts").as("n_tot"))
-    val qln = (c: Column) =>
-      Det.q6(log(c.cast("double")))
-        .cast(org.apache.spark.sql.types.DecimalType(18, 6))
     val w = Window.partitionBy("source").orderBy(col("pmi").desc, col("term").asc)
     cts.filter(col("c_ts") >= PmiMinCount)
       .join(broadcast(ct), "term")
@@ -811,9 +797,6 @@ object TextAnalysis {
       .filter(col("term").isin(Bm25Terms.map(t => t: Any): _*))
       .groupBy("doc_id", "dl", "term").agg(count(lit(1)).as("tf"))
     val wDf = org.apache.spark.sql.expressions.Window.partitionBy("term")
-    val qln = (c: Column) =>
-      Det.q6(log(c.cast("double")))
-        .cast(org.apache.spark.sql.types.DecimalType(18, 6))
     val idf = (qln(lit(2) * col("nd") + lit(2)) - qln(lit(2) * col("df") + lit(1)))
       .cast("double")
     val ratio = (lit(22.0) * col("tf") * col("total")) /
@@ -921,11 +904,6 @@ object TextAnalysis {
     * before the regression, and the per-source OLS is a ≤100-row
     * aggregate. */
   def zipfSlope(s: SparkSession, d: String): DataFrame = {
-    import org.apache.spark.sql.types.DecimalType
-    val qln = (c: Column) =>
-      Det.q6(log(c.cast("double"))).cast(DecimalType(18, 6))
-    val q4 = graft.util.Det.q4 _
-    def dsum(c: Column) = sum(c.cast(DecimalType(30, 12))).cast("double")
     val tc = Tables.documents(s, d)
       .select(col("source"), explode(words(col("text"))).as("term"))
       .filter(col("term") =!= "")
@@ -938,17 +916,17 @@ object TextAnalysis {
       (col("n_ranked") * col("sxx") - col("sx") * col("sx"))
     ranked.groupBy("source")
       .agg(count(lit(1)).as("n_ranked"),
-        dsum(col("x")).as("sx"), dsum(col("y")).as("sy"),
-        dsum(col("x") * col("x")).as("sxx"),
-        dsum(col("x") * col("y")).as("sxy"))
+        Det.dsumWide(col("x")).as("sx"), Det.dsumWide(col("y")).as("sy"),
+        Det.dsumWide(col("x") * col("x")).as("sxx"),
+        Det.dsumWide(col("x") * col("y")).as("sxy"))
       // a single-token source has one rank point (x=0): the OLS
       // denominator n·sxx − sx² is exactly 0 — NULL in non-ANSI Spark but
       // engine-specific divide-by-zero in DuckDB, so exclude degenerate
       // sources in BOTH engines (a one-point "slope" is meaningless anyway)
       .filter(col("n_ranked") >= 2)
       .select(col("source"), col("n_ranked"),
-        q4(slopeExpr).as("slope"),
-        q4((col("sy") - slopeExpr * col("sx")) / col("n_ranked")).as("intercept"))
+        Det.q4(slopeExpr).as("slope"),
+        Det.q4((col("sy") - slopeExpr * col("sx")) / col("n_ranked")).as("intercept"))
       .orderBy("source")
   }
 
@@ -1102,8 +1080,7 @@ object TextAnalysis {
       .agg(count(lit(1)).as("n_types"),
         sum(when(col("nsrc") === 1, 1L).otherwise(0L)).as("n_unique"))
       .withColumn("novelty",
-        floor(col("n_unique").cast("double") / col("n_types").cast("double")
-          * lit(1000000.0) + lit(0.5)) / lit(1000000.0))
+        Det.q6(col("n_unique").cast("double") / col("n_types").cast("double")))
       .orderBy("source")
   }
 
@@ -1197,11 +1174,6 @@ object TextAnalysis {
     * per-source reduce, then a ≤|sources|-row regression — the corpus
     * is exchanged once. */
   def heapsFit(s: SparkSession, d: String): DataFrame = {
-    import org.apache.spark.sql.types.DecimalType
-    val qln = (c: Column) =>
-      Det.q6(log(c.cast("double"))).cast(DecimalType(18, 6))
-    val q4 = graft.util.Det.q4 _
-    def dsum2(c: Column) = sum(c.cast(DecimalType(30, 12))).cast("double")
     val per = Tables.documents(s, d)
       .select(col("source"), explode(words(col("text"))).as("term"))
       .filter(col("term") =!= "")
@@ -1217,15 +1189,15 @@ object TextAnalysis {
     val r2den = (n * col("sxx") - col("sx") * col("sx")) *
       (n * col("syy") - col("sy") * col("sy"))
     per.agg(count(lit(1)).as("n_sources"),
-        dsum2(col("x")).as("sx"), dsum2(col("y")).as("sy"),
-        dsum2(col("x") * col("x")).as("sxx"),
-        dsum2(col("y") * col("y")).as("syy"),
-        dsum2(col("x") * col("y")).as("sxy"))
+        Det.dsumWide(col("x")).as("sx"), Det.dsumWide(col("y")).as("sy"),
+        Det.dsumWide(col("x") * col("x")).as("sxx"),
+        Det.dsumWide(col("y") * col("y")).as("syy"),
+        Det.dsumWide(col("x") * col("y")).as("sxy"))
       .filter(col("n_sources") >= 2)
       .select(col("n_sources"),
-        q4(beta).as("beta"),
-        q4((col("sy") - beta * col("sx")) / n).as("intercept_ln"),
-        q4(r2num / r2den).as("r2"))
+        Det.q4(beta).as("beta"),
+        Det.q4((col("sy") - beta * col("sx")) / n).as("intercept_ln"),
+        Det.q4(r2num / r2den).as("r2"))
   }
 
   /** RAKE keyword extraction over the corpus (Rose et al. 2010): candidate
@@ -1268,8 +1240,7 @@ object TextAnalysis {
       .groupBy("word")
       .agg(count(lit(1)).as("freq"), sum("plen").as("deg"))
       .select(col("word"),
-        (floor(col("deg").cast("double") / col("freq").cast("double")
-          * lit(1000000.0) + lit(0.5)) / lit(1000000.0))
+        Det.q6(col("deg").cast("double") / col("freq").cast("double"))
           .cast(org.apache.spark.sql.types.DecimalType(18, 6)).as("wscore"))
     // identical phrase text => identical word multiset => identical score,
     // so score once per DISTINCT phrase and count instances separately
@@ -1282,8 +1253,7 @@ object TextAnalysis {
       .groupBy("phrase").agg(sum("wscore").as("pscore"))
     inst.join(pscores, "phrase")
       .select(col("phrase"), col("n_words"), col("n_occurrences"),
-        (floor(col("pscore").cast("double") * lit(1000000.0) + lit(0.5))
-          / lit(1000000.0)).as("score"))
+        Det.q6(col("pscore").cast("double")).as("score"))
       .orderBy(col("score").desc, col("phrase").asc)
       .limit(30)
   }
@@ -1310,9 +1280,8 @@ object TextAnalysis {
         sum(col("c") * (col("c") - 1)).as("ss"))
       .select(col("source"), col("n_docs"), col("n_langs"),
         when(col("n_docs") > 1,
-          floor((lit(1.0) - col("ss").cast("double") /
-            (col("n_docs") * (col("n_docs") - 1)).cast("double"))
-            * lit(1000000.0) + lit(0.5)) / lit(1000000.0)).as("simpson"))
+          Det.q6(lit(1.0) - col("ss").cast("double") /
+            (col("n_docs") * (col("n_docs") - 1)).cast("double"))).as("simpson"))
       .orderBy("source")
 
   /** Top discriminative terms per language by 2×2 chi-square — the
@@ -1332,7 +1301,6 @@ object TextAnalysis {
     * after runs on the vocabulary×|langs| grid with the ≤|langs|-row
     * totals broadcast. */
   def termChi2(s: SparkSession, d: String): DataFrame = {
-    val dec0 = org.apache.spark.sql.types.DecimalType(38, 0)
     val dw = graft.util.Ckpt.stage(Tables.documents(s, d)
       .select(col("doc_id"), col("lang"), explode(split(col("text"), " ")).as("word"))
       .filter(length(col("word")) > 0)
@@ -1349,7 +1317,7 @@ object TextAnalysis {
       .withColumn("n01", col("nw") - col("n11"))
       .withColumn("n00", col("nn") - col("nl") - col("n01"))
       .withColumn("det",
-        (col("n11") * col("n00") - col("n10") * col("n01")).cast(dec0))
+        (col("n11") * col("n00") - col("n10") * col("n01")).cast(Dec0))
       .withColumn("chi2",
         // a word present in EVERY doc has det = 0 AND a zero margin: 0/0
         // is NaN, which Spark's floor->long maps to 0 while DuckDB keeps
@@ -1357,10 +1325,9 @@ object TextAnalysis {
         // nl < nn guards the mirror margin: a single-language corpus
         // zeroes the (nn − nl) factor the same way (ADVICE r7)
         when(col("nw") < col("nn") && col("nl") < col("nn"),
-          floor((col("nn").cast(dec0) * col("det") * col("det")).cast("double") /
-            (col("nw").cast(dec0) * (col("nn") - col("nw")).cast(dec0) *
-              col("nl").cast(dec0) * (col("nn") - col("nl")).cast(dec0)).cast("double")
-            * lit(1000000.0) + lit(0.5)) / lit(1000000.0))
+          Det.q6((col("nn").cast(Dec0) * col("det") * col("det")).cast("double") /
+            (col("nw").cast(Dec0) * (col("nn") - col("nw")).cast(Dec0) *
+              col("nl").cast(Dec0) * (col("nn") - col("nl")).cast(Dec0)).cast("double")))
           .otherwise(lit(0.0)))
     val w = Window.partitionBy("lang")
       .orderBy(col("chi2").desc, col("word").asc)
@@ -1392,9 +1359,6 @@ object TextAnalysis {
     * vocabulary × |langs| with the ≤|langs|-row totals broadcast —
     * the [[termChi2]] shape, reusing its staged token frame logic. */
   def llrTerms(s: SparkSession, d: String): DataFrame = {
-    val qln = (c: Column) =>
-      Det.q6(log(c.cast("double")))
-        .cast(org.apache.spark.sql.types.DecimalType(18, 6))
     def term(k: Column): Column =
       when(k > 0, k * qln(k)).otherwise(lit(0).cast(
         org.apache.spark.sql.types.DecimalType(38, 6)))

@@ -1,6 +1,7 @@
 package graft.ops
 
 import graft.util.Det
+import graft.util.Det.{Dec0, qln}
 import graft.Tables
 import graft.functions.TextFeatures.{bigrams, words}
 import org.apache.spark.sql.{DataFrame, SparkSession}
@@ -163,8 +164,6 @@ object TrainingPrep {
     // across engine libms by ulps that can straddle a rounding boundary
     // at corpus scale (observed at sf1); integer-domain ln is verified
     // bit-identical at 6 dp across Spark and DuckDB for counts ≤ 2M
-    def qln(c: org.apache.spark.sql.Column) =
-      Det.q6(log(c.cast("double"))).cast(DecimalType(18, 6))
     val ratio =
       (qln(col("ct_t") + 1) - qln(col("n_t") + DsirBuckets)) -
         (qln(col("ct_r") + 1) - qln(col("n_r") + DsirBuckets))
@@ -203,8 +202,6 @@ object TrainingPrep {
   def weightedSample(s: SparkSession, d: String): DataFrame = {
     val hv = conv(substring(md5(concat(lit("ws:"), col("doc_id"))), 1, 8), 16, 10)
       .cast("long")
-    def qln(c: org.apache.spark.sql.Column) =
-      Det.q6(log(c.cast("double"))).cast(DecimalType(18, 6))
     // n_chars > 0 guard (ADVICE round 4): a zero-length document would
     // divide by zero — NULL under Spark non-ANSI, version-dependent in
     // DuckDB. Weight-0 docs are never sampled under A-Res anyway, so the
@@ -414,7 +411,6 @@ object TrainingPrep {
     * frame — the unpartitioned rank window is bounded by the source
     * domain (20 here), never the corpus. */
   def concentration(s: SparkSession, d: String): DataFrame = {
-    val dec0 = DecimalType(38, 0)
     val per = Tables.documents(s, d)
       .groupBy("source")
       .agg(sum(size(words(col("text"))).cast("long")).as("t"))
@@ -423,16 +419,16 @@ object TrainingPrep {
     ranked.agg(
       count(lit(1)).as("n_sources"),
       sum("t").as("total_tokens"),
-      sum(col("t").cast(dec0) * col("t").cast(dec0)).as("sum_sq"),
+      sum(col("t").cast(Dec0) * col("t").cast(Dec0)).as("sum_sq"),
       max("t").as("t_max"),
-      sum(col("i").cast(dec0) * col("t").cast(dec0)).as("sum_it"))
+      sum(col("i").cast(Dec0) * col("t").cast(Dec0)).as("sum_it"))
       .select(
         col("n_sources"), col("total_tokens"),
         Det.q6(col("sum_sq").cast("double") /
           (col("total_tokens").cast("double") * col("total_tokens").cast("double")))
           .as("hhi"),
         Det.q6((lit(2) * col("sum_it") -
-          (col("n_sources") + 1).cast(dec0) * col("total_tokens").cast(dec0)).cast("double") /
+          (col("n_sources") + 1).cast(Dec0) * col("total_tokens").cast(Dec0)).cast("double") /
           (col("n_sources").cast("double") * col("total_tokens").cast("double")))
           .as("gini"),
         Det.q6(col("t_max").cast("double") / col("total_tokens").cast("double"))
@@ -461,12 +457,10 @@ object TrainingPrep {
     * of lineitem rows; past broadcast scale the prefix sum becomes the
     * ksDrift two-phase bucketed form), and a 3-row class aggregate. */
   def abcClass(s: SparkSession, d: String): DataFrame = {
-    val dec0 = DecimalType(38, 0)
     val rev = Tables.lineitem(s, d)
       .select(col("l_partkey"),
-        (col("l_extendedprice").cast(DecimalType(24, 6)) * lit(1000000))
-          .cast("long").as("micro"))
-      .groupBy("l_partkey").agg(sum(col("micro").cast(dec0)).as("r"))
+        Det.microExact(col("l_extendedprice")).as("micro"))
+      .groupBy("l_partkey").agg(sum(col("micro").cast(Dec0)).as("r"))
     val tot = rev.agg(sum("r").as("tot"))
     val w = Window.orderBy(col("r").desc, col("l_partkey").asc)
       .rowsBetween(Window.unboundedPreceding, Window.currentRow)
@@ -515,7 +509,7 @@ object TrainingPrep {
       .withColumn("sd", sqrt(
         (col("n_h") * col("sxx") - col("sx") * col("sx")) /
           (col("n_h").cast("double") * (col("n_h") - lit(1)).cast("double"))))
-      .withColumn("w", floor(col("n_h") * col("sd") * lit(1000000.0) + lit(0.5)).cast("long"))
+      .withColumn("w", Det.micro(col("n_h") * col("sd")))
     val tot = per.agg(sum("w").as("total"))
     val quotas = per.crossJoin(broadcast(tot))
       .withColumn("quota", expr(s"($b * w) div total"))
@@ -526,7 +520,7 @@ object TrainingPrep {
     quotas.crossJoin(broadcast(short))
       .withColumn("rr", row_number().over(wr))
       .select(col("event_type"), col("n_h"),
-        (floor(col("sd") * lit(1000000.0) + lit(0.5)) / lit(1000000.0)).as("sd"),
+        Det.q6(col("sd")).as("sd"),
         col("w"),
         (col("quota") + (col("rr") <= col("r")).cast("long")).as("alloc"))
       .orderBy("event_type")
@@ -551,7 +545,7 @@ object TrainingPrep {
   def targetEncode(s: SparkSession, d: String): DataFrame = {
     val ev = Tables.events(s, d).filter(col("value").isNotNull)
       .select(col("event_id"), col("event_type"),
-        (col("value").cast(DecimalType(24, 6)) * lit(1000000)).cast("long").as("micro"))
+        Det.microExact(col("value")).as("micro"))
     val stats = ev.groupBy("event_type")
       .agg(sum("micro").as("tot"), count(lit(1)).as("cnt"))
     ev.join(broadcast(stats), "event_type")
@@ -624,6 +618,7 @@ object TrainingPrep {
     val ext = docs.agg(min("n_chars").as("lo"), max("n_chars").as("hi"))
     val phased = graft.util.Ckpt.stage(docs.crossJoin(broadcast(ext))
       .withColumn("phase",
+        // not Statistics.equalWidthBucket: the +1 keeps n_chars = hi below 3
         when(col("hi") === col("lo"), lit(0)).otherwise(
           least(lit(2), floor((col("n_chars") - col("lo")) * 3 /
             (col("hi") - col("lo") + 1)).cast("int"))))

@@ -2,7 +2,7 @@ package graft.pipeline
 
 import java.nio.file.{Files, Path, Paths}
 import scala.jdk.CollectionConverters._
-import scala.util.{Failure, Success, Try}
+import scala.util.{Failure, Success, Try, Using}
 
 import graft.Tables
 import org.apache.spark.sql.{DataFrame, SparkSession}
@@ -74,9 +74,9 @@ object Pipeline {
   def latestRun(baseDir: String): Option[Path] = {
     val base = Paths.get(baseDir)
     if (!Files.isDirectory(base)) None
-    else Files.list(base).iterator().asScala
+    else Using.resource(Files.list(base))(_.iterator().asScala
       .filter(p => Files.exists(p.resolve("metadata.json")))
-      .maxByOption(p => Files.readString(p.resolve("metadata.json")))
+      .maxByOption(p => Files.readString(p.resolve("metadata.json"))))
   }
 
   /** Row→item transform (R17): `{id: "word_"+word, word, count:int}` —

@@ -1,5 +1,6 @@
 package graft.streaming
 
+import graft.util.Det.Dec0
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode, StatefulProcessor, TTLConfig}
@@ -365,25 +366,24 @@ object Streams {
     * Shape: state is ONE narrow row regardless of stream length; each
     * micro-batch folds in one multiply-add. */
   def spcXbarAdvance(state: DataFrame, day: DataFrame): DataFrame = {
-    val dec0 = org.apache.spark.sql.types.DecimalType(38, 0)
     state.select(col("t"), col("smd"), col("smd2"))
       .join(day.select(col("day"), col("md")), lit(true), "full")
       .select(col("day"), col("md"),
         coalesce(col("t"), lit(0L)).as("t0"),
         coalesce(col("smd"), lit(0L)).as("s"),
-        coalesce(col("smd2"), lit(0L).cast(dec0)).as("s2"))
+        coalesce(col("smd2"), lit(0L).cast(Dec0)).as("s2"))
       .select(col("day"), col("md"),
         (col("t0") + 1).as("t"),
         (col("s") + col("md")).as("smd"),
-        (col("s2") + col("md").cast(dec0) * col("md").cast(dec0)).as("smd2"),
+        (col("s2") + col("md").cast(Dec0) * col("md").cast(Dec0)).as("smd2"),
         when(col("t0") < 2, lit(0)).otherwise(
-          ((col("t0").cast(dec0) * col("md").cast(dec0) - col("s").cast(dec0)) *
-            (col("t0").cast(dec0) * col("md").cast(dec0) - col("s").cast(dec0)) *
-            (col("t0") - 1).cast(dec0) >
-            lit(9).cast(dec0) *
-              (col("t0").cast(dec0) * col("s2") -
-                col("s").cast(dec0) * col("s").cast(dec0)) *
-              col("t0").cast(dec0)).cast("int"))
+          ((col("t0").cast(Dec0) * col("md").cast(Dec0) - col("s").cast(Dec0)) *
+            (col("t0").cast(Dec0) * col("md").cast(Dec0) - col("s").cast(Dec0)) *
+            (col("t0") - 1).cast(Dec0) >
+            lit(9).cast(Dec0) *
+              (col("t0").cast(Dec0) * col("s2") -
+                col("s").cast(Dec0) * col("s").cast(Dec0)) *
+              col("t0").cast(Dec0)).cast("int"))
           .as("out_of_control"))
   }
 

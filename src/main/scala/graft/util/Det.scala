@@ -31,7 +31,11 @@ object Det {
     * SQL mirror: `floor(x * 10000 + 0.5) / 10000`. */
   def q4(c: Column): Column = floor(c * 10000 + lit(0.5)) / 10000
 
-  /** [[q4]] at 6 dp. SQL mirror: `floor(x * 1000000 + 0.5) / 1000000`. */
+  /** [[q4]] at 6 dp. SQL mirror: `floor(x * 1000000 + 0.5) / 1000000`.
+    * The argument must be a double: with the int literal, the ×10⁶ step
+    * runs in DECIMAL for a DECIMAL argument and in BIGINT (which can
+    * wrap) for a BIGINT one, so cast those with `.cast("double")` first
+    * (PARITY.md §3). */
   def q6(c: Column): Column = floor(c * 1000000 + lit(0.5)) / 1000000
 
   /** [[q4]] at 8 dp. SQL mirror: `floor(x * 100000000 + 0.5) / 100000000`. */
@@ -46,7 +50,7 @@ object Det {
     * mirror: `CASE WHEN abs(x) < 1e12 THEN floor(x * 1000000 + 0.5) /
     * 1000000 ELSE x END`. */
   def q6big(c: Column): Column =
-    when(abs(c) < 1e12, floor(c * 1000000 + lit(0.5)) / 1000000).otherwise(c)
+    when(abs(c) < 1e12, q6(c)).otherwise(c)
 
   /** [[q4]] at an arbitrary decimal scale (1..9 — powers of ten up to 1e9
     * are exact doubles; Spark's floor returns LONG, so the argument must
@@ -58,6 +62,36 @@ object Det {
     val m = math.pow(10, digits)
     floor(c * m + lit(0.5)) / m
   }
+
+  /** 6-dp-quantized natural log of an INTEGER count, entered into
+    * DECIMAL(18,6) so sums and products of logs stay exact. ln over the
+    * integer count domain is bit-identical at 6 dp across Spark and
+    * DuckDB for counts ≤ 2M. SQL mirror:
+    * `CAST(floor(ln(x) * 1000000 + 0.5) / 1000000 AS DECIMAL(18,6))`. */
+  def qln(c: Column): Column = q6(log(c.cast("double"))).cast(DecimalType(18, 6))
+
+  /** Rounded micro-units of a double: `floor(x·10⁶+0.5)` as BIGINT, for
+    * integer-exact sums of derived or embedding coordinates. SQL mirror:
+    * `CAST(floor(x * 1000000 + 0.5) AS BIGINT)`. */
+  def micro(c: Column): Column = floor(c * 1000000 + lit(0.5)).cast("long")
+
+  /** Exact micro-units of a fixture value: enter the integer domain
+    * through a DECIMAL cast, not floor (PARITY.md §4), so the cast
+    * rounds the double's ulp noise away. Differs from [[micro]] where
+    * `x·10⁶` lands just under a half-way point. SQL mirror:
+    * `CAST(CAST(x AS DECIMAL(24,6)) * 1000000 AS BIGINT)`. */
+  def microExact(c: Column): Column =
+    (c.cast(DecimalType(24, 6)) * lit(1000000)).cast("long")
+
+  /** The exact-integer product domain: BIGINT operands cast here multiply
+    * exactly up to 38 digits (sums of squares, cross terms), where a
+    * BIGINT product would wrap. */
+  val Dec0: DecimalType = DecimalType(38, 0)
+
+  /** [[dsum]] at DECIMAL(30,12), for power sums (x², x·y) whose terms
+    * carry more than 6 dp. SQL mirror:
+    * `CAST(SUM(CAST(x AS DECIMAL(30,12))) AS DOUBLE)`. */
+  def dsumWide(c: Column): Column = sum(c.cast(DecimalType(30, 12))).cast("double")
 
   /** Timestamp → second-precision string. SQL mirror:
     * `strftime(ts, '%Y-%m-%d %H:%M:%S')`. */

@@ -60,6 +60,19 @@ class PipelineSpec extends AnyFunSuite {
     assert(Pipeline.latestRun(work).map(_.getFileName.toString) === Some("run_20240202_000000"))
   }
 
+  test("latestRun closes its directory listing") {
+    val fds = new java.io.File("/proc/self/fd")
+    assume(fds.isDirectory, "needs /proc/self/fd to count open descriptors")
+    val work = Files.createTempDirectory("graft_latest_fds").toString
+    val dir = Paths.get(s"$work/run_20240101_000000")
+    Files.createDirectories(dir)
+    Files.writeString(dir.resolve("metadata.json"), """{"timestamp": "20240101_000000"}""")
+    val before = fds.list().length
+    for (_ <- 1 to 500) assert(Pipeline.latestRun(work).isDefined)
+    val grown = fds.list().length - before
+    assert(grown < 50, s"$grown descriptors left open by 500 latestRun calls")
+  }
+
   test("retry retries transient failures and rethrows persistent ones") {
     var calls = 0
     val v = Pipeline.retry(3) {
