@@ -256,8 +256,9 @@ object Aggregations {
     * [[Statistics.mannWhitney]]: users bucket by value range (32
     * buckets), per-bucket windows rank locally (largest sort partition =
     * one bucket), a ≤32-row cumulative offset table broadcasts back, and
-    * rank = offset + local row_number — a total order over (ltv,
-    * user_id) with NO unpartitioned window over the user population.
+    * rank = offset + local running count ([[graft.util.Prefix.sums]]) —
+    * a total order over (ltv, user_id) with NO unpartitioned window over
+    * the user population.
     * decile = (10·(rank−1)) div n is pure integer algebra.
     *
     * Determinism: LTVs are exact DECIMAL(24,6) sums (scale-6-safe per
@@ -265,7 +266,6 @@ object Aggregations {
     * extent expression; ties in LTV break on user_id. Output decimal
     * bounds cast to double (one correctly-rounded conversion each). */
   def ltvDecile(s: SparkSession, d: String): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
     val nb = 32
     val per = graft.util.Ckpt.stage(Tables.events(s, d)
       .filter(col("value").isNotNull)
@@ -281,13 +281,7 @@ object Aggregations {
           least(lit(nb - 1),
             floor((col("v") - col("lo")).cast("double") * nb /
                   (col("hi") - col("lo")).cast("double")).cast("int"))))
-    val wb = Window.orderBy("bkt")
-      .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    val offs = bucketed.groupBy("bkt").agg(count(lit(1)).as("s"))
-      .select(col("bkt"), (sum("s").over(wb) - col("s")).as("off"))
-    val w = Window.partitionBy("bkt").orderBy(col("v"), col("user_id"))
-    bucketed.join(broadcast(offs), "bkt")
-      .withColumn("rank", col("off") + row_number().over(w))
+    graft.util.Prefix.sums(bucketed, Nil, "bkt", Seq("v", "user_id"), "rank" -> lit(1L))
       .withColumn("decile", expr("(10 * (rank - 1)) div n"))
       .groupBy("decile")
       .agg(count(lit(1)).as("n_users"),

@@ -3,6 +3,7 @@ package graft.ops
 import graft.util.Det
 import graft.Tables
 import graft.util.Det._
+import graft.util.Prefix
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -461,14 +462,31 @@ object Statistics {
     * cumulative window runs PER BUCKET (`partitionBy(bkt)`), so the
     * largest sort partition is one bucket, not the whole value space —
     * the distributed prefix-sum decomposition cum(v) = offset(bucket(v))
-    * + within-bucket cum(v). */
+    * + within-bucket cum(v) ([[graft.util.Prefix.sums]]). */
   def ksDrift(s: SparkSession, d: String): DataFrame =
-    ksFromAgg(graft.util.Ckpt.stage(Tables.events(s, d)
-      .filter(col("event_type").isin("click", "view"))
+    ksFromAgg(graft.util.Ckpt.stage(clickViewCounts(s, d)))
+
+  /** Per-distinct-value click and view counts (value, c1, c2) over the
+    * non-NULL click/view `value`s — the input of every two-sample drift
+    * and rank query. NULLs are excluded because windows sort them first
+    * in Spark and last in DuckDB (PARITY.md §5). */
+  private def clickViewCounts(s: SparkSession, d: String): DataFrame =
+    Tables.events(s, d)
+      .filter(col("event_type").isin("click", "view") && col("value").isNotNull)
       .groupBy("value")
       .agg(
         sum((col("event_type") === "click").cast("long")).as("c1"),
-        sum((col("event_type") === "view").cast("long")).as("c2"))))
+        sum((col("event_type") === "view").cast("long")).as("c2"))
+
+  /** `ev` plus its equal-width value bucket `bkt` in 0..nb−1 over the
+    * broadcast (min, max) extent of `value`. */
+  private def valueBuckets(ev: DataFrame, nb: Int): DataFrame = {
+    val ext = ev.agg(min("value").as("lo"), max("value").as("hi"))
+    ev.crossJoin(broadcast(ext))
+      .withColumn("bkt",
+        equalWidthBucket(col("value"), col("lo"), col("hi"), nb))
+      .drop("lo", "hi")
+  }
 
   /** [[ksDrift]] body downstream of the per-value count frame `ev`
     * (pre-staged (value, c1, c2)) — shared with [[driftReport]], which
@@ -476,31 +494,13 @@ object Statistics {
   private def ksFromAgg(ev: DataFrame): DataFrame = {
     // staged input: ev feeds extent + bucketing + totals, gaps feeds the
     // argmax join twice — without staging each consumer re-runs the subtree
-    val ext = ev.agg(min("value").as("lo"), max("value").as("hi"))
-    val bucketed = ev.crossJoin(broadcast(ext))
-      .withColumn("bkt",
-        equalWidthBucket(col("value"), col("lo"), col("hi"), KsBuckets))
-      .drop("lo", "hi")
-    // unpartitioned prefix window over the per-BUCKET totals: exactly
-    // <= KsBuckets (32) rows regardless of input scale — the whole point
-    // of the two-phase decomposition is that only this constant-bounded
-    // offset table ever sees a single-partition sort
-    val wb = Window.orderBy("bkt")
-      .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    val offs = bucketed.groupBy("bkt")
-      .agg(sum("c1").as("s1"), sum("c2").as("s2"))
-      .select(col("bkt"),
-        (sum("s1").over(wb) - col("s1")).as("off1"),
-        (sum("s2").over(wb) - col("s2")).as("off2"))
+    val bucketed = valueBuckets(ev, KsBuckets)
     val tot = bucketed.agg(sum("c1").as("n1"), sum("c2").as("n2"))
-    val w = Window.partitionBy("bkt").orderBy("value")
-      .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    val gaps = graft.util.Ckpt.stage(bucketed
-      .join(broadcast(offs), "bkt")
-      .crossJoin(broadcast(tot))
-      .withColumn("cum1", col("off1") + sum("c1").over(w))
-      .withColumn("cum2", col("off2") + sum("c2").over(w))
-      .withColumn("gap", abs(col("cum1") * col("n2") - col("cum2") * col("n1"))))
+    val gaps = graft.util.Ckpt.stage(
+      Prefix.sums(bucketed, Nil, "bkt", Seq("value"),
+        "cum1" -> col("c1"), "cum2" -> col("c2"))
+        .crossJoin(broadcast(tot))
+        .withColumn("gap", abs(col("cum1") * col("n2") - col("cum2") * col("n1"))))
     val dmax = gaps.groupBy("n1", "n2").agg(max("gap").as("d_scaled"))
     gaps.join(broadcast(dmax), Seq("n1", "n2"))
       .filter(col("gap") === col("d_scaled"))
@@ -519,7 +519,7 @@ object Statistics {
   /** Equal-width bucket of `v` over [lo, hi] into 0..nb−1: v = hi lands in
     * the last bucket, and a degenerate range (hi = lo) puts every row in
     * bucket 0. `least` skips NULL in both engines, so a NULL `v` lands in
-    * bucket nb−1. SQL mirror: `CASE WHEN hi = lo THEN 0 ELSE
+    * bucket nb−1; every caller filters NULL values first. SQL mirror: `CASE WHEN hi = lo THEN 0 ELSE
     * CAST(least(nb − 1, floor((v − lo) * nb / (hi − lo))) AS INT) END`. */
   private[graft] def equalWidthBucket(v: Column, lo: Column, hi: Column, nb: Int): Column =
     when(hi === lo, lit(0)).otherwise(
@@ -554,27 +554,10 @@ object Statistics {
     * NULLs excluded explicitly: Spark windows sort them first, DuckDB
     * last, so their presence would shift every rank cross-engine. */
   def mannWhitney(s: SparkSession, d: String): DataFrame = {
-    val ev = graft.util.Ckpt.stage(Tables.events(s, d)
-      .filter(col("event_type").isin("click", "view") && col("value").isNotNull)
-      .groupBy("value")
-      .agg(
-        sum((col("event_type") === "click").cast("long")).as("c1"),
-        sum((col("event_type") === "view").cast("long")).as("c2")))
-    val ext = ev.agg(min("value").as("lo"), max("value").as("hi"))
-    val bucketed = ev.crossJoin(broadcast(ext))
-      .withColumn("bkt",
-        equalWidthBucket(col("value"), col("lo"), col("hi"), KsBuckets))
-      .drop("lo", "hi")
-    val wb = Window.orderBy("bkt")
-      .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    val offs = bucketed.groupBy("bkt")
-      .agg(sum(col("c1") + col("c2")).as("s"))
-      .select(col("bkt"), (sum("s").over(wb) - col("s")).as("off"))
-    val w = Window.partitionBy("bkt").orderBy("value")
-      .rowsBetween(Window.unboundedPreceding, Window.currentRow)
+    val ev = graft.util.Ckpt.stage(clickViewCounts(s, d))
     val c = col("c1") + col("c2")
-    val t = bucketed.join(broadcast(offs), "bkt")
-      .withColumn("prev", col("off") + sum(c).over(w) - c)
+    val t = Prefix.sums(valueBuckets(ev, KsBuckets), Nil, "bkt", Seq("value"), "cum" -> c)
+      .withColumn("prev", col("cum") - c)
       .agg(
         sum("c1").as("n1"), sum("c2").as("n2"),
         sum(col("c1") * (lit(2) * col("prev") + c + lit(1))).as("r1_x2"),
@@ -781,10 +764,11 @@ object Statistics {
     *
     * Scale shape: the [[ksDrift]] two-phase discipline — extent as a 1-row
     * broadcast, binning inside the first map-side-combined aggregate
-    * (PsiBins rows out), all PSI arithmetic on the bin-count frame. */
+    * (PsiBins rows out), all PSI arithmetic on the bin-count frame. NULL
+    * values are excluded, as in every bucketed monitor. */
   def psiDrift(s: SparkSession, d: String): DataFrame =
     psiPerBin(s, graft.util.Ckpt.stage(
-      Tables.events(s, d)
+      Tables.events(s, d).filter(col("value").isNotNull)
         .select(col("value"),
           (dayofmonth(col("ts")) <= 15).cast("long").as("early"))))
       .select(col("bkt"), (col("o1") - 1).as("n_early"), (col("o2") - 1).as("n_late"),
@@ -803,10 +787,7 @@ object Statistics {
     * with (bkt, o1, o2, contrib, psi_d). */
   private def psiPerBinW(s: SparkSession, ev: DataFrame): DataFrame = {
     val nb = PsiBins
-    val ext = ev.agg(min("value").as("lo"), max("value").as("hi"))
-    val counts = ev.crossJoin(broadcast(ext))
-      .withColumn("bkt",
-        equalWidthBucket(col("value"), col("lo"), col("hi"), nb))
+    val counts = valueBuckets(ev, nb)
       .groupBy("bkt")
       .agg(sum(col("early") * col("c")).as("r1"),
         sum((lit(1L) - col("early")) * col("c")).as("r2"))
@@ -883,13 +864,17 @@ object Statistics {
         sum("contrib").cast("double").as("stat"))
       .select(lit("chisq").as("monitor"), col("n_a"), col("n_b"), col("stat"))
     val ks = ksFromAgg(
-      grid.filter(col("event_type").isin("click", "view"))
+      grid.filter(col("event_type").isin("click", "view") && col("value").isNotNull)
         .groupBy("value")
         .agg(sum(when(col("event_type") === "click", col("c")).otherwise(0L)).as("c1"),
           sum(when(col("event_type") === "view", col("c")).otherwise(0L)).as("c2")))
       .select(lit("ks").as("monitor"),
         col("n1").as("n_a"), col("n2").as("n_b"), col("ks").as("stat"))
-    val psi = psiPerBinW(s, grid.select(col("value"), col("early"), col("c")))
+    // NULL values weigh 0 instead of being filtered: a filter on `value` is
+    // pushed below the grid aggregate and splits the exchange the psi leg
+    // shares with the chisq leg in unstaged plans
+    val psi = psiPerBinW(s, grid.select(col("value"), col("early"),
+        when(col("value").isNotNull, col("c")).otherwise(0L).as("c")))
       .agg(sum(col("o1") - 1).as("n_a"), sum(col("o2") - 1).as("n_b"),
         min("psi_d").cast("double").as("stat"))
       .select(lit("psi").as("monitor"), col("n_a"), col("n_b"), col("stat"))
@@ -1449,6 +1434,35 @@ object Statistics {
       .orderBy("event_type", "decile")
   }
 
+  /** Customer lifetimes per `keys` group of `orders`: first and last
+    * order date in µs (mn, mx), `dur` = whole days between them, and
+    * `cens` = 1 when the last order falls in the final fifth of the study
+    * window (plausibly still active, so censored rather than churned) —
+    * the lifetime frame of [[kaplanMeier]], [[nelsonAalen]] and
+    * [[logRankStat]]. Pure integer µs arithmetic, no calendar literals. */
+  private def lifetimes(orders: DataFrame, keys: String*): DataFrame = {
+    val per = orders.groupBy(keys.map(col): _*)
+      .agg(min(unix_micros(col("o_orderdate").cast("timestamp"))).as("mn"),
+        max(unix_micros(col("o_orderdate").cast("timestamp"))).as("mx"))
+    val ext = per.agg(min("mn").as("lo"), max("mx").as("hi"))
+    per.crossJoin(broadcast(ext))
+      .withColumn("dur", expr("(mx - mn) div 86400000000"))
+      .withColumn("cens", (col("mx") > expr("lo + ((hi - lo) * 4) div 5")).cast("long"))
+  }
+
+  /** `byDur` (one row per distinct lifetime `dur` with its customer count
+    * `all_at`) plus the risk set `n_risk`: the customers whose lifetime is
+    * at least `dur`. Both windows run over distinct durations only. */
+  private def riskSet(byDur: DataFrame): DataFrame = {
+    // distinct lifetimes in days: bounded by the study length
+    val wo = Window.orderBy("dur")
+    byDur
+      .withColumn("n_total", sum("all_at").over(Window.partitionBy()))
+      .withColumn("before", coalesce(
+        sum("all_at").over(wo.rowsBetween(Window.unboundedPreceding, -1)), lit(0L)))
+      .withColumn("n_risk", col("n_total") - col("before"))
+  }
+
   /** Kaplan–Meier survival estimate of customer relationship lifetime —
     * the estimator every retention analysis needs once censoring enters:
     * a customer's lifetime is last-order − first-order in whole days,
@@ -1480,24 +1494,11 @@ object Statistics {
     * windows run over DISTINCT lifetimes — bounded by the study length
     * in days, never the customer count. */
   def kaplanMeier(s: SparkSession, d: String): DataFrame = {
-    val per = Tables.orders(s, d)
-      .groupBy("o_custkey")
-      .agg(min(unix_micros(col("o_orderdate").cast("timestamp"))).as("mn"),
-        max(unix_micros(col("o_orderdate").cast("timestamp"))).as("mx"))
-    val ext = per.agg(min("mn").as("lo"), max("mx").as("hi"))
-    val life = per.crossJoin(broadcast(ext))
-      .withColumn("dur", expr("(mx - mn) div 86400000000"))
-      .withColumn("cens", (col("mx") > expr("lo + ((hi - lo) * 4) div 5")).cast("long"))
-    val byDur = life.groupBy("dur")
+    val byDur = lifetimes(Tables.orders(s, d), "o_custkey").groupBy("dur")
       .agg(count(lit(1)).as("all_at"),
         sum(lit(1) - col("cens")).as("d"),
         sum("cens").as("cens"))
-    val wo = Window.orderBy("dur")
-    byDur
-      .withColumn("n_total", sum("all_at").over(Window.partitionBy()))
-      .withColumn("before", coalesce(
-        sum("all_at").over(wo.rowsBetween(Window.unboundedPreceding, -1)), lit(0L)))
-      .withColumn("n_risk", col("n_total") - col("before"))
+    riskSet(byDur)
       .filter(col("d") > 0)
       .withColumn("lterm",
         when(col("n_risk") > col("d"), qln(col("n_risk") - col("d")) - qln(col("n_risk")))
@@ -1804,17 +1805,9 @@ object Statistics {
   def emdDrift(s: SparkSession, d: String): DataFrame = {
     val nb = KsBuckets
     val dec6 = DecimalType(38, 6)
-    val ev = graft.util.Ckpt.stage(Tables.events(s, d)
-      .filter(col("event_type").isin("click", "view") && col("value").isNotNull)
-      .groupBy("value")
-      .agg(
-        sum((col("event_type") === "click").cast("long")).as("c1"),
-        sum((col("event_type") === "view").cast("long")).as("c2")))
-    val ext = ev.agg(min("value").as("lo"), max("value").as("hi"))
-    val bucketed = graft.util.Ckpt.stage(ev.crossJoin(broadcast(ext))
-      .withColumn("bkt",
-        equalWidthBucket(col("value"), col("lo"), col("hi"), nb))
-      .drop("lo", "hi"))
+    val ev = graft.util.Ckpt.stage(clickViewCounts(s, d))
+    val bucketed = graft.util.Ckpt.stage(valueBuckets(ev, nb))
+    // not Prefix.sums: the lead patch needs each bucket's bmin beside its offsets
     val wb = Window.orderBy("bkt")
       .rowsBetween(Window.unboundedPreceding, Window.currentRow)
     // per-bucket totals AND mins in one ≤nb-row frame: prefix offsets for
@@ -1868,41 +1861,16 @@ object Statistics {
     * windows; one ≤3-integer reduce at the end. No global sort, no
     * unpartitioned window. */
   def energyDistance(s: SparkSession, d: String): DataFrame = {
-    val ev = graft.util.Ckpt.stage(Tables.events(s, d)
-      .filter(col("event_type").isin("click", "view") && col("value").isNotNull)
-      .groupBy("value")
-      .agg(
-        sum((col("event_type") === "click").cast("long")).as("c1"),
-        sum((col("event_type") === "view").cast("long")).as("c2"))
+    val ev = graft.util.Ckpt.stage(clickViewCounts(s, d)
       .withColumn("m", micro(col("value"))))
-    val ext = ev.agg(min("value").as("lo"), max("value").as("hi"))
-    val bucketed = graft.util.Ckpt.stage(ev.crossJoin(broadcast(ext))
-      .withColumn("bkt",
-        equalWidthBucket(col("value"), col("lo"), col("hi"), KsBuckets))
-      .drop("lo", "hi"))
+    val bucketed = graft.util.Ckpt.stage(valueBuckets(ev, KsBuckets))
     val cm1 = col("c1").cast(Dec0) * col("m").cast(Dec0)
     val cm2 = col("c2").cast(Dec0) * col("m").cast(Dec0)
-    val wb = Window.orderBy("bkt")
-      .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    val offs = bucketed.groupBy("bkt")
-      .agg(sum("c1").as("s1"), sum("c2").as("s2"),
-        sum(cm1).as("sm1"), sum(cm2).as("sm2"))
-      .select(col("bkt"),
-        (sum("s1").over(wb) - col("s1")).as("off1"),
-        (sum("s2").over(wb) - col("s2")).as("off2"),
-        (sum("sm1").over(wb) - col("sm1")).as("offm1"),
-        (sum("sm2").over(wb) - col("sm2")).as("offm2"))
     val tot = bucketed.agg(sum("c1").as("n1"), sum("c2").as("n2"),
       sum(cm1).as("t1"), sum(cm2).as("t2"))
-    val w = Window.partitionBy("bkt").orderBy("value")
-      .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    val seg = bucketed
-      .join(broadcast(offs), "bkt")
+    val seg = Prefix.sums(bucketed, Nil, "bkt", Seq("value"),
+        "cum1" -> col("c1"), "cum2" -> col("c2"), "cms1" -> cm1, "cms2" -> cm2)
       .crossJoin(broadcast(tot))
-      .withColumn("cum1", col("off1") + sum("c1").over(w))
-      .withColumn("cum2", col("off2") + sum("c2").over(w))
-      .withColumn("cms1", col("offm1") + sum(cm1).over(w))
-      .withColumn("cms2", col("offm2") + sum(cm2).over(w))
     val md = col("m").cast(Dec0)
     // strictly-below / strictly-above integers per side (ties at the
     // row's own value contribute |m - m| = 0 and are excluded exactly)
@@ -2180,21 +2148,10 @@ object Statistics {
       .filter(col("value").isNotNull)
       .groupBy("value", "event_type").agg(count(lit(1)).as("ct")))
     val ev = evt.groupBy("value").agg(sum("ct").as("c"))
-    val ext = ev.agg(min("value").as("lo"), max("value").as("hi"))
-    val bucketed = ev.crossJoin(broadcast(ext))
-      .withColumn("bkt",
-        equalWidthBucket(col("value"), col("lo"), col("hi"), KsBuckets))
-      .drop("lo", "hi")
-    val wb = Window.orderBy("bkt")
-      .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    val offs = bucketed.groupBy("bkt").agg(sum("c").as("sc"))
-      .select(col("bkt"), (sum("sc").over(wb) - col("sc")).as("off"))
-    val w = Window.partitionBy("bkt").orderBy("value")
-      .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    val ranked = graft.util.Ckpt.stage(bucketed.join(broadcast(offs), "bkt")
-      .withColumn("mid2",
-        lit(2) * (col("off") + sum("c").over(w) - col("c")) + col("c") + lit(1))
-      .select("value", "c", "mid2"))
+    val ranked = graft.util.Ckpt.stage(
+      Prefix.sums(valueBuckets(ev, KsBuckets), Nil, "bkt", Seq("value"), "cum" -> col("c"))
+        .withColumn("mid2", lit(2) * (col("cum") - col("c")) + col("c") + lit(1))
+        .select("value", "c", "mid2"))
     val perType = evt.join(ranked.select("value", "mid2"), "value")
       .groupBy("event_type")
       .agg(sum("ct").as("nt"), sum(col("ct") * col("mid2")).as("r2"))
@@ -2299,31 +2256,11 @@ object Statistics {
     * broadcast extent + ≤[[KsBuckets]]-row offsets, per-bucket windows,
     * one global reduce. Events are never globally sorted. */
   def cvmDrift(s: SparkSession, d: String): DataFrame = {
-    val ev = graft.util.Ckpt.stage(Tables.events(s, d)
-      .filter(col("event_type").isin("click", "view") && col("value").isNotNull)
-      .groupBy("value")
-      .agg(
-        sum((col("event_type") === "click").cast("long")).as("c1"),
-        sum((col("event_type") === "view").cast("long")).as("c2")))
-    val ext = ev.agg(min("value").as("lo"), max("value").as("hi"))
-    val bucketed = ev.crossJoin(broadcast(ext))
-      .withColumn("bkt",
-        equalWidthBucket(col("value"), col("lo"), col("hi"), KsBuckets))
-      .drop("lo", "hi")
-    val wb = Window.orderBy("bkt")
-      .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    val offs = bucketed.groupBy("bkt")
-      .agg(sum("c1").as("s1"), sum("c2").as("s2"))
-      .select(col("bkt"),
-        (sum("s1").over(wb) - col("s1")).as("off1"),
-        (sum("s2").over(wb) - col("s2")).as("off2"))
-    val w = Window.partitionBy("bkt").orderBy("value")
-      .rowsBetween(Window.unboundedPreceding, Window.currentRow)
+    val ev = graft.util.Ckpt.stage(clickViewCounts(s, d))
     val gap = col("cum1") * col("n2") - col("cum2") * col("n1")
-    val t = bucketed.join(broadcast(offs), "bkt")
+    val t = Prefix.sums(valueBuckets(ev, KsBuckets), Nil, "bkt", Seq("value"),
+        "cum1" -> col("c1"), "cum2" -> col("c2"))
       .crossJoin(broadcast(ev.agg(sum("c1").as("n1"), sum("c2").as("n2"))))
-      .withColumn("cum1", col("off1") + sum("c1").over(w))
-      .withColumn("cum2", col("off2") + sum("c2").over(w))
       .withColumn("wc", (col("c1") + col("c2")).cast(Dec0) *
         gap.cast(Dec0) * gap.cast(Dec0))
       .groupBy("n1", "n2")
@@ -2750,30 +2687,16 @@ object Statistics {
     * and order-independent; output casts back to double.
     *
     * Scale shape: identical to KM — per-customer aggregate, duration-
-    * bounded byDur frame, windows over ≤|durations| rows. The lifetime
-    * construction is duplicated (not shared) from [[kaplanMeier]]
-    * deliberately: that query's path is the engine's hardest-won parity
-    * fix and stays untouched. */
+    * bounded byDur frame, windows over ≤|durations| rows; the lifetime
+    * frame and risk set are KM's own ([[lifetimes]], [[riskSet]]). */
   def nelsonAalen(s: SparkSession, d: String): DataFrame = {
     val q9 = (c: Column) => (floor(c * lit(1000000000.0) + lit(0.5)) /
       lit(1000000000.0)).cast(DecimalType(18, 9))
-    val per = Tables.orders(s, d)
-      .groupBy("o_custkey")
-      .agg(min(unix_micros(col("o_orderdate").cast("timestamp"))).as("mn"),
-        max(unix_micros(col("o_orderdate").cast("timestamp"))).as("mx"))
-    val ext = per.agg(min("mn").as("lo"), max("mx").as("hi"))
-    val life = per.crossJoin(broadcast(ext))
-      .withColumn("dur", expr("(mx - mn) div 86400000000"))
-      .withColumn("cens", (col("mx") > expr("lo + ((hi - lo) * 4) div 5")).cast("long"))
-    val byDur = life.groupBy("dur")
+    val byDur = lifetimes(Tables.orders(s, d), "o_custkey").groupBy("dur")
       .agg(count(lit(1)).as("all_at"), sum(lit(1) - col("cens")).as("d"))
     val wo = Window.orderBy("dur")
     val run = wo.rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    byDur
-      .withColumn("n_total", sum("all_at").over(Window.partitionBy()))
-      .withColumn("before", coalesce(
-        sum("all_at").over(wo.rowsBetween(Window.unboundedPreceding, -1)), lit(0L)))
-      .withColumn("n_risk", col("n_total") - col("before"))
+    riskSet(byDur)
       .filter(col("d") > 0)
       .withColumn("h_inc", q9(col("d").cast("double") / col("n_risk").cast("double")))
       .withColumn("v_inc", q9(col("d").cast("double") /
@@ -2813,17 +2736,10 @@ object Statistics {
     * window. */
   private def logRankStat(s: SparkSession, d: String): DataFrame = {
     val segA = "AUTOMOBILE"; val segB = "BUILDING"
-    val per = Tables.orders(s, d)
+    val life = lifetimes(Tables.orders(s, d)
       .join(Tables.customer(s, d).filter(col("c_mktsegment").isin(segA, segB))
         .select(col("c_custkey"), col("c_mktsegment").as("seg")),
-        col("o_custkey") === col("c_custkey"))
-      .groupBy("o_custkey", "seg")
-      .agg(min(unix_micros(col("o_orderdate").cast("timestamp"))).as("mn"),
-        max(unix_micros(col("o_orderdate").cast("timestamp"))).as("mx"))
-    val ext = per.agg(min("mn").as("lo"), max("mx").as("hi"))
-    val life = per.crossJoin(broadcast(ext))
-      .withColumn("dur", expr("(mx - mn) div 86400000000"))
-      .withColumn("cens", (col("mx") > expr("lo + ((hi - lo) * 4) div 5")).cast("long"))
+        col("o_custkey") === col("c_custkey")), "o_custkey", "seg")
     val byDurG = life.groupBy("dur", "seg")
       .agg(count(lit(1)).as("all_at"), sum(lit(1) - col("cens")).as("dth"))
     // zero-filled (dur × seg) grid: a segment with no row at a duration
@@ -4693,7 +4609,7 @@ object Statistics {
         |  SELECT value,
         |         SUM(CASE WHEN event_type = 'click' THEN 1 ELSE 0 END) AS c1,
         |         SUM(CASE WHEN event_type = 'view'  THEN 1 ELSE 0 END) AS c2
-        |  FROM events WHERE event_type IN ('click', 'view') GROUP BY value
+        |  FROM events WHERE event_type IN ('click', 'view') AND value IS NOT NULL GROUP BY value
         |), g AS (
         |  SELECT value,
         |         SUM(c1) OVER (ORDER BY value ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS cum1,
@@ -4741,7 +4657,7 @@ object Statistics {
       """WITH ev AS (
         |  SELECT value,
         |         CASE WHEN day(CAST(ts AS TIMESTAMP)) <= 15 THEN 1 ELSE 0 END AS early
-        |  FROM events
+        |  FROM events WHERE value IS NOT NULL
         |), ext AS (SELECT min(value) AS lo, max(value) AS hi FROM ev
         |), b AS (
         |  SELECT CASE WHEN hi = lo THEN 0
@@ -4793,7 +4709,7 @@ object Statistics {
         |  SELECT value,
         |         SUM(CASE WHEN event_type = 'click' THEN 1 ELSE 0 END) AS c1,
         |         SUM(CASE WHEN event_type = 'view'  THEN 1 ELSE 0 END) AS c2
-        |  FROM events WHERE event_type IN ('click', 'view') GROUP BY value
+        |  FROM events WHERE event_type IN ('click', 'view') AND value IS NOT NULL GROUP BY value
         |), kg AS (
         |  SELECT SUM(c1) OVER (ORDER BY value ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS cum1,
         |         SUM(c2) OVER (ORDER BY value ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS cum2,
@@ -4808,7 +4724,7 @@ object Statistics {
         |), pev AS (
         |  SELECT value,
         |         CASE WHEN day(CAST(ts AS TIMESTAMP)) <= 15 THEN 1 ELSE 0 END AS early
-        |  FROM events
+        |  FROM events WHERE value IS NOT NULL
         |), pext AS (SELECT min(value) AS lo, max(value) AS hi FROM pev
         |), pb AS (
         |  SELECT CASE WHEN hi = lo THEN 0

@@ -1,6 +1,7 @@
 package graft.ops
 
 import graft.Tables
+import graft.util.Prefix
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -146,6 +147,7 @@ object SuffixOps {
     val b = withRangeBuckets(df, Seq("r1", "r2"), n)
     val w = Window.partitionBy("bkt").orderBy("r1", "r2")
     val ranked = b.withColumn("dr", dense_rank().over(w))
+    // not Prefix.sums: the offset is a distinct-key count, max(dense_rank)
     // ≤256 bucket rows: the value-domain-bounded unpartitioned window class
     val wb = Window.orderBy("bkt")
       .rowsBetween(Window.unboundedPreceding, Window.currentRow)
@@ -239,25 +241,20 @@ object SuffixOps {
     }
 
   /** Total SA order (doc_id, pos, sa 0-based): the [[suffixRanks]] frame
-    * row_numbered by (rank, doc_id, pos) under the same sampled-bounds
+    * numbered by (rank, doc_id, pos) under the same sampled-bounds
     * bucket discipline as [[denseRank2]] — the full key is UNIQUE
     * ((doc_id, pos) is a tiebreak), so a dup-heavy corpus (many equal
     * full suffixes ⇒ hot rank values) still spreads across buckets:
     * balance comes from the sampled key distribution, not from
     * rank-value spread. Plain cumulative per-bucket counts are the
-    * exact offsets (≤ [[RankBuckets]] rows, broadcast). */
+    * exact offsets (≤ [[RankBuckets]] rows, broadcast;
+    * [[graft.util.Prefix.sums]]). */
   private def saTotal(s: SparkSession, d: String): DataFrame = {
     val r = once(suffixRanks(s, d))
     val n = math.max(r.count(), 1L)
-    val b = withRangeBuckets(r, Seq("rank", "doc_id", "pos"), n)
-    val w = Window.partitionBy("bkt").orderBy("rank", "doc_id", "pos")
-    val ranked = b.withColumn("rn", row_number().over(w))
-    val wb = Window.orderBy("bkt")
-      .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    val offs = ranked.groupBy("bkt").agg(count(lit(1)).as("cnt"))
-      .select(col("bkt"), (sum("cnt").over(wb) - col("cnt")).as("off"))
-    ranked.join(broadcast(offs), "bkt")
-      .select(col("doc_id"), col("pos"), (col("off") + col("rn") - 1).as("sa"))
+    val keys = Seq("rank", "doc_id", "pos")
+    Prefix.sums(withRangeBuckets(r, keys, n), Nil, "bkt", keys, "rn" -> lit(1L))
+      .select(col("doc_id"), col("pos"), (col("rn") - 1).as("sa"))
   }
 
   /** Deterministic stride sample of the full suffix array: every
@@ -531,16 +528,8 @@ object SuffixOps {
       // SQL `div`: exact integer division (Column./ is double — loses
       // precision past 2^53, i.e. at real corpus scale)
       .withColumn("bkt", expr(s"cast((sa * $RankBuckets) div $n as int)")))
-    val w = Window.partitionBy("bkt").orderBy("sa")
-      .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    val run = marked.withColumn("rs", sum("newisl").over(w))
-    // ≤256 bucket rows: the value-domain-bounded unpartitioned window class
-    val wb = Window.orderBy("bkt")
-      .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    val offs = marked.groupBy("bkt").agg(sum("newisl").as("cnt"))
-      .select(col("bkt"), (sum("cnt").over(wb) - col("cnt")).as("off"))
-    val isl = once(run.join(broadcast(offs), "bkt")
-      .select(col("doc_id"), col("pos"), (col("off") + col("rs")).as("isl")))
+    val isl = once(Prefix.sums(marked, Nil, "bkt", Seq("sa"), "isl" -> col("newisl"))
+      .select(col("doc_id"), col("pos"), col("isl")))
     val src = Tables.documents(s, d).select(col("doc_id"), col("source"))
     val m = isl.join(src, "doc_id")
     val mixed = m.groupBy("isl")

@@ -669,10 +669,10 @@ object TrainingPrep {
     * chars of h (256 uniform buckets), per-(epoch, bucket) windows rank
     * locally (largest sort partition = one bucket = n/256), and a
     * 256·epochs-row cumulative offset table — partition-count-sized,
-    * never corpus-sized — broadcasts back; pos = offset + local
-    * row_number. This IS the q_zorder_pruning materialization recipe,
-    * so the audited position function and the 100 TB layout job now
-    * share one plan shape. */
+    * never corpus-sized — broadcasts back; pos = offset + local running
+    * count ([[graft.util.Prefix.sums]]). This IS the q_zorder_pruning
+    * materialization recipe, so the audited position function and the
+    * 100 TB layout job now share one plan shape. */
   def epochOrder(s: SparkSession, d: String): DataFrame = {
     val epochs = explode(sequence(lit(0), lit(EpochCount - 1))).as("epoch")
     val keyed = graft.util.Ckpt.stage(Tables.documents(s, d)
@@ -680,14 +680,7 @@ object TrainingPrep {
       .withColumn("h", md5(concat(lit("ep"), col("epoch").cast("string"),
         lit(":"), col("doc_id").cast("string"))))
       .withColumn("bkt", substring(col("h"), 1, 2)))
-    val wb = Window.partitionBy("epoch").orderBy("bkt")
-      .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    val offs = keyed.groupBy(col("epoch"), col("bkt"))
-      .agg(count(lit(1)).as("s"))
-      .select(col("epoch"), col("bkt"), (sum("s").over(wb) - col("s")).as("off"))
-    val w = Window.partitionBy("epoch", "bkt").orderBy(col("h"), col("doc_id"))
-    keyed.join(broadcast(offs), Seq("epoch", "bkt"))
-      .withColumn("pos", col("off") + row_number().over(w))
+    graft.util.Prefix.sums(keyed, Seq("epoch"), "bkt", Seq("h", "doc_id"), "pos" -> lit(1L))
       .filter(col("doc_id") % EpochSampleMod === 0)
       .select(col("epoch"), col("doc_id"), col("h"), col("pos"))
       .orderBy("epoch", "pos")

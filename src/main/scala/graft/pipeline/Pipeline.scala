@@ -34,8 +34,9 @@ object Pipeline {
 
   /** `s` as a JSON string literal: quotes, backslashes and every control
     * character escaped, so the literal never spans lines. The one
-    * escaper behind the manifest and the KV sink. */
-  private def jsonString(s: String): String = {
+    * escaper behind the manifest, the KV sink and `Verify`'s
+    * oracle_sql.json. */
+  private[graft] def jsonString(s: String): String = {
     val b = new StringBuilder(s.length + 2).append('"')
     s.foreach {
       case '"' => b.append("\\\"")

@@ -112,16 +112,12 @@ object Streams {
     * batch's own extent would make its bins incomparable to the
     * baseline's), and values below `lo` clamp into bin 0 (the batch
     * query never sees them — its extent is derived from the data;
-    * a stream scoring against yesterday's edges can). */
+    * a stream scoring against yesterday's edges can). NULL values are
+    * skipped, as in the batch query. */
   def psiVsBaseline(batch: DataFrame, baseline: DataFrame,
                     lo: Double, hi: Double): DataFrame = {
     val nb = graft.ops.Statistics.PsiBins
-    val counts = batch.select(col("value"))
-      .withColumn("bkt",
-        when(lit(hi) === lit(lo), lit(0)).otherwise(
-          least(lit(nb - 1), greatest(lit(0),
-            floor((col("value") - lit(lo)) * nb / (lit(hi) - lit(lo))).cast("int")))))
-      .groupBy("bkt").agg(count(lit(1)).as("r1"))
+    val counts = valueHistogram(batch, lo, hi).withColumnRenamed("cnt", "r1")
     val spine = batch.sparkSession.range(0, nb)
       .select(col("id").cast("int").as("bkt"))
     val binned = spine
@@ -174,10 +170,11 @@ object Streams {
   /** Fixed-edge histogram of `value` over [lo, hi) with [[graft.ops.
     * Statistics.PsiBins]] bins — the baseline builder for
     * [[psiVsBaseline]] (the batch stats job publishes this alongside its
-    * PSI report; same clamped binning expression as the streaming side). */
+    * PSI report; [[psiVsBaseline]] bins each micro-batch with it too).
+    * NULL values are skipped, as in the batch monitor. */
   def valueHistogram(events: DataFrame, lo: Double, hi: Double): DataFrame = {
     val nb = graft.ops.Statistics.PsiBins
-    events.select(col("value"))
+    events.select(col("value")).filter(col("value").isNotNull)
       .withColumn("bkt",
         when(lit(hi) === lit(lo), lit(0)).otherwise(
           least(lit(nb - 1), greatest(lit(0),

@@ -43,7 +43,6 @@ class BroadcastDisciplineSpec extends AnyFunSuite {
     (("graft/ops/Aggregations.scala", ".crossJoin(broadcast(bounds(\"freq\")))"), 1),
     (("graft/ops/Aggregations.scala", ".crossJoin(broadcast(bounds(\"mon\")))"), 1),
     (("graft/ops/Aggregations.scala", ".crossJoin(broadcast(ext))"), 1),
-    (("graft/ops/Aggregations.scala", "bucketed.join(broadcast(offs), \"bkt\")"), 1),
     (("graft/ops/Aggregations.scala", "li.crossJoin(broadcast(mx))"), 1),
     (("graft/ops/Aggregations.scala", "per.crossJoin(broadcast(bounds(\"rec_days\")))"), 1),
     (("graft/ops/Aggregations.scala", "val bucketed = per.crossJoin(broadcast(ext))"), 1),
@@ -152,16 +151,14 @@ class BroadcastDisciplineSpec extends AnyFunSuite {
     (("graft/ops/Similarity.scala", "var cand = once(base.crossJoin(broadcast(probes))"), 1),
     (("graft/ops/Similarity.scala", "var cand = once(base.crossJoin(broadcast(seed))"), 1),
     // ---- graft/ops/SuffixOps.scala — all bounded state: the 1-row
-    // position total, the <=256-row bucket-offset tables (x2 phases),
-    // and the value-domain-bounded token vocabulary ranks
+    // position total, denseRank2's <=256-row bucket-offset table, and
+    // the value-domain-bounded token vocabulary ranks
     (("graft/ops/SuffixOps.scala", ".crossJoin(broadcast(tot))"), 2),
     (("graft/ops/SuffixOps.scala", "val attain = pairs.join(broadcast(mx), \"lcp\")"), 1),
     // q_span_locate: the same 1-row corpus-max frame, with the
     // fixture-independence guard inline
     (("graft/ops/SuffixOps.scala", "val attain = pairs.join(broadcast(mx), \"lcp\").filter(col(\"lcp\") > 0)"), 1),
-    (("graft/ops/SuffixOps.scala", "ranked.join(broadcast(offs), \"bkt\")"), 2),
-    // q_contamination_exact's <=256-row island-offset table
-    (("graft/ops/SuffixOps.scala", "val isl = once(run.join(broadcast(offs), \"bkt\")"), 1),
+    (("graft/ops/SuffixOps.scala", "ranked.join(broadcast(offs), \"bkt\")"), 1),
     (("graft/ops/SuffixOps.scala", "var r = once(t.join(broadcast(vocab), \"tok\")"), 1),
     // ---- graft/ops/Statistics.scala
     (("graft/ops/Statistics.scala", ".crossJoin(broadcast(ev.agg(sum(\"c1\").as(\"n1\"), sum(\"c2\").as(\"n2\"))))"), 1),
@@ -170,7 +167,7 @@ class BroadcastDisciplineSpec extends AnyFunSuite {
     (("graft/ops/Statistics.scala", ".crossJoin(broadcast(tot))"), 4),
     (("graft/ops/Statistics.scala", ".join(broadcast(Tables.customer(s, d).select(col(\"c_custkey\"), col(\"c_mktsegment\"))),"), 1),
     (("graft/ops/Statistics.scala", ".join(broadcast(hi), col(\"event_type\") === col(\"t2\"))"), 1),
-    (("graft/ops/Statistics.scala", ".join(broadcast(offs), \"bkt\")"), 3),
+    (("graft/ops/Statistics.scala", ".join(broadcast(offs), \"bkt\")"), 1),
     (("graft/ops/Statistics.scala", "a.join(broadcast(b), col(\"type_b\") > col(\"type_a\"))"), 1),
     (("graft/ops/Statistics.scala", "base.join(broadcast(lo), \"event_type\")"), 1),
     (("graft/ops/Statistics.scala", "cells.crossJoin(broadcast(tot))"), 1),
@@ -181,7 +178,7 @@ class BroadcastDisciplineSpec extends AnyFunSuite {
     (("graft/ops/Statistics.scala", "dev.crossJoin(broadcast(s2))"), 1),
     (("graft/ops/Statistics.scala", "dev.join(broadcast(mad), col(\"event_type\") === col(\"t2\"))"), 1),
     (("graft/ops/Statistics.scala", "docs.join(broadcast(bounds), col(\"source\") === col(\"src\"))"), 1),
-    (("graft/ops/Statistics.scala", "ev.crossJoin(broadcast(ext))"), 1),
+    (("graft/ops/Statistics.scala", "ev.crossJoin(broadcast(ext))"), 2),
     (("graft/ops/Statistics.scala", "ev.join(broadcast(f), col(\"event_type\") === col(\"t\"))"), 1),
     (("graft/ops/Statistics.scala", "ev.join(broadcast(med), col(\"event_type\") === col(\"t\"))"), 2),
     (("graft/ops/Statistics.scala", "ev.join(broadcast(mu), col(\"event_type\") === col(\"t\"))"), 1),
@@ -191,22 +188,17 @@ class BroadcastDisciplineSpec extends AnyFunSuite {
     (("graft/ops/Statistics.scala", "sc.crossJoin(broadcast(sr)).crossJoin(broadcast(ss))"), 1),
     (("graft/ops/Statistics.scala", "stat.crossJoin(broadcast(sizes))"), 1),
     (("graft/ops/Statistics.scala", "val agg = perType.crossJoin(broadcast(glob))"), 1),
-    (("graft/ops/Statistics.scala", "val bucketed = ev.crossJoin(broadcast(ext))"), 4),
-    (("graft/ops/Statistics.scala", "val bucketed = graft.util.Ckpt.stage(ev.crossJoin(broadcast(ext))"), 2),
-    (("graft/ops/Statistics.scala", "val counts = ev.crossJoin(broadcast(ext))"), 1),
     (("graft/ops/Statistics.scala", "val curve = graft.util.Ckpt.stage(daily.crossJoin(broadcast(tot))"), 2),
     (("graft/ops/Statistics.scala", "val dev = graft.util.Ckpt.stage(daily.crossJoin(broadcast(center))"), 1),
     (("graft/ops/Statistics.scala", "val grid = graft.util.Ckpt.stage(days.crossJoin(broadcast(types))"), 1),
     (("graft/ops/Statistics.scala", "val grid = rw.crossJoin(broadcast(cl))"), 1),
     (("graft/ops/Statistics.scala", "val lagged = daily.join(broadcast(tt), col(\"event_type\") === col(\"t\"))"), 1),
-    (("graft/ops/Statistics.scala", "val life = per.crossJoin(broadcast(ext))"), 3),
+    (("graft/ops/Statistics.scala", "per.crossJoin(broadcast(ext))"), 1),
     (("graft/ops/Statistics.scala", "val per = Tables.events(s, d).crossJoin(broadcast(ext))"), 1),
     (("graft/ops/Statistics.scala", "val perBin = binned.crossJoin(broadcast(tot))"), 1),
     (("graft/ops/Statistics.scala", "val picked = ranked.join(broadcast(ks),"), 1),
-    (("graft/ops/Statistics.scala", "val ranked = graft.util.Ckpt.stage(bucketed.join(broadcast(offs), \"bkt\")"), 1),
     (("graft/ops/Statistics.scala", "val row = ev.crossJoin(broadcast(med))"), 1),
     (("graft/ops/Statistics.scala", "val sums = ev.join(broadcast(mu), col(\"event_type\") === col(\"t\"))"), 1),
-    (("graft/ops/Statistics.scala", "val t = bucketed.join(broadcast(offs), \"bkt\")"), 2),
     (("graft/ops/Statistics.scala", "val terms = perType.crossJoin(broadcast(glob))"), 1),
     (("graft/ops/Statistics.scala", "x.join(broadcast(t), \"seg\")"), 1),
     // ---- graft/ops/TextAnalysis.scala
@@ -239,12 +231,14 @@ class BroadcastDisciplineSpec extends AnyFunSuite {
     (("graft/ops/TrainingPrep.scala", ".join(broadcast(offs), \"phase\")"), 1),
     (("graft/ops/TrainingPrep.scala", ".join(broadcast(stats.crossJoin(tot).select(col(\"bucket\"), ratio.as(\"lr\"))),"), 1),
     (("graft/ops/TrainingPrep.scala", "ev.join(broadcast(stats), \"event_type\")"), 1),
-    (("graft/ops/TrainingPrep.scala", "keyed.join(broadcast(offs), Seq(\"epoch\", \"bkt\"))"), 1),
     (("graft/ops/TrainingPrep.scala", "per.crossJoin(broadcast(tot))"), 1),
     (("graft/ops/TrainingPrep.scala", "quotas.crossJoin(broadcast(short))"), 2),
     (("graft/ops/TrainingPrep.scala", "split.join(broadcast(per), col(\"source\") === col(\"src\"))"), 1),
     (("graft/ops/TrainingPrep.scala", "val phased = graft.util.Ckpt.stage(docs.crossJoin(broadcast(ext))"), 1),
     (("graft/ops/TrainingPrep.scala", "val quotas = per.crossJoin(broadcast(tot))"), 2),
+    // ---- graft/util/Prefix.scala — the <= (groups x buckets)-row
+    // offset table of every two-phase prefix sum
+    (("graft/util/Prefix.scala", "terms.foldLeft(df.join(broadcast(offs), keys)) { case (acc, (n, t)) =>"), 1),
     // ---- graft/streaming/Streams.scala
     (("graft/streaming/Streams.scala", ".join(broadcast(baseline"), 1),
     (("graft/streaming/Streams.scala", ".join(broadcast(baseline.select(col(\"bkt\"), col(\"cnt\").as(\"r2\"))),"), 1),

@@ -1144,4 +1144,36 @@ class StatisticsSpec extends AnyFunSuite {
       assert(math.abs(row.getAs[Double]("z") - z) < 1e-5, "z replay")
     }
   }
+
+  test("drift monitors skip NULL values: ks, psi, the drift report and streaming PSI") {
+    val base = java.nio.file.Files.createTempDirectory("graft_null_values").toString
+    val (clean, withNulls) = (s"$base/clean", s"$base/nulls")
+    val ev = Tables.events(spark, sf)
+    ev.write.parquet(s"$clean/events.parquet")
+    // the same rows plus NULL-valued copies of every 7th event, of every type
+    val maxId = ev.agg(max("event_id")).head.getLong(0)
+    ev.union(ev.filter(col("event_id") % 7 === 0)
+        .withColumn("event_id", col("event_id") + maxId + 1)
+        .withColumn("value", lit(null).cast("double")))
+      .write.parquet(s"$withNulls/events.parquet")
+    val nulls = Tables.events(spark, withNulls).filter(col("value").isNull)
+    assert(nulls.filter(col("event_type") === "click").count() > 0)
+    assert(nulls.filter(col("event_type") === "view").count() > 0)
+    def same(f: String => org.apache.spark.sql.DataFrame, what: String): Unit = {
+      def rows(d: String) = f(d).collect().toSeq.map(_.toSeq)
+      assert(rows(withNulls) === rows(clean), what)
+    }
+    same(ops.Statistics.ksDrift(spark, _), "ks")
+    same(ops.Statistics.psiDrift(spark, _), "psi")
+    // the chi-square monitor counts every event, NULL value or not
+    same(d => ops.Statistics.driftReport(spark, d).filter(col("monitor") =!= "chisq"),
+      "drift report ks and psi rows")
+    val cleanEv = Tables.events(spark, clean)
+    val ext = cleanEv.agg(min(col("value")), max(col("value"))).head
+    val (lo, hi) = (ext.getDouble(0), ext.getDouble(1))
+    val baseline = streaming.Streams.valueHistogram(
+      cleanEv.filter(col("event_type") === "view"), lo, hi)
+    same(d => streaming.Streams.psiVsBaseline(Tables.events(spark, d), baseline, lo, hi),
+      "streaming psi")
+  }
 }
