@@ -325,8 +325,8 @@ object Dedup {
     * (what GraphX does internally); set `spark.graft.checkpoint.dir` for
     * a durable checkpoint that survives executor loss. Rounds needed = graph diameter in
     * doc→bucket→doc hops; near-dup clusters are shallow (planted chains
-    * converge in 2-3), with a hard cap as a safety net. The driver-side
-    * loop holds only a changed-row COUNT, never data. */
+    * converge in 2-3). [[graft.util.Fixpoint.labels]] runs the loop to
+    * its fixpoint, holding only a changed-row COUNT, never data. */
   def dedupClusters(s: SparkSession, d: String): DataFrame =
     dedupClustersFrom(
       graft.util.Ckpt.stage(bandBuckets(s, d, spreadInput = false)))
@@ -343,32 +343,26 @@ object Dedup {
     * gave identical labels in 2 rounds, but slowed `q_dedup_clusters`
     * on the llm_curation benchmark in all 4 alternating pairs (seeds
     * 11–14: 3.11/3.34/5.98/4.94 s vs 2.93/2.59/3.87/3.55 s; op_tail_s
-    * +12–57%). The two loops share no logic, so they stay separate. */
+    * +12–57%). So the steps differ; the driver loop
+    * ([[graft.util.Fixpoint.labels]]) is shared. */
   private[graft] def dedupClustersFrom(buckets: DataFrame): DataFrame = {
     // seed with one propagation round already applied: label(doc) = min
     // doc_id over the doc's buckets (each doc is in its own buckets, so the
     // seed is ≤ doc_id). Equivalent to initializing label=doc_id and
     // running the loop body once, but without the loop's join against the
     // previous labels — saves a full round on shallow graphs.
-    var labels = buckets
+    val seed = buckets
       .join(buckets.groupBy("bkey").agg(min("doc_id").as("bl")), "bkey")
       .groupBy("doc_id").agg(min("bl").as("label"))
       .transform(graft.util.Ckpt.stage)
-    var rounds = 0
-    var changed = 1L
-    while (changed > 0 && rounds < 20) {
-      val bucketMin = buckets.join(labels, "doc_id")
+    val (labels, _) = graft.util.Fixpoint.labels(seed, "dedup") { cur =>
+      val bucketMin = buckets.join(cur, "doc_id")
         .groupBy("bkey").agg(min("label").as("bl"))
-      val next = buckets.join(bucketMin, "bkey")
+      buckets.join(bucketMin, "bkey")
         .groupBy("doc_id").agg(min("bl").as("nl"))
-        .join(labels, "doc_id")
+        .join(cur, "doc_id")
         .select(col("doc_id"), least(col("nl"), col("label")).as("label"),
           (col("nl") < col("label")).cast("int").as("chg"))
-        .transform(graft.util.Ckpt.stage)
-      // coalesce: sum over an empty label set is null (empty input corpus)
-      changed = next.agg(coalesce(sum("chg"), lit(0L))).collect()(0).getLong(0)
-      labels = next.select("doc_id", "label")
-      rounds += 1
     }
     labels
       .withColumn("is_dup", (col("label") < col("doc_id")).cast("int"))

@@ -106,34 +106,27 @@ object Graph {
   private def undLanes(e: Seq[(Int, Int)]): Seq[(Int, Int)] =
     (e ++ e.map(p => (p._2, p._1))).filter(p => p._1 != p._2).distinct
 
-  /** Min-hop relaxation from one seed to the fixpoint — exact Long
-    * arithmetic, identical to the staged loop it replaces (the ≤30-round
-    * cap is unreachable: hop values are bounded by |nodes| − 1). */
+  /** Min-hop distances from one seed: breadth-first search over the
+    * (src, dst) lanes, which gives the same map as min-hop relaxation to
+    * the fixpoint (self-loops included: they never shorten a distance).
+    * Unreachable nodes are absent. */
   private def relaxFrom(seed: Int, und: Seq[(Int, Int)]): Map[Int, Long] = {
+    val adj = und.groupMap(_._1)(_._2)
     val dist = scala.collection.mutable.Map[Int, Long](seed -> 0L)
-    var changed = 1
-    var rounds = 0
-    while (changed > 0 && rounds < 30) {
-      changed = 0
-      val relaxed = scala.collection.mutable.Map[Int, Long]()
-      und.foreach { case (src, dst) =>
-        dist.get(src).foreach { dv =>
-          val nd = dv + 1
-          if (relaxed.get(dst).forall(nd < _)) relaxed(dst) = nd
-        }
+    val queue = scala.collection.mutable.Queue(seed)
+    while (queue.nonEmpty) {
+      val u = queue.dequeue()
+      adj.getOrElse(u, Nil).foreach { v =>
+        if (!dist.contains(v)) { dist(v) = dist(u) + 1; queue.enqueue(v) }
       }
-      relaxed.foreach { case (n2, nd) =>
-        if (dist.get(n2).forall(nd < _)) { dist(n2) = nd; changed += 1 }
-      }
-      rounds += 1
     }
     dist.toMap
   }
 
   /** Hop distance from the hub nation (node 0) over UNDIRECTED trade
-    * lanes: min-distance relaxation to convergence, run on the DRIVER
+    * lanes: breadth-first search ([[relaxFrom]]), run on the DRIVER
     * over the collected ≤|nations|² lane list ([[localGraph]]) — pure
-    * integer min/+1 algebra, so the fixpoint is bit-identical to the
+    * integer +1 algebra, so the distances are bit-identical to the
     * staged per-round loop it replaces while the ~3 jobs/round stage
     * storm disappears. Unreachable nations report null. At 100 TB the
     * derivation pass dominates and the local loop is free. */
@@ -730,11 +723,10 @@ object Graph {
     * reaches, with the reach count reported so disconnected graphs stay
     * honest.
     *
-    * Determinism: pure integer min-distance relaxation to a fixpoint
-    * ([[bfsHops]] multi-sourced — same convergence-scalar loop, same
-    * exact integer state); closeness is ONE division of exact integers,
-    * 6-dp floor-quantized. The oracle reaches the same fixpoint with a
-    * depth-bounded recursive closure + min().
+    * Determinism: pure integer hop distances ([[bfsHops]]' search from
+    * every source, same exact integer state); closeness is ONE division
+    * of exact integers, 6-dp floor-quantized. The oracle reaches the same
+    * distances with a depth-bounded recursive closure + min().
     *
     * Scale shape: the [[tradeEdges]] derivation dominates; the
     * relaxation state is |nations|² (src, node, dist) rows over the

@@ -108,38 +108,29 @@ object Similarity {
   /** THE min-label connected-components loop, the Spark twin of the
     * oracle's [[minLabelCtes]]: from base labels (vec_id, label) over
     * undirected (src, dst) edges, each round takes the min over
-    * neighbors' labels, then path-halves l ← min(l, l(l)), stages, and
-    * counts changed labels; at most 30 rounds, one `[cc] <tag>` stderr
-    * line per round. Every label must be a vertex of `labels0` so the
-    * halving self-join resolves; rounds drop from component DIAMETER to
-    * ~log(diameter). Returns the final labels and the rounds run. */
+    * neighbors' labels, then path-halves l ← min(l, l(l)); the driver
+    * loop is [[graft.util.Fixpoint.labels]] (staging, changed count, one
+    * `[cc] <tag>` stderr line per round). Every label must be a vertex of
+    * `labels0` so the halving self-join resolves; rounds drop from
+    * component DIAMETER to ~log(diameter). Returns the final labels and
+    * the rounds run. */
   private[graft] def minLabelComponents(labels0: DataFrame, edges: DataFrame,
-                                        tag: String): (DataFrame, Int) = {
-    var labels = labels0
-    var rounds = 0
-    var changed = 1L
-    while (changed > 0 && rounds < 30) {
+                                        tag: String): (DataFrame, Int) =
+    // NOTE (r14, measured): do NOT fuse two propagate+halve steps into
+    // one staged round — Spark has no common-subexpression reuse across
+    // join branches, so the inner step's edge join recomputes once per
+    // consumer branch (up to 4×): 6 rounds → 4, but 3.3 s → 4.5 s.
+    graft.util.Fixpoint.labels(labels0, tag) { labels =>
       val nbrMin = edges.join(labels, edges("dst") === labels("vec_id"))
         .groupBy("src").agg(min("label").as("nl"))
       val stepped = labels.join(nbrMin, labels("vec_id") === nbrMin("src"), "left")
         .select(labels("vec_id"), col("label").as("old"),
           least(col("label"), coalesce(col("nl"), col("label"))).as("l1"))
       val ptr = stepped.select(col("vec_id").as("pv"), col("l1").as("pl"))
-      val next = stepped.join(ptr, stepped("l1") === ptr("pv"))
+      stepped.join(ptr, stepped("l1") === ptr("pv"))
         .select(stepped("vec_id"), least(col("l1"), col("pl")).as("label"),
           (least(col("l1"), col("pl")) < col("old")).cast("int").as("chg"))
-        .transform(once)
-      changed = next.agg(coalesce(sum("chg"), lit(0L))).collect()(0).getLong(0)
-      labels = next.select("vec_id", "label")
-      rounds += 1
-      // NOTE (r14, measured): do NOT fuse two propagate+halve steps into
-      // one staged round — Spark has no common-subexpression reuse across
-      // join branches, so the inner step's edge join recomputes once per
-      // consumer branch (up to 4×): 6 rounds → 4, but 3.3 s → 4.5 s.
-      System.err.println(s"[cc] $tag round $rounds changed=$changed")
     }
-    (labels, rounds)
-  }
 
   /** [[cosineTopk]]'s query stride: every [[CosineStride]]-th vector is a
     * query. Named (ADVICE r10) because [[rboRankings]]' b-leg filters
@@ -1457,6 +1448,7 @@ object Similarity {
     var means: DataFrame = null
     var converged = false
     val changes = scala.collection.mutable.ArrayBuffer.empty[(Int, Long)]
+    // not util.Fixpoint: KmIters is the oracle unroll's length; unconverged means are its output
     for (i <- 1 to KmIters) {
       if (converged) {
         changes += ((i, 0L))

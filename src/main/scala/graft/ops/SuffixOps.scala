@@ -202,6 +202,7 @@ object SuffixOps {
       .select(col("doc_id"), col("pos"), col("vr").cast("long").as("rank")))
     var k = 1L
     var round = 1
+    // not util.Fixpoint: prefix doubling stops at card == n, within ⌈log₂ maxLen⌉ rounds
     while (k < maxLen && card < n) {
       val t0 = System.nanoTime()
       val nxt = r.select(col("doc_id"), (col("pos") - lit(k)).as("pos"),

@@ -1,11 +1,11 @@
 package graft.pipeline
 
-import java.nio.file.{Files, Path, Paths}
+import java.nio.file.{Files, Path, Paths, StandardCopyOption}
 import scala.jdk.CollectionConverters._
 import scala.util.{Failure, Success, Try, Using}
 
 import graft.Tables
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{AnalysisException, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** The reference's two-job pipeline, re-expressed (SURVEY.md R11/R12/R16/
@@ -92,14 +92,15 @@ object Pipeline {
   /** KV-store sink (R16): per-partition micro-batched writes, 25 items per
     * batch — a partitioned JSONL directory standing in for the DynamoDB
     * table. One "client" (file handle) per partition, like the boto3 client
-    * per partition in `process_tsv.py:73-74`. */
+    * per partition in `process_tsv.py:73-74`. Each task's `part-<pid>.jsonl`
+    * appears only complete ([[writeAtomically]]), so a failed or retried
+    * task never leaves a partial partition file. */
   def kvSink(items: DataFrame, outDir: String, batchSize: Int = 25): Unit = {
     Files.createDirectories(Paths.get(outDir))
     items.select(col("id"), col("word"), col("count")).repartition(10)
       .foreachPartition { (it: Iterator[org.apache.spark.sql.Row]) =>
         val pid = org.apache.spark.TaskContext.getPartitionId()
-        val out = Files.newBufferedWriter(Paths.get(s"$outDir/part-$pid.jsonl"))
-        try {
+        writeAtomically(Paths.get(s"$outDir/part-$pid.jsonl")) { out =>
           it.grouped(batchSize).foreach { batch =>
             // one "BatchWriteItem" per group of 25
             batch.foreach { r =>
@@ -108,15 +109,30 @@ object Pipeline {
             }
             out.flush()
           }
-        } finally out.close()
+        }
       }
   }
 
-  /** Retry wrapper (R18: Glue maxRetries=2). */
+  /** Writes `dst` through a hidden temp file beside it, moved over `dst`
+    * only once `body` returns and deleted if it throws — so `dst` is
+    * never seen partial. */
+  private def writeAtomically(dst: Path)(body: java.io.BufferedWriter => Unit): Unit = {
+    val tmp = dst.resolveSibling(s".${dst.getFileName}.${java.util.UUID.randomUUID}.tmp")
+    try {
+      val out = Files.newBufferedWriter(tmp)
+      try body(out) finally out.close()
+      Files.move(tmp, dst, StandardCopyOption.ATOMIC_MOVE, StandardCopyOption.REPLACE_EXISTING)
+    } finally Files.deleteIfExists(tmp)
+  }
+
+  /** Retry wrapper (R18: Glue maxRetries=2). An `AnalysisException`
+    * (missing path, unresolved column) fails the same way every time, so
+    * it is rethrown on the first attempt. */
   def retry[T](attempts: Int)(f: => T): T =
     Try(f) match {
       case Success(v) => v
-      case Failure(e) if attempts > 1 => retry(attempts - 1)(f)
+      case Failure(e: AnalysisException) => throw e
+      case Failure(_) if attempts > 1 => retry(attempts - 1)(f)
       case Failure(e) => throw e
     }
 

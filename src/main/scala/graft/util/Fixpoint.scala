@@ -1,0 +1,45 @@
+package graft.util
+
+import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.functions._
+
+/** The driver loop of the engine's min-label propagations
+  * ([[graft.ops.Dedup.dedupClustersFrom]],
+  * [[graft.ops.Similarity.minLabelComponents]]). The driver holds only
+  * two counts per round, never data.
+  *
+  * The cap comes from the input, not a constant: labels only decrease,
+  * and each round carries every label at least one hop further, so a map
+  * of n rows settles by round n. A round ≥ n that still changes labels
+  * throws instead of returning unconverged labels.
+  */
+object Fixpoint {
+
+  /** Runs `step` from `init` until no label changes. `step` maps the
+    * current labels to the next labels plus an int `chg` column (1 where
+    * the label changed). Each round stages `step(labels)`, counts changed
+    * labels and rows in one 1-row job, prints `[cc] <tag> round r
+    * changed=c` and drops `chg`. Returns the settled labels and the
+    * rounds run. */
+  def labels(init: DataFrame, tag: String)(step: DataFrame => DataFrame)
+      : (DataFrame, Int) = {
+    var labels = init
+    var round = 0
+    var changed = 1L
+    while (changed > 0) {
+      round += 1
+      val next = Ckpt.stage(step(labels))
+      // coalesce: sum over an empty label map is null
+      val r = next.agg(coalesce(sum("chg"), lit(0L)), count(lit(1))).collect()(0)
+      changed = r.getLong(0)
+      val n = r.getLong(1)
+      System.err.println(s"[cc] $tag round $round changed=$changed")
+      if (changed > 0 && round >= n)
+        throw new IllegalStateException(s"[cc] $tag: $changed labels still " +
+          s"changed in round $round of a $n-row label map, which settles " +
+          s"by round $n; the step does not converge")
+      labels = next.drop("chg")
+    }
+    (labels, round)
+  }
+}

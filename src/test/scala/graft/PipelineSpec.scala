@@ -86,6 +86,35 @@ class PipelineSpec extends AnyFunSuite {
     }
   }
 
+  test("retry rethrows an AnalysisException on the first attempt") {
+    val missing = Files.createTempDirectory("graft_retry").resolve("absent").toString
+    var calls = 0
+    intercept[org.apache.spark.sql.AnalysisException] {
+      Pipeline.retry(3) {
+        calls += 1
+        spark.read.parquet(missing)
+      }
+    }
+    assert(calls === 1)
+  }
+
+  test("KV sink leaves no partition file behind when its tasks fail") {
+    import spark.implicits._
+    import org.scalatest.concurrent.Eventually._
+    import org.scalatest.time.{Seconds, Span}
+    // a NULL count fails every task at its first row
+    val items = (1 to 200).map(i => (s"word_w$i", s"w$i", Option.empty[Int]))
+      .toDF("id", "word", "count")
+    val out = Files.createTempDirectory("graft_kv_fail").resolve("kv")
+    intercept[Exception](Pipeline.kvSink(items, out.toString))
+    // tasks still running when the job aborts finish on their own
+    eventually(timeout(Span(10, Seconds))) {
+      val left = scala.util.Using.resource(Files.list(out))(
+        _.iterator().asScala.map(_.getFileName.toString).toList)
+      assert(left.isEmpty, s"files left after a failed sink: ${left.mkString(", ")}")
+    }
+  }
+
   test("observe() collects pipeline metrics in the same pass as the action") {
     import org.apache.spark.sql.functions._
     // production shape: the ETL stage observes row counts / sums while
