@@ -1,8 +1,10 @@
 package graft
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.types.StructType
 
-/** Fixture-table loaders (schemas in /root/repo/FIXTURES.md).
+/** Fixture-table loaders (schemas in FIXTURES.md) and the engine's one
+  * Parquet reader.
   *
   * Mirrors the reference's source stage — a Parquet scan
   * (`infra/scripts/process_tsv.py:62-64`) — generalized to the driver's
@@ -11,8 +13,44 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * immediately, so the parquet reader only materializes needed columns.
   */
 object Tables {
+
+  /** (path, `*parquet*` session confs, leaf path:size:mtime list) →
+    * inferred schema, memoized for the JVM's lifetime. */
+  private val schemaMemo =
+    new java.util.concurrent.ConcurrentHashMap[String, StructType]()
+
+  /** The engine's one Parquet reader. An inferred `read.parquet` runs a
+    * Spark job to read footers, on every call; here Spark infers each
+    * table's schema once and every read declares it, which runs no job.
+    *
+    * The schema is keyed by the path, the session's `*parquet*` SQL confs
+    * (`spark.sql.legacy.parquet.nanosAsLong` changes what `events.ts`
+    * infers to) and each leaf file's path, size and mtime, so a
+    * table rewritten in place is inferred again. A path with no files
+    * (missing, empty, a glob) is read inferred, so it fails as Spark's own
+    * read does. */
+  def parquet(s: SparkSession, path: String): DataFrame = {
+    val root = new org.apache.hadoop.fs.Path(path)
+    val fs = root.getFileSystem(s.sparkContext.hadoopConfiguration)
+    val leaves = scala.collection.mutable.ArrayBuffer.empty[String]
+    if (fs.exists(root)) {
+      val it = fs.listFiles(root, true)
+      while (it.hasNext) {
+        val f = it.next()
+        leaves += s"${f.getPath}:${f.getLen}:${f.getModificationTime}"
+      }
+    }
+    if (leaves.isEmpty) s.read.parquet(path)
+    else {
+      val confs = s.conf.getAll.filter(_._1.contains("parquet")).toSeq.sorted
+      val key = (Seq(path) ++ confs.map { case (k, v) => s"$k=$v" } ++ leaves.sorted).mkString("|")
+      val st = schemaMemo.computeIfAbsent(key, _ => s.read.parquet(path).schema)
+      s.read.schema(st).parquet(path)
+    }
+  }
+
   private def p(spark: SparkSession, dir: String, name: String): DataFrame =
-    spark.read.parquet(s"$dir/$name.parquet")
+    parquet(spark, s"$dir/$name.parquet")
 
   def region(s: SparkSession, d: String): DataFrame   = p(s, d, "region")
   def nation(s: SparkSession, d: String): DataFrame   = p(s, d, "nation")

@@ -68,5 +68,5 @@ object Partitioning {
     * and result equality with the unpartitioned join). */
   def dppJoin(s: SparkSession, factPath: String, dim: DataFrame,
               key: String): DataFrame =
-    s.read.parquet(factPath).join(broadcast(dim), key)
+    graft.Tables.parquet(s, factPath).join(broadcast(dim), key)
 }

@@ -175,7 +175,7 @@ object Relational {
     * item 3 — file NAMES are fixture-layout artifacts, row accounting is
     * not). Zero extra I/O either way. */
   def fileLineage(s: SparkSession, d: String): DataFrame =
-    s.read.parquet(s"$d/documents.parquet")
+    Tables.parquet(s, s"$d/documents.parquet")
       .select(col("_metadata.file_name").as("src_file"))
       .groupBy("src_file").agg(count(lit(1)).as("file_rows"))
       // the one genuinely layout-invariant output is the total row count

@@ -1131,8 +1131,8 @@ object Similarity {
     * doubles that round-trip parquet. */
   def pqAdcServed(s: SparkSession, d: String): DataFrame = {
     val runDir = pqModelMaterialize(s, d)
-    val cb = s.read.parquet(s"$runDir/codebook")
-    val codes = s.read.parquet(s"$runDir/codes")
+    val cb = Tables.parquet(s, s"$runDir/codebook")
+    val codes = Tables.parquet(s, s"$runDir/codes")
     adcTopk(codes, pqLutOf(pqSubvectors(s, d), cb))
   }
 
@@ -1294,10 +1294,10 @@ object Similarity {
     val runDir = ivfPqModelMaterialize(s, d)
     val nq = once(withNorm(Tables.embeddings(s, d)).select("vec_id", "v", "norm"))
     ivfPqScore(
-      s.read.parquet(s"$runDir/cells"),
-      ivfPqProbesOf(nq, s.read.parquet(s"$runDir/centroids").toDF("cid", "cv", "cn")),
-      s.read.parquet(s"$runDir/codes"),
-      ivfPqLutOf(pqSubvectors(s, d), s.read.parquet(s"$runDir/codebook")))
+      Tables.parquet(s, s"$runDir/cells"),
+      ivfPqProbesOf(nq, Tables.parquet(s, s"$runDir/centroids").toDF("cid", "cv", "cn")),
+      Tables.parquet(s, s"$runDir/codes"),
+      ivfPqLutOf(pqSubvectors(s, d), Tables.parquet(s, s"$runDir/codebook")))
   }
 
   /** SemDeDup-style semantic dedup: connected components over the
@@ -1666,7 +1666,7 @@ object Similarity {
     * and the doubles round-trip parquet exactly. */
   def annIvfServed(s: SparkSession, d: String): DataFrame = {
     val runDir = ivfModelMaterialize(s, d)
-    ivfServe(kmeansCorpus(s, d), s.read.parquet(s"$runDir/centroids"), doubleDot)
+    ivfServe(kmeansCorpus(s, d), Tables.parquet(s, s"$runDir/centroids"), doubleDot)
   }
 
   /** Selection depth and relevance weight for [[mmrSelect]]. λ = 0.7 is

@@ -4,9 +4,10 @@ import java.nio.file.{Files, Path, Paths, StandardCopyOption}
 import scala.jdk.CollectionConverters._
 import scala.util.{Failure, Success, Try, Using}
 
-import graft.Tables
+import org.apache.spark.SparkThrowable
 import org.apache.spark.sql.{AnalysisException, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{LongType, StringType, StructField, StructType}
 
 /** The reference's two-job pipeline, re-expressed (SURVEY.md R11/R12/R16/
   * R17/R18).
@@ -31,6 +32,12 @@ object Pipeline {
 
   /** `metadata.json` shape, per `demo-etl-2a-notebook.py:68`. */
   case class RunManifest(timestamp: String, input_files: Seq[String])
+
+  /** The `word_counts` handoff: the schema stage A writes
+    * ([[graft.ops.Relational.wordCount]]) and stage B declares when it
+    * reads a run back, so the read runs no schema-inference job. */
+  val WordCounts: StructType = StructType(Seq(
+    StructField("word", StringType), StructField("cnt", LongType)))
 
   /** `s` as a JSON string literal: quotes, backslashes and every control
     * character escaped, so the literal never spans lines. The one
@@ -94,9 +101,14 @@ object Pipeline {
     * table. One "client" (file handle) per partition, like the boto3 client
     * per partition in `process_tsv.py:73-74`. Each task's `part-<pid>.jsonl`
     * appears only complete ([[writeAtomically]]), so a failed or retried
-    * task never leaves a partial partition file. */
-  def kvSink(items: DataFrame, outDir: String, batchSize: Int = 25): Unit = {
+    * task never leaves a partial partition file.
+    *
+    * Returns the number of items written, counted by an accumulator the
+    * write action fills: Spark applies an action's accumulator update once
+    * per successful task, so a retried task is not counted twice. */
+  def kvSink(items: DataFrame, outDir: String, batchSize: Int = 25): Long = {
     Files.createDirectories(Paths.get(outDir))
+    val written = items.sparkSession.sparkContext.longAccumulator
     items.select(col("id"), col("word"), col("count")).repartition(10)
       .foreachPartition { (it: Iterator[org.apache.spark.sql.Row]) =>
         val pid = org.apache.spark.TaskContext.getPartitionId()
@@ -108,9 +120,11 @@ object Pipeline {
               out.newLine()
             }
             out.flush()
+            written.add(batch.size.toLong)
           }
         }
       }
+    written.value
   }
 
   /** Writes `dst` through a hidden temp file beside it, moved over `dst`
@@ -125,15 +139,23 @@ object Pipeline {
     } finally Files.deleteIfExists(tmp)
   }
 
-  /** Retry wrapper (R18: Glue maxRetries=2). An `AnalysisException`
-    * (missing path, unresolved column) fails the same way every time, so
-    * it is rethrown on the first attempt. */
+  /** Retry wrapper (R18: Glue maxRetries=2). A failure that fails the
+    * same way every time is rethrown on the first attempt: an
+    * `AnalysisException` (missing path, unresolved column) or a data
+    * error, SQLSTATE class 22 (a NULL in a non-null field, division by
+    * zero, a bad cast), anywhere in the failure's cause chain. */
   def retry[T](attempts: Int)(f: => T): T =
     Try(f) match {
       case Success(v) => v
-      case Failure(e: AnalysisException) => throw e
-      case Failure(_) if attempts > 1 => retry(attempts - 1)(f)
+      case Failure(e) if attempts > 1 && !deterministic(e) => retry(attempts - 1)(f)
       case Failure(e) => throw e
+    }
+
+  private def deterministic(e: Throwable): Boolean =
+    Iterator.iterate(e)(_.getCause).takeWhile(_ != null).exists {
+      case _: AnalysisException => true
+      case t: SparkThrowable => Option(t.getSqlState).exists(_.startsWith("22"))
+      case _ => false
     }
 
   /** The whole two-stage workflow: A (word count → parquet + manifest) then,
@@ -150,15 +172,8 @@ object Pipeline {
     retry(3) {
       val latest = latestRun(s"$workDir/analysis_results")
         .getOrElse(sys.error("no completed run found")) // process_tsv.py:57-59
-      val wc = spark.read.parquet(s"$latest/word_counts")
-      // cache before the sink + count pair — the reference recomputes the
-      // whole plan for its second count() (process_tsv.py:65,130), an
-      // anti-pattern SURVEY.md §4 explicitly does not replicate
-      val items = kvItems(wc).cache()
-      try {
-        kvSink(items, s"$workDir/kv_table")
-        items.count()
-      } finally items.unpersist()
+      kvSink(kvItems(spark.read.schema(WordCounts).parquet(s"$latest/word_counts")),
+        s"$workDir/kv_table")
     }
   }
 }

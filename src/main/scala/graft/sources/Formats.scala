@@ -51,9 +51,7 @@ object Formats {
   def writeJsonl(df: DataFrame, path: String): Unit =
     df.write.mode(SaveMode.Overwrite).json(path)
 
-  /** R10/R13: columnar at rest. */
-  def readParquet(s: SparkSession, path: String): DataFrame = s.read.parquet(path)
-
+  /** R10/R13: columnar at rest. Read it back with [[graft.Tables.parquet]]. */
   def writeParquet(df: DataFrame, path: String): Unit =
     df.write.mode(SaveMode.Overwrite).parquet(path)
 
@@ -121,7 +119,7 @@ object Formats {
     * repartition — no shuffle key, every output file near-equal size. */
   def compact(s: SparkSession, inPath: String, outPath: String,
               targetFileBytes: Long = 128L << 20): Int = {
-    val df = s.read.parquet(inPath)
+    val df = graft.Tables.parquet(s, inPath)
     val bytes = df.queryExecution.optimizedPlan.stats.sizeInBytes
     val parts = math.max(1L,
       ((bytes + targetFileBytes - 1) / targetFileBytes).toLong).toInt
@@ -139,7 +137,7 @@ object Formats {
     FixtureTables.foreach { t =>
       val df = t match {
         case "events" => graft.Tables.events(s, dir)
-        case _ => s.read.parquet(s"$dir/$t.parquet")
+        case _ => graft.Tables.parquet(s, s"$dir/$t.parquet")
       }
       df.createOrReplaceTempView(t)
     }

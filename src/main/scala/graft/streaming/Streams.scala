@@ -21,7 +21,7 @@ object Streams {
 
   /** Streaming source over the events directory, ts normalized to a proper
     * microsecond timestamp. Streaming reads require an explicit schema; we
-    * take it from a one-footer batch read of the same file so the stream
+    * take it from the batch reader ([[graft.Tables.parquet]]) so the stream
     * tracks the fixture's physical layout (int64 nanos in the original
     * generation, timestamp[us]/NTZ in the regenerated one — see
     * [[graft.Tables.events]]), then apply the same normalization the batch
@@ -36,7 +36,7 @@ object Streams {
   def eventsStream(spark: SparkSession, dir: String): DataFrame = {
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     val table = new org.apache.hadoop.fs.Path(s"$dir/events.parquet")
-    val physical = spark.read.parquet(table.toString).schema
+    val physical = graft.Tables.parquet(spark, table.toString).schema
     val reader = spark.readStream.schema(physical)
     // layout-aware (the embeddingsStream fix): when the table is a
     // DIRECTORY of part files (sharded sf1 layout) the stream must target
@@ -514,6 +514,7 @@ object Streams {
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
         graft.pipeline.Pipeline.kvSink(
           graft.pipeline.Pipeline.kvItems(batch), s"$outDir/batch_$batchId")
+        ()
       }
   }
 

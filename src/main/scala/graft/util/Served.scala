@@ -12,7 +12,8 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * logic is where stale-artifact bugs breed). The first caller in a
   * session materializes the payload as Parquet under the run-manifest
   * layout; every later caller's plan is a bare parquet scan with zero
-  * build lineage.
+  * build lineage, read through [[graft.Tables.parquet]], so its schema is
+  * inferred once per artifact and a served read runs no Spark job.
   *
   * Key (ADVICE r11): name + version + canonical dataset path + a CONTENT
   * fingerprint (MD5 of file bytes) of the named input tables — mtime
@@ -144,7 +145,7 @@ object Served {
     val runDir = dir(s, name, version, d, inputs) { tmp =>
       build.write.mode("overwrite").parquet(s"$tmp/$payload")
     }
-    s.read.parquet(s"$runDir/$payload")
+    graft.Tables.parquet(s, s"$runDir/$payload")
   }
 
   /** Serve `build`'s result for dataset `d`, materializing on first use. */

@@ -108,7 +108,7 @@ class BroadcastDisciplineSpec extends AnyFunSuite {
     (("graft/ops/Maintenance.scala", "per.crossJoin(broadcast(wm))"), 1),
     (("graft/ops/Maintenance.scala", "val ev = Tables.events(s, d).crossJoin(broadcast(ext))"), 1),
     // ---- graft/ops/Partitioning.scala
-    (("graft/ops/Partitioning.scala", "s.read.parquet(factPath).join(broadcast(dim), key)"), 1),
+    (("graft/ops/Partitioning.scala", "graft.Tables.parquet(s, factPath).join(broadcast(dim), key)"), 1),
     // ---- graft/ops/Relational.scala
     (("graft/ops/Relational.scala", ".crossJoin(broadcast(avgPrice))"), 1),
     // ---- graft/ops/ScaleOps.scala

@@ -115,6 +115,46 @@ class PipelineSpec extends AnyFunSuite {
     }
   }
 
+  test("retry rethrows a data error (SQLSTATE class 22) on the first attempt") {
+    import spark.implicits._
+    // a NULL count fails the sink with ROW_VALUE_IS_NULL (22023) every time
+    val items = (1 to 20).map(i => (s"word_w$i", s"w$i", Option.empty[Int]))
+      .toDF("id", "word", "count")
+    val out = Files.createTempDirectory("graft_retry_data").resolve("kv").toString
+    var calls = 0
+    intercept[Exception] {
+      Pipeline.retry(3) {
+        calls += 1
+        Pipeline.kvSink(items, out)
+      }
+    }
+    assert(calls === 1)
+  }
+
+  test("KV sink returns the number of JSONL lines it wrote") {
+    import spark.implicits._
+    val items = Pipeline.kvItems((1 to 137).map(i => (s"w$i", i.toLong)).toDF("word", "cnt"))
+    val out = Files.createTempDirectory("graft_kv_count").resolve("kv")
+    val n = Pipeline.kvSink(items, out.toString)
+    val lines = scala.util.Using.resource(Files.list(out))(_.iterator().asScala
+      .map(p => Files.readAllLines(p).size.toLong).sum)
+    assert(n === lines && n === 137L)
+  }
+
+  test("stage A writes the word_counts schema stage B declares") {
+    def fields(st: org.apache.spark.sql.types.StructType) = st.map(f => (f.name, f.dataType))
+    assert(fields(graft.ops.Relational.wordCount(spark, sf).schema) === fields(Pipeline.WordCounts))
+  }
+
+  test("a warm word-count pipeline run takes 6 Spark jobs") {
+    val work = Files.createTempDirectory("graft_pipeline_jobs").toString
+    Pipeline.runWordCountPipeline(spark, sf, work, runId = "20240101_000000")
+    val jobs = org.apache.spark.graftbridge.Jobs.count(spark.sparkContext) {
+      Pipeline.runWordCountPipeline(spark, sf, work, runId = "20240102_000000")
+    }
+    assert(jobs === 6)
+  }
+
   test("observe() collects pipeline metrics in the same pass as the action") {
     import org.apache.spark.sql.functions._
     // production shape: the ETL stage observes row counts / sums while
