@@ -85,65 +85,46 @@ def castscan(sfdirs):
           " the driver's build can differ even when this one agrees)")
     sys.exit(1 if total_bad else 0)
 
-def benchdiff(old_path, new_path, ratio=2.5, floor_sec=0.5):
-    """Bench-regression gate (VERDICT r9 item 3): diff two BENCH_FULL
-    per-query minima maps and fail on any query regressing more than
-    `ratio`x while costing over `floor_sec` in the new run. Catches the
-    r8 q_kmeans_step / r9 q_kmeans_train class at build time instead of
-    judge time. Usage: dev/check.py --benchdiff OLD.json NEW.json
-    (OLD is typically the committed BENCH_FULL.json of the last round:
-     `git show HEAD:BENCH_FULL.json > /tmp/old.json`).
+def benchdiff(old_path, new_path, ratio=1.5, floor_jobs=2, ratio_sec=2.5, floor_sec=0.5):
+    """Sweep-regression gate over two `graft.Bench` tables.
+    Usage: dev/check.py --benchdiff OLD.json NEW.json
+    (OLD is typically the committed SWEEP.json, sf0.01 on 4 cores).
 
-    Box-speed self-adjudication (VERDICT r11 item 3): both maps carry a
-    `speed_controls` block (q_word_count / q_pagerank, min-of-5,
-    measured first by Bench). The geometric-mean ratio of the controls
-    is the environment index: uniform inflation of UNTOUCHED queries is
-    machine load, not a plan change — the exact isolation protocol that
-    adjudicated the r9-r11 red gates by hand. Index > 1.5x: exit 3
-    (refuse to adjudicate, re-run in a comparable window); 1x-1.5x:
-    the regression threshold scales by the index.
+    Gates on Spark jobs, the cost both benchmark workloads are bound by:
+    exit 1 when a query runs more than `ratio`x its old jobs and more than
+    `floor_jobs` extra, or when a query the old table ran now throws. Two
+    sweeps of identical code at sf0.01 differ by at most 2 jobs (1.22x) on
+    a query. Seconds are one pass each and are only reported: the same two
+    sweeps put three sub-second queries 2.6-2.8x apart. Tables of a
+    different scale or core count are not compared (exit 3).
     """
     old_full = json.load(open(old_path))
     new_full = json.load(open(new_path))
-    old = old_full.get("queries", {})
-    new = new_full.get("queries", {})
-    oc = old_full.get("speed_controls", {}) or {}
-    nc = new_full.get("speed_controls", {}) or {}
-    shared_controls = [q for q in nc if q in oc and oc[q] > 0 and nc[q] > 0]
-    if shared_controls:
-        import math
-        index = math.exp(sum(math.log(nc[q] / oc[q]) for q in shared_controls)
-                         / len(shared_controls))
-        detail = ", ".join(f"{q} {oc[q]:.2f}s->{nc[q]:.2f}s" for q in shared_controls)
-        print(f"== box speed index {index:.2f}x vs committed run ({detail}) ==")
-        if index > 1.5:
-            print(f"BENCHDIFF ENVIRONMENT: box is {index:.2f}x slower than the "
-                  f"committed run on untouched controls — refusing to adjudicate "
-                  f"per-query regressions; re-run in a comparable window")
+    for k in ("sf", "cores"):
+        if old_full.get(k) is None or old_full.get(k) != new_full.get(k):
+            print(f"BENCHDIFF REFUSED: {k} differs ({old_full.get(k)} vs "
+                  f"{new_full.get(k)}); compare sweeps of one scale and core count")
             sys.exit(3)
-        if index > 1.0:
-            ratio *= index
-            print(f"== regression threshold scaled to {ratio:.2f}x ==")
-    else:
-        print("== no shared speed controls (first calibrated round?) — "
-              "unscaled threshold ==")
+    old_jobs, new_jobs = old_full["jobs"], new_full["jobs"]
+    old_sec, new_sec = old_full["queries"], new_full["queries"]
     bad = []
-    for q, t_new in sorted(new.items()):
-        t_old = old.get(q)
-        if t_old is None or t_old <= 0:
-            continue  # new query this round — no baseline to regress from
-        if t_new > floor_sec and t_new > ratio * t_old:
-            bad.append((q, t_old, t_new))
-    for q, a, b in bad:
-        print(f"BENCHDIFF REGRESSION {q}: {a:.2f}s -> {b:.2f}s ({b/a:.1f}x)")
-    # machine-readable flag list for bench.sh's isolation-retry path
-    flags_out = os.environ.get("BENCHDIFF_FLAGS_OUT")
-    if flags_out:
-        with open(flags_out, "w") as f:
-            f.write("\n".join(q for q, _, _ in bad))
-    kept = [q for q in new if q in old]
-    print(f"== benchdiff: {len(bad)} regressions over {ratio:.2f}x "
-          f"(>{floor_sec}s) across {len(kept)} shared queries ==")
+    for q, msg in sorted(new_full["errors"].items()):
+        if q in old_jobs:
+            bad.append(q)
+            print(f"BENCHDIFF ERROR {q}: {msg}")
+    for q, j_new in sorted(new_jobs.items()):
+        j_old = old_jobs.get(q)
+        if j_old is None:
+            continue  # new query: no baseline to regress from
+        if j_new > ratio * j_old and j_new - j_old > floor_jobs:
+            bad.append(q)
+            print(f"BENCHDIFF REGRESSION {q}: {j_old} -> {j_new} jobs")
+        t_old, t_new = old_sec[q], new_sec[q]
+        if t_new > floor_sec and t_new > ratio_sec * t_old:
+            print(f"benchdiff slower (not gated) {q}: {t_old:.2f}s -> {t_new:.2f}s")
+    shared = [q for q in new_jobs if q in old_jobs]
+    print(f"== benchdiff: {len(bad)} regressions (jobs over {ratio}x and "
+          f"+{floor_jobs}, or new errors) across {len(shared)} shared queries ==")
     sys.exit(1 if bad else 0)
 
 def _rewrite_rounds(sql):

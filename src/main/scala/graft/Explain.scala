@@ -1,30 +1,14 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
-/** Dev-only: print the formatted physical plan and timed row count for one
-  * query. Usage: Explain <query_name> [sfDir] [reps]
+/** Dev-only: print the formatted physical plan of one query.
+  * Usage: Explain <query_name> [sfDir]
   */
 object Explain {
   def main(args: Array[String]): Unit = {
     val name = args(0)
     val sfDir = if (args.length > 1) args(1) else "/root/testdata/sf0.1"
-    val reps = if (args.length > 2) args(2).toInt else 1
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    val fn = SparkEntry.queries(name)
-    fn(spark, sfDir).explain("formatted")
-    (1 to reps).foreach { r =>
-      val t0 = System.nanoTime()
-      val n = fn(spark, sfDir).count()
-      println(f"run $r: $n rows in ${(System.nanoTime() - t0) / 1e9}%.2f s")
-    }
+    val spark = LocalSession()
+    SparkEntry.queries(name)(spark, sfDir).explain("formatted")
     spark.stop()
   }
 }

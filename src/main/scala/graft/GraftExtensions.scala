@@ -10,8 +10,8 @@ import org.apache.spark.sql.graftbridge.Bridge
   * expressions to SQL users.
   *
   * Build-time: `--conf spark.sql.extensions=graft.GraftExtensions` (or
-  * `.withExtensions(new GraftExtensions)`). Live sessions (tests, the
-  * driver-owned Verify/Bench sessions) use [[GraftExtensions.register]].
+  * `.withExtensions(new GraftExtensions)`). A live session (`Probe`,
+  * `SourcesAndExtensionsSpec`) calls [[GraftExtensions.register]].
   *
   *  - `float_dot(a, b)` — codegen'd float-vector dot product in double.
   *  - `ngrams_ws(words, n)` — space-joined word n-grams (compiled loop).

@@ -1,16 +1,10 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-import org.apache.spark.sql.execution.{SparkPlan, WholeStageCodegenExec}
+import org.apache.spark.sql.execution.SparkPlan
 import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
-import org.apache.spark.sql.execution.exchange.{BroadcastExchangeLike, ShuffleExchangeLike}
 
-/** Dev-only: per-query physical-plan audit — shuffle exchange count,
-  * broadcast count, whole-stage-codegen presence, all from the *final*
-  * adaptive plan. The 100 TB sanity check: a query with surprise shuffles
-  * shows up here before it shows up on a cluster bill.
-  * Usage: PlanAudit [sfDir]
-  */
+/** Walkers over the *final* adaptive physical plan, for exchange counts:
+  * the `graft.Bench` sweep table and [[graft.PlanBudgetSpec]]. */
 object PlanAudit {
 
   private[graft] def finalPlan(p: SparkPlan): SparkPlan = p match {
@@ -30,35 +24,5 @@ object PlanAudit {
     }
     go(p)
     buf.toSeq
-  }
-
-  def main(args: Array[String]): Unit = {
-    val sfDir = if (args.nonEmpty) args(0) else "/root/testdata/sf0.01"
-    // optional args(1..): audit only these query names (default: all)
-    val only = args.drop(1).toSet
-    val spark = SparkSession.builder()
-      .master("local[8]")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
-    println(f"${"query"}%-22s shuffles broadcasts codegen")
-    SparkEntry.queries.toSeq.sortBy(_._1)
-      .filter { case (name, _) => only.isEmpty || only(name) }
-      .foreach { case (name, fn) =>
-      try {
-        val df = fn(spark, sfDir)
-        df.collect() // materialize THIS plan (count() builds a different one) so AQE finalizes
-        val all = nodes(finalPlan(df.queryExecution.executedPlan))
-        val shuffles = all.count(_.isInstanceOf[ShuffleExchangeLike])
-        val bcasts = all.count(_.isInstanceOf[BroadcastExchangeLike])
-        val codegen = all.exists(_.isInstanceOf[WholeStageCodegenExec])
-        println(f"$name%-22s $shuffles%8d $bcasts%10d $codegen%7b")
-      } catch {
-        case e: Throwable => println(f"$name%-22s FAILED: ${e.getMessage.take(60)}")
-      }
-    }
-    spark.stop()
   }
 }

@@ -1,20 +1,12 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Dev-only probe main: drives the non-query library surfaces (pipeline,
   * streaming) end-to-end the way a consumer of the package would. Not part
   * of the driver contract.
   */
 object Probe {
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = LocalSession()
     val d = "/root/testdata/sf0.001"
 
     // two-stage manifest pipeline → KV sink

@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Fixture scaler for scale-curve benchmarking (VERDICT round-3 item 8):
@@ -38,15 +38,8 @@ object ScaleGen {
     val Array(src, out, factorS) = args.take(3)
     val factor = factorS.toInt
     require(factor >= 1, s"factor must be >= 1, got $factor")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = LocalSession()
+    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
 
     def load(name: String): DataFrame = spark.read.parquet(s"$src/$name.parquet")
     def save(df: DataFrame, name: String): Unit =

@@ -1420,10 +1420,12 @@ object Similarity {
     * convergence counts are the loop's own stop condition, so neither
     * caller pays for the other's output. */
   private def lloydRun(n: DataFrame): (DataFrame, Seq[(Int, Long)]) = {
-    // Per-pass job structure (r14, guide §1.2/§3): each pass runs exactly
-    // TWO jobs — the staged assignment (which folds in last pass's cid as
-    // `pcid`, so the convergence count is a shuffle-free filter over the
-    // staged blocks instead of a separate join job) and that count.
+    // Per-pass job structure (r14, guide §1.2/§3): each pass stages the
+    // assignment (which folds in last pass's cid as `pcid`, so the
+    // convergence count is a filter over the staged blocks instead of a
+    // separate join) and counts it. Under AQE every shuffle and broadcast
+    // stage of those is its own job: `q_kmeans_train` runs 59 jobs over
+    // its 6 passes at sf0.001, about 10 per pass (`JobBudgetSpec`).
     // NOTE (r14 continuation, measured): do NOT replace the broadcast
     // centroids with per-pass typedLit centroid literals + a row-local
     // greatest() argmax. Two variants were built and benchmarked at

@@ -75,16 +75,24 @@ object Pipeline {
     Files.writeString(Paths.get(s"$runDir/metadata.json"), manifestJson(manifest))
   }
 
+  private val Json = new com.fasterxml.jackson.databind.ObjectMapper()
+
   /** Latest-run discovery (R12): list run dirs under `baseDir`, pick the one
-    * whose manifest has the greatest timestamp (the reference sorts S3
+    * whose manifest has the greatest `timestamp` (the reference sorts S3
     * objects by LastModified; manifest timestamps are the portable
-    * equivalent). */
+    * equivalent). Timestamps rank by (length, text), so unpadded numeric
+    * ids order numerically ("9" < "10") and fixed-width ones by text; the
+    * run dir name breaks ties. */
   def latestRun(baseDir: String): Option[Path] = {
     val base = Paths.get(baseDir)
     if (!Files.isDirectory(base)) None
     else Using.resource(Files.list(base))(_.iterator().asScala
       .filter(p => Files.exists(p.resolve("metadata.json")))
-      .maxByOption(p => Files.readString(p.resolve("metadata.json"))))
+      .map { p =>
+        val ts = Json.readTree(p.resolve("metadata.json").toFile).path("timestamp").asText
+        (ts.length, ts, p.getFileName.toString) -> p
+      }
+      .maxByOption(_._1).map(_._2))
   }
 
   /** Row→item transform (R17): `{id: "word_"+word, word, count:int}` —

@@ -64,7 +64,8 @@ object Ckpt {
   /** Persisted-RDD ids created by [[stage]] in localCheckpoint mode,
     * pending [[release]]. Attribution is by before/after diff of
     * `getPersistentRDDs`, which is exact for the single-threaded
-    * query-at-a-time callers this serves (Bench, Verify); a concurrent
+    * query-at-a-time callers this serves (the `Verify` dump, the `Bench`
+    * sweep, perfbench); a concurrent
     * caller persisting in the same instant could be swept too — the
     * documented contract (release only after results are consumed) makes
     * that harmless. */
@@ -102,8 +103,8 @@ object Ckpt {
     * session-configured mode.
     *
     * `spark.graft.stage.disable=true` makes this a no-op (the frame is
-    * recomputed per consumer) — set ONLY by plan-audit tooling
-    * ([[graft.PlanBudgetSpec]], `graft.PlanAudit`) so exchanges upstream
+    * recomputed per consumer) — set ONLY by plan-audit tests
+    * (`PlanBudgetSpec`, `StagingLayoutSpec`) so exchanges upstream
     * of a stage boundary stay visible in the executed plan; checkpoint
     * truncation would otherwise hide them from the audit. An enclosing
     * [[forceStaged]] (artifact builds) wins over the disable flag. */

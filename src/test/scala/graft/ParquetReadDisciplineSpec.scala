@@ -18,9 +18,7 @@ class ParquetReadDisciplineSpec extends AnyFunSuite {
   /** Files that may read Parquet inferred, each with its reason. */
   private val allowed: Seq[String] = Seq(
     // dev tool: reads each source table once to write a rescaled fixture
-    "graft/ScaleGen.scala",
-    // dev tool: warms the file cache with one full scan of each table
-    "graft/Bench.scala")
+    "graft/ScaleGen.scala")
 
   test("every Parquet read outside the dev tools goes through Tables.parquet") {
     val root = java.nio.file.Paths.get("src/main/scala")

@@ -73,6 +73,30 @@ class PipelineSpec extends AnyFunSuite {
     assert(grown < 50, s"$grown descriptors left open by 500 latestRun calls")
   }
 
+  private def manifests(json: (String, String)*): String = {
+    val work = Files.createTempDirectory("graft_latest_ts").toString
+    for ((run, manifest) <- json) {
+      val dir = Paths.get(s"$work/$run")
+      Files.createDirectories(dir)
+      Files.writeString(dir.resolve("metadata.json"), manifest)
+    }
+    work
+  }
+
+  test("latestRun orders unpadded numeric timestamps numerically") {
+    val work = manifests(
+      "run_9" -> """{"timestamp": "9", "input_files": []}""",
+      "run_10" -> """{"timestamp": "10", "input_files": []}""")
+    assert(Pipeline.latestRun(work).map(_.getFileName.toString) === Some("run_10"))
+  }
+
+  test("latestRun ranks the timestamp field, not the manifest's spacing") {
+    val work = manifests(
+      "run_old" -> """{"timestamp":"20240101_000000","input_files":[]}""",
+      "run_new" -> """{"timestamp": "20240202_000000", "input_files": []}""")
+    assert(Pipeline.latestRun(work).map(_.getFileName.toString) === Some("run_new"))
+  }
+
   test("retry retries transient failures and rethrows persistent ones") {
     var calls = 0
     val v = Pipeline.retry(3) {

@@ -5,17 +5,6 @@ import org.apache.spark.sql.SparkSession
 /** One shared local session for the whole test run (SURVEY.md §5 guidance:
   * one SparkSession per suite/JVM, not per test). */
 object TestSpark {
-  lazy val session: SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[4]")
-      .appName("graft-tests")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    s.sparkContext.setLogLevel("WARN")
-    s
-  }
+  lazy val session: SparkSession = LocalSession(4)
   val Sf = "/root/testdata/sf0.001"
 }
