@@ -3,7 +3,12 @@ package graft
 import org.apache.spark.sql.SparkSession
 
 /** The one local session builder behind the dev mains and the test suite:
-  * `local[cores]`, one shuffle partition per core, UTC, no UI, WARN logs. */
+  * `local[cores]`, one shuffle partition per core, UTC, no UI, WARN logs.
+  *
+  * `spark.sql.legacy.parquet.nanosAsLong` is set from the start, as
+  * [[Tables.events]] needs it: it is part of [[Tables.parquet]]'s schema
+  * memo key, so setting it at the first `events` read would make every
+  * table memoized before that read be inferred again, one job each. */
 object LocalSession {
 
   /** `SPARK_GRAFT_CPUS`, else 4: the core count `SWEEP.json` and the test
@@ -16,6 +21,7 @@ object LocalSession {
       .config("spark.sql.shuffle.partitions", cores.toString)
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.ui.enabled", "false")
+      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
       .getOrCreate()
     s.sparkContext.setLogLevel("WARN")
     s

@@ -39,7 +39,6 @@ object ScaleGen {
     val factor = factorS.toInt
     require(factor >= 1, s"factor must be >= 1, got $factor")
     val spark = LocalSession()
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
 
     def load(name: String): DataFrame = spark.read.parquet(s"$src/$name.parquet")
     def save(df: DataFrame, name: String): Unit =

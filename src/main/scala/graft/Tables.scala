@@ -77,6 +77,10 @@ object Tables {
     * The DuckDB oracle reads the same file natively, so every oracled
     * query formats/truncates `ts` before it reaches a result column
     * (FIXTURES.md gotchas).
+    *
+    * [[LocalSession]] sets the conf when it builds the session, so there
+    * the `set` below changes nothing and no memoized schema goes stale;
+    * it stays for sessions built elsewhere.
     */
   def events(s: SparkSession, d: String): DataFrame = {
     s.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")

@@ -25,10 +25,4 @@ object TextFeatures {
     * single shingle (keeps every doc represented in minhash signatures). */
   def shingles3(w: Column, text: Column): Column =
     when(size(w) >= 3, StringNgrams.ngrams(w, 3)).otherwise(array(text))
-
-  /** The i-th of four 32-bit sub-hashes sliced from ONE md5 digest (hex
-    * chars 1-8, 9-16, 17-24, 25-32). MIN over a slice is still a valid
-    * minhash estimator, and one digest per shingle replaces four salted
-    * digests — the md5 was the dominant cost of the signature scan. */
-  def minhashSlice(h: Column, i: Int): Column = substring(h, 1 + 8 * i, 8)
 }

@@ -20,9 +20,10 @@ import org.apache.spark.sql.functions._
   *    key is a digest, never the document body, and `row_number() = 1` keeps
   *    a deterministic survivor (min doc_id), unlike `dropDuplicates` whose
   *    survivor is partition-order-dependent;
-  *  - MinHash+LSH: signatures are 4 aggregated mins per doc (one shuffle on
-  *    doc_id-partitioned shingles), candidates meet through band buckets —
-  *    never an all-pairs comparison;
+  *  - MinHash+LSH: one compiled 4-slot signature per doc (the native
+  *    [[graft.functions.MinHash4]] expression — no shingle explosion, no
+  *    aggregate), candidates meet through band buckets — never an
+  *    all-pairs comparison;
   *  - SimHash: one compiled pass per doc (the native
   *    [[graft.functions.SimHash16]] expression — no word explosion); the
   *    only shuffle is the one-row-per-doc fingerprint groupBy, and
@@ -84,23 +85,18 @@ object Dedup {
       .orderBy("doc_id")
   }
 
-  private val Seeds = 0 until 4
-
-  /** MinHash + LSH with 4 hash seeds in 2 bands of 2 (r=2, b=2): docs
+  /** MinHash + LSH with 4 hashes in 2 bands of 2 (r=2, b=2): docs
     * sharing any band bucket (both minhashes of the band equal) are
     * duplicate candidates; each doc reports the minimum doc_id it shares a
     * bucket with (`keeper`). Band size 1 flags ~half the corpus on this
     * small-vocabulary fixture; r=2 flags 26 ≈ the ~24 planted near-dups.
-    * The four hashes are 8-hex-char slices of ONE md5 per shingle
-    * (TextFeatures.minhashSlice) — string-min over a hex slice == numeric
-    * minhash, at a quarter of the digest cost. */
+    * The four hashes are the four 32-bit words of ONE md5 per shingle
+    * ([[graft.functions.MinHash4]]), at a quarter of the digest cost of
+    * four salted digests. */
   def dedupMinhash(s: SparkSession, d: String): DataFrame = {
-    // bandBuckets: explode + partial-aggregated mins — the map-side combine
-    // reduces the shuffle to one signature row per doc per partition, and
-    // the whole hash pipeline stays in codegen (an array-HOF formulation
-    // avoids the explode but runs interpreted lambdas — measured 6× slower).
-    // Keeper per bucket as a window min: one shuffle on bkey, instead of
-    // the groupBy + re-join formulation (two shuffles + a join).
+    // bandBuckets is a narrow select (one compiled signature per doc), so
+    // the keeper per bucket as a window min is the only shuffle on bkey,
+    // instead of the groupBy + re-join formulation (two shuffles + a join).
     val wb = Window.partitionBy("bkey")
     bandBuckets(s, d).withColumn("bmin", min("doc_id").over(wb))
       .groupBy("doc_id").agg(min("bmin").as("keeper"))
@@ -283,34 +279,38 @@ object Dedup {
     * composed pipeline (e.g. `Curation.curationPipeline`) run LSH banding
     * over an already-filtered survivor set instead of the raw table.
     *
-    * `spreadInput` parallelizes the per-shingle md5 pass off the one-task
-    * fixture scan ([[graft.util.Spread]]) — measured −0.3 s on the
-    * one-shot consumers (q_dedup_minhash, q_dedup_incremental). The CC
-    * LOOP consumers ([[dedupClusters]]) pass false: they re-read the
-    * staged incidence 2×/round, so a wide cached layout taxes every round
-    * for more than the one-time hash pass saves (+0.3 s measured). */
+    * Precondition: one row per doc_id. The signature is computed per
+    * row, so duplicate doc_ids are not merged into one signature.
+    *
+    * `spreadInput` parallelizes the signature pass off the one-task
+    * fixture scan ([[graft.util.Spread]]) at the cost of one exchange,
+    * i.e. one more Spark job. Medians of 7 runs per setting in one JVM
+    * (4 cores), spread vs not, in seconds: at sf0.1 the one-shot
+    * consumers gain (q_split_leakage 0.65 vs 0.82, q_curation_pipeline
+    * 1.35 vs 1.40, q_dedup_incremental 0.63 vs 0.66, q_dedup_minhash 0.47
+    * vs 0.49); the CC loop consumers do not (q_dedup_clusters 0.73 vs
+    * 0.75, q_split_cluster_safe 1.56 vs 1.52; at sf0.01 0.65 vs 0.60 and
+    * 1.25 vs 1.24). [[dedupClusters]] passes false and saves the job.
+    * `TrainingPrep.clusterSplit` keeps the spread: the incidence's doc_id
+    * hash layout then serves its loop's and audit's doc_id joins, 12
+    * shuffles against 14 in its unstaged plan. */
   private[graft] def bandBucketsOf(docs: DataFrame,
       spreadInput: Boolean = true): DataFrame = {
     val in =
       if (spreadInput)
         graft.util.Spread(docs.select(col("doc_id"), col("text")), col("doc_id"))
       else docs
-    val sh = in
+    val sig = graft.functions.MinHash4.minhash(
+      shingles3(words(col("text")), col("text")))
+    // bkey concatenates UNSEPARATED minhash slots: unambiguous only
+    // because each slot is exactly 8 hex chars (fixed-width invariant,
+    // shared with the mirrored oracle SQL) — if the slot scheme ever
+    // changes width, add a separator in BOTH engines
+    in.select(col("doc_id"), sig.as("sig"))
       .select(col("doc_id"),
-        explode(shingles3(words(col("text")), col("text"))).as("shingle"))
-      .withColumn("h", md5(col("shingle")))
-    val sig = sh.groupBy("doc_id")
-      .agg(
-        min(minhashSlice(col("h"), Seeds.head)).as(s"mh${Seeds.head}"),
-        Seeds.tail.map(i => min(minhashSlice(col("h"), i)).as(s"mh$i")): _*)
-    // bkey concatenates UNSEPARATED minhash slices: unambiguous only
-    // because minhashSlice always yields exactly 8 hex chars (fixed-width
-    // invariant, shared with the mirrored oracle SQL) — if the slice
-    // scheme ever changes width, add a separator in BOTH engines
-    sig.select(col("doc_id"),
-      explode(array(
-        concat(lit("0|"), col("mh0"), col("mh1")),
-        concat(lit("1|"), col("mh2"), col("mh3")))).as("bkey"))
+        explode(array(
+          concat(lit("0|"), col("sig")(0), col("sig")(1)),
+          concat(lit("1|"), col("sig")(2), col("sig")(3)))).as("bkey"))
   }
 
   /** Duplicate CLUSTERS (not just pairs): connected components of the

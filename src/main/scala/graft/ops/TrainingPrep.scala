@@ -366,10 +366,10 @@ object TrainingPrep {
     // ONE staged bucket incidence feeds BOTH the cluster closure and the
     // audit's candidate self-join (r14, guide §2.4): previously the
     // shingle+minhash pass ran twice — once inside dedupClusters, once
-    // for the audit pairs. spreadInput = false, the CC-loop trade
-    // (bandBucketsOf scaladoc).
-    val b = graft.util.Ckpt.stage(
-      Dedup.bandBucketsOf(Tables.documents(s, d), spreadInput = false))
+    // for the audit pairs. Spread, unlike dedupClusters: its doc_id hash
+    // layout serves the loop's and the audit's doc_id joins (bandBucketsOf
+    // scaladoc).
+    val b = graft.util.Ckpt.stage(Dedup.bandBucketsOf(Tables.documents(s, d)))
     val cl = graft.util.Ckpt.stage(Dedup.dedupClustersFrom(b)
       .select(col("doc_id"), col("cluster"))
       .withColumn("split", splitOf(col("cluster"))))

@@ -18,9 +18,9 @@ object Fixpoint {
   /** Runs `step` from `init` until no label changes. `step` maps the
     * current labels to the next labels plus an int `chg` column (1 where
     * the label changed). Each round stages `step(labels)`, counts changed
-    * labels and rows in one 1-row job, prints `[cc] <tag> round r
-    * changed=c` and drops `chg`. Returns the settled labels and the
-    * rounds run. */
+    * labels and rows in one job over the staged rows, prints `[cc] <tag>
+    * round r changed=c` and drops `chg`. Returns the settled labels and
+    * the rounds run. */
   def labels(init: DataFrame, tag: String)(step: DataFrame => DataFrame)
       : (DataFrame, Int) = {
     var labels = init
@@ -29,10 +29,8 @@ object Fixpoint {
     while (changed > 0) {
       round += 1
       val next = Ckpt.stage(step(labels))
-      // coalesce: sum over an empty label map is null
-      val r = next.agg(coalesce(sum("chg"), lit(0L)), count(lit(1))).collect()(0)
-      changed = r.getLong(0)
-      val n = r.getLong(1)
+      val (c, n) = changedAndRows(next)
+      changed = c
       System.err.println(s"[cc] $tag round $round changed=$changed")
       if (changed > 0 && round >= n)
         throw new IllegalStateException(s"[cc] $tag: $changed labels still " +
@@ -42,4 +40,20 @@ object Fixpoint {
     }
     (labels, round)
   }
+
+  /** (sum of `chg`, row count) of a staged round in one job, with no
+    * shuffle: one (changed, rows) pair per partition, folded on the
+    * driver. A job takes each partition's result once, so a retried task
+    * cannot count twice, as it could through an accumulator. A null `chg`
+    * counts as 0. */
+  private def changedAndRows(next: DataFrame): (Long, Long) =
+    next.select(coalesce(col("chg").cast("long"), lit(0L)))
+      .queryExecution.toRdd
+      .mapPartitions { rows =>
+        var c = 0L
+        var n = 0L
+        rows.foreach { r => c += r.getLong(0); n += 1 }
+        Iterator.single((c, n))
+      }
+      .fold((0L, 0L)) { case ((c1, n1), (c2, n2)) => (c1 + c2, n1 + n2) }
 }

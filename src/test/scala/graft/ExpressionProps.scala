@@ -111,4 +111,32 @@ object ExpressionProps extends Properties("graft.expressions") {
       val got = Option(graft.functions.SimHash16(lit).eval(null)).map(_.toString)
       got == simhashNaive(ws)
     }
+
+  private def minhashNaive(shingles: List[String]): Option[List[String]] = {
+    // the SQL formulation the expression replaced: explode the shingles,
+    // md5 each non-null one, and take the string minimum of each of the
+    // four 8-char hex slices; no non-null shingle → no signature
+    val hexes = shingles.filter(_ != null).map(sh =>
+      java.security.MessageDigest.getInstance("MD5")
+        .digest(sh.getBytes("UTF-8")).map("%02x".format(_)).mkString)
+    if (hexes.isEmpty) None
+    else Some((0 until 4).map(i => hexes.map(_.substring(8 * i, 8 * i + 8)).min).toList)
+  }
+
+  // repeated shingles, nulls, all-null and one-element arrays, "" and
+  // multi-byte UTF-8 all occur in the generated arrays
+  private val shingleGen: Gen[String] = Gen.frequency(
+    6 -> simhashWord, 1 -> Gen.oneOf("a b c", "b c d"))
+  private val shinglesGen: Gen[List[String]] = Gen.oneOf(
+    Gen.choose(0, 25).flatMap(n => Gen.listOfN(n, shingleGen)),
+    shingleGen.map(List(_)),
+    Gen.choose(1, 5).map(n => List.fill[String](n)(null)))
+
+  property("MinHash4 equals the explode + md5 + per-slice string minimum formulation") =
+    forAll(shinglesGen) { shs =>
+      val lit = Literal.create(shs.toArray, ArrayType(StringType))
+      val got = Option(graft.functions.MinHash4(lit).eval(null)
+        .asInstanceOf[ArrayData]).map(_.toObjectArray(StringType).map(_.toString).toList)
+      got == minhashNaive(shs)
+    }
 }

@@ -11,7 +11,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * bounds; lower one when a change removes jobs.
   *
   * Five queries ran the same count in every run measured (9–11 each,
-  * over several JVMs) and are pinned exactly. `q_dbscan` ran 175–177: adaptive
+  * over several JVMs) and are pinned exactly. `q_dbscan` ran 161–162: adaptive
   * execution submits each query stage as its own job and re-plans as
   * stages finish, so around its staged rounds the number of stage jobs
   * depends on the order concurrent stages finish. Its budget is the
@@ -22,17 +22,15 @@ class JobBudgetSpec extends AnyFunSuite {
   private val sf = TestSpark.Sf
 
   private val budgets = Seq(
-    "q_dedup_semantic" -> 175,
-    "q_dbscan" -> (177 + 2),
+    "q_dedup_semantic" -> 160,
+    "q_dbscan" -> (162 + 2),
     "q_ann_ivf_trained" -> 69,
     "q_kmeans_train" -> 59,
     "q_kcore_peel" -> 52,
     "q_drift_report" -> 36)
 
   for ((name, ceiling) <- budgets) test(s"$name runs at most $ceiling jobs") {
-    // every table's schema is memoized first, so no inference job counts;
-    // `events` goes first because it sets a Parquet conf that is part of
-    // the memo key of every table read after it
+    // every table's schema is memoized first, so no inference job counts
     Seq(Tables.events _, Tables.region _, Tables.nation _, Tables.customer _,
       Tables.supplier _, Tables.part _, Tables.orders _, Tables.lineitem _,
       Tables.documents _, Tables.embeddings _).foreach(_(spark, sf))
