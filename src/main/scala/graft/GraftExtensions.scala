@@ -18,8 +18,9 @@ import org.apache.spark.sql.graftbridge.Bridge
   *
   * Also injects the optimizer rules (`CollapseNgramCount`,
   * `RewriteTopKWindow` — the row_number()≤k idiom becomes the native
-  * bounded top-k operator) and the planner strategies for both custom
-  * operators (`AsOfJoinStrategy`, `TopKPerGroupStrategy`).
+  * bounded top-k operator) and the planner strategies for the three custom
+  * operators (`AsOfJoinStrategy`, `TopKPerGroupStrategy`,
+  * `PartitionUnionFindStrategy`).
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
   override def apply(e: SparkSessionExtensions): Unit = {
@@ -27,6 +28,7 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
     e.injectOptimizerRule(_ => graft.plans.RewriteTopKWindow)
     e.injectPlannerStrategy(_ => graft.plans.AsOfJoinStrategy)
     e.injectPlannerStrategy(_ => graft.plans.TopKPerGroupStrategy)
+    e.injectPlannerStrategy(_ => graft.plans.PartitionUnionFindStrategy)
     e.injectFunction((FunctionIdentifier("float_dot"),
       GraftExtensions.info("float_dot", "float_dot(a, b) - dot product of two float arrays, accumulated in double"),
       GraftExtensions.floatDotBuilder))

@@ -288,12 +288,12 @@ object Dedup {
     * (4 cores), spread vs not, in seconds: at sf0.1 the one-shot
     * consumers gain (q_split_leakage 0.65 vs 0.82, q_curation_pipeline
     * 1.35 vs 1.40, q_dedup_incremental 0.63 vs 0.66, q_dedup_minhash 0.47
-    * vs 0.49); the CC loop consumers do not (q_dedup_clusters 0.73 vs
-    * 0.75, q_split_cluster_safe 1.56 vs 1.52; at sf0.01 0.65 vs 0.60 and
-    * 1.25 vs 1.24). [[dedupClusters]] passes false and saves the job.
+    * vs 0.49). The union-find closure does not: [[dedupClustersFrom]]
+    * over this incidence, medians of 15 (sf0.1) and 9 (sf0.01)
+    * alternating runs, spread vs not, 0.347 vs 0.341 s and 0.328 vs
+    * 0.268 s, so [[dedupClusters]] passes false and saves the job.
     * `TrainingPrep.clusterSplit` keeps the spread: the incidence's doc_id
-    * hash layout then serves its loop's and audit's doc_id joins, 12
-    * shuffles against 14 in its unstaged plan. */
+    * hash layout then serves its audit's doc_id joins. */
   private[graft] def bandBucketsOf(docs: DataFrame,
       spreadInput: Boolean = true): DataFrame = {
     val in =
@@ -314,60 +314,80 @@ object Dedup {
   }
 
   /** Duplicate CLUSTERS (not just pairs): connected components of the
-    * doc↔band-bucket graph via iterative min-label propagation — label(doc)
-    * = min doc_id reachable through shared buckets. This is the step a
-    * production dedup actually needs (pick one survivor per transitive
-    * cluster; pairwise flags over-delete chains A~B~C where A≁C).
-    *
-    * Scale shape: each round is two key-partitioned aggregates (labels
-    * never carry document bodies), and `Ckpt.stage` truncates the
-    * lineage each round — the standard Spark iterative-algorithm pattern
-    * (what GraphX does internally); set `spark.graft.checkpoint.dir` for
-    * a durable checkpoint that survives executor loss. Rounds needed = graph diameter in
-    * doc→bucket→doc hops; near-dup clusters are shallow (planted chains
-    * converge in 2-3). [[graft.util.Fixpoint.labels]] runs the loop to
-    * its fixpoint, holding only a changed-row COUNT, never data. */
+    * doc↔band-bucket graph — cluster(doc) = min doc_id reachable through
+    * shared buckets. This is the step a production dedup actually needs
+    * (pick one survivor per transitive cluster; pairwise flags
+    * over-delete chains A~B~C where A≁C). The closure is
+    * [[dedupClustersFrom]]'s partition-local union-find. */
   def dedupClusters(s: SparkSession, d: String): DataFrame =
-    dedupClustersFrom(
-      graft.util.Ckpt.stage(bandBuckets(s, d, spreadInput = false)))
+    dedupClustersFrom(bandBuckets(s, d, spreadInput = false))
 
-  /** [[dedupClusters]] over an ALREADY-STAGED bucket incidence — so a
-    * composed consumer ([[graft.ops.TrainingPrep.clusterSplit]]) that
-    * also needs the incidence for its own candidate pairs builds the
-    * shingle+minhash pass ONCE instead of twice (r14, guide §2.4).
-    *
-    * Deliberately NOT [[Similarity.minLabelComponents]]: this loop runs
-    * on the bipartite doc↔bucket incidence, two key-partitioned
-    * aggregates per round and no pointer jump. Rewriting it as star
-    * edges (doc, bucket-min doc) fed to the shared path-halving loop
-    * gave identical labels in 2 rounds, but slowed `q_dedup_clusters`
-    * on the llm_curation benchmark in all 4 alternating pairs (seeds
-    * 11–14: 3.11/3.34/5.98/4.94 s vs 2.93/2.59/3.87/3.55 s; op_tail_s
-    * +12–57%). So the steps differ; the driver loop
-    * ([[graft.util.Fixpoint.labels]]) is shared. */
-  private[graft] def dedupClustersFrom(buckets: DataFrame): DataFrame = {
-    // seed with one propagation round already applied: label(doc) = min
-    // doc_id over the doc's buckets (each doc is in its own buckets, so the
-    // seed is ≤ doc_id). Equivalent to initializing label=doc_id and
-    // running the loop body once, but without the loop's join against the
-    // previous labels — saves a full round on shallow graphs.
-    val seed = buckets
-      .join(buckets.groupBy("bkey").agg(min("doc_id").as("bl")), "bkey")
-      .groupBy("doc_id").agg(min("bl").as("label"))
-      .transform(graft.util.Ckpt.stage)
-    val (labels, _) = graft.util.Fixpoint.labels(seed, "dedup") { cur =>
-      val bucketMin = buckets.join(cur, "doc_id")
-        .groupBy("bkey").agg(min("label").as("bl"))
-      buckets.join(bucketMin, "bkey")
-        .groupBy("doc_id").agg(min("bl").as("nl"))
-        .join(cur, "doc_id")
-        .select(col("doc_id"), least(col("nl"), col("label")).as("label"),
-          (col("nl") < col("label")).cast("int").as("chg"))
-    }
-    labels
-      .withColumn("is_dup", (col("label") < col("doc_id")).cast("int"))
-      .withColumnRenamed("label", "cluster")
+  /** [[dedupClusters]] over a given (doc_id BIGINT, bkey) incidence —
+    * so a composed consumer ([[graft.ops.TrainingPrep.clusterSplit]])
+    * that also needs the incidence for its own candidate pairs builds the
+    * shingle+minhash pass ONCE instead of twice (r14, guide §2.4). Rows
+    * with a NULL doc_id or bkey are ignored, so a doc whose every bkey is
+    * NULL is absent, as in the oracle's join formulation. Output:
+    * (doc_id, cluster, is_dup) ordered by doc_id. */
+  private[graft] def dedupClustersFrom(buckets: DataFrame): DataFrame =
+    closure(buckets).labels
+      .withColumn("is_dup", (col("cluster") < col("doc_id")).cast("int"))
       .orderBy("doc_id")
+
+  /** One run of the cluster closure: the (doc_id, cluster) labels, the
+    * union-find pass's partition count, its cross-partition edge count
+    * and the label rounds run over those edges. */
+  private[graft] case class Closure(labels: DataFrame, partitions: Int,
+                                    crossEdges: Long, rounds: Int)
+
+  /** The closure in one partition-local pass
+    * ([[graft.plans.PartitionUnionFind]]): the incidence is shuffled
+    * and sorted by bkey, each partition unions the docs of each bucket,
+    * and the (doc_id, root) rows — root = min doc_id of the doc's
+    * component within the partition — are staged once.
+    *
+    * A pass in one partition is the whole closure. Otherwise a doc whose
+    * buckets fell in several partitions has several roots; with lo = the
+    * doc's min root, every root > lo is joined to lo by a cross-partition
+    * edge. The roots' components over those edges are the global
+    * components, each labelled by its min root, so cluster = label(lo),
+    * or lo when no edge touches it. Only the root graph enters the
+    * path-halving loop ([[Similarity.minLabelComponents]]), and only when
+    * it has an edge: at scale the rounds run over the docs whose buckets
+    * straddle partitions, not over the whole incidence.
+    *
+    * Prints one `[cc] dedup` line with the partition and edge counts, so
+    * a run log shows whether label rounds ran. */
+  private[graft] def closure(buckets: DataFrame): Closure = {
+    val roots = graft.util.Ckpt.stage(
+      graft.plans.PartitionUnionFind.roots(buckets, "doc_id", "bkey"))
+    val parts = roots.queryExecution.toRdd.getNumPartitions
+    def log(edges: Long): Unit = System.err.println(
+      s"[cc] dedup union-find partitions=$parts cross_edges=$edges")
+    if (parts <= 1) {
+      log(0L)
+      // coalesce(1) declares the one partition (SinglePartition), so the
+      // final sort and consumers keyed on doc_id or cluster plan no exchange
+      Closure(roots.coalesce(1).withColumnRenamed("root", "cluster"), parts, 0L, 0)
+    } else {
+      val perDoc = graft.util.Ckpt.stage(roots.groupBy("doc_id")
+        .agg(min("root").as("lo"), collect_set("root").as("roots")))
+      val edges = graft.util.Ckpt.stage(perDoc
+        .select(explode(col("roots")).as("src"), col("lo").as("dst"))
+        .where(col("src") > col("dst")).distinct())
+      val n = edges.count()
+      log(n)
+      if (n == 0) Closure(perDoc.select(col("doc_id"), col("lo").as("cluster")), parts, 0L, 0)
+      else {
+        val und = edges.union(edges.select(col("dst").as("src"), col("src").as("dst")))
+        val verts = und.select(col("src").as("vec_id")).distinct()
+          .withColumn("label", col("vec_id"))
+        val (labels, rounds) = Similarity.minLabelComponents(verts, und, "dedup")
+        Closure(perDoc.join(labels, col("lo") === col("vec_id"), "left")
+          .select(col("doc_id"), coalesce(col("label"), col("lo")).as("cluster")),
+          parts, n, rounds)
+      }
+    }
   }
 
   /** Document-frequency cap on the Jaccard blocking bigrams (VERDICT
@@ -755,8 +775,8 @@ object Dedup {
     * chaining unrelated docs — the first chart a dedup operator looks at
     * before committing a survivor policy.
     *
-    * Determinism: inherits [[dedupClusters]]'s min-label fixpoint (exact
-    * integer labels, engine-replayed via the recursive CTE); the two
+    * Determinism: inherits [[dedupClusters]]'s exact integer labels
+    * (component minima, replayed by the oracle's recursive CTE); the two
     * count aggregates are exact. Scale shape: the closure's labels frame
     * is (doc_id, cluster) — two further keyed aggregates over it, the
     * second over the size domain (≤ max component size). Nothing beyond
@@ -1365,11 +1385,6 @@ object Dedup {
     "q_minhash_pr"     -> (minhashPr _),
   )
 
-  /** The [[dedupClusters]] transitive closure as a reusable CTE prefix
-    * (ends with `clusters(doc_id, cluster)`): DuckDB's WITH RECURSIVE
-    * replays the min-label propagation exactly. Shared with
-    * `Curation.clusterRep`'s oracle so representative selection is layered
-    * on the identical cluster assignment in both engines. */
   /** The doc→LSH-band-bucket incidence (CTEs `sh`/`sig`/`b`, ending at
     * `b(doc_id, bkey)`) — the SQL twin of [[bandBuckets]], shared by the
     * cluster closure and the incremental-dedup oracle. */
@@ -1391,6 +1406,11 @@ object Dedup {
        |  SELECT doc_id, unnest(['0|'||mh0||mh1, '1|'||mh2||mh3]) AS bkey FROM sig
        |)""".stripMargin
 
+  /** The [[dedupClusters]] transitive closure as a reusable CTE prefix
+    * (ends with `clusters(doc_id, cluster)`): DuckDB's WITH RECURSIVE
+    * reachability gives each doc the same component minimum. Shared with
+    * `Curation.clusterRep`'s oracle so representative selection is layered
+    * on the identical cluster assignment in both engines. */
   private[ops] lazy val ClustersCteSql: String =
     s"""WITH RECURSIVE $BandBucketsCteBody, edge AS (
        |  SELECT DISTINCT a.doc_id AS x, c.doc_id AS y

@@ -358,7 +358,7 @@ object TrainingPrep {
     * fixed hex thresholds on md5 — identical in both engines; all
     * outputs are integer counts and one ppm integer division.
     *
-    * Scale shape: [[Dedup.dedupClusters]]'s label-propagation cost (the
+    * Scale shape: [[Dedup.dedupClusters]]'s union-find closure cost (the
     * split is a free column once clusters exist — which a dedup'd corpus
     * already has); the audit re-uses the band-bucket equi-join; rollups
     * are 3-row. */
@@ -367,11 +367,9 @@ object TrainingPrep {
     // audit's candidate self-join (r14, guide §2.4): previously the
     // shingle+minhash pass ran twice — once inside dedupClusters, once
     // for the audit pairs. Spread, unlike dedupClusters: its doc_id hash
-    // layout serves the loop's and the audit's doc_id joins (bandBucketsOf
-    // scaladoc).
+    // layout serves the audit's doc_id joins (bandBucketsOf scaladoc).
     val b = graft.util.Ckpt.stage(Dedup.bandBucketsOf(Tables.documents(s, d)))
-    val cl = graft.util.Ckpt.stage(Dedup.dedupClustersFrom(b)
-      .select(col("doc_id"), col("cluster"))
+    val cl = graft.util.Ckpt.stage(Dedup.closure(b).labels
       .withColumn("split", splitOf(col("cluster"))))
     val pairs = b.as("x").join(b.as("y"),
         col("x.bkey") === col("y.bkey") && col("x.doc_id") < col("y.doc_id"))

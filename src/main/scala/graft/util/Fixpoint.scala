@@ -3,10 +3,11 @@ package graft.util
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
-/** The driver loop of the engine's min-label propagations
-  * ([[graft.ops.Dedup.dedupClustersFrom]],
-  * [[graft.ops.Similarity.minLabelComponents]]). The driver holds only
-  * two counts per round, never data.
+/** The driver loop of the engine's min-label propagation,
+  * [[graft.ops.Similarity.minLabelComponents]] (behind `q_dbscan`,
+  * `q_dedup_semantic` and the cross-partition edges of
+  * [[graft.ops.Dedup.closure]]). The driver holds only two counts per
+  * round, never data.
   *
   * The cap comes from the input, not a constant: labels only decrease,
   * and each round carries every label at least one hop further, so a map

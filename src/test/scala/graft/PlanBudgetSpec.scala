@@ -149,8 +149,9 @@ class PlanBudgetSpec extends AnyFunSuite {
     ("q_scd2_dim", 2, 0),             // one customer-key exchange + final sort
     ("q_inverted_index", 3, 1),       // term shuffle + corpus-size broadcast
     ("q_chunk_overlap", 1, 0),        // pure flatMap; the sort is the only exchange
-    ("q_cluster_rep", 7, 1),          // audit mode exposes the label-propagation
-                                      // loop's full lineage (rounds × 2 aggregates)
+    ("q_cluster_rep", 1, 1),          // the union-find's bkey exchange; the
+                                      // closure is one partition, so the
+                                      // label joins need no exchange
     ("q_join_range_binned", 4, 0),    // bin-keyed equi-join (broadcast allowed when
                                       // the window side is small; never required)
     // round-4 robust-stats / corpus-metric additions
@@ -575,7 +576,7 @@ class PlanBudgetSpec extends AnyFunSuite {
                                       // pair frame + shared sums broadcast
     ("q_friedman", 9, 2),             // (day,type) agg + grid fill + per-day
                                       // midrank windows; types broadcast
-    ("q_split_cluster_safe", 13, 4),  // cluster propagation lineage + band
+    ("q_split_cluster_safe", 3, 4),   // union-find bkey exchange + band
                                       // self-join audit; label/total/cross
                                       // frames broadcast
     // rank/series trio (audited via PlanAudit at sf0.001)
