@@ -134,29 +134,35 @@ object Dedup {
   private[ops] def affineA(p: Int): Long = ((mix64(2L * p) & Long.MaxValue) % ((1L << 30) - 1)) + 1
   private[ops] def affineB(p: Int): Long = (mix64(2L * p + 1) & Long.MaxValue) % MinhashPrime
 
-  /** Doc→band-bucket incidence at configurable (r, b): r·b permutations
-    * derived from ONE md5 per shingle via the affine family above. Scale
-    * shape is the narrow one: the only wide thing on the shuffle is the
-    * r·b-slot signature row, one per doc per map partition (map-side
-    * combined), and candidates meet strictly through band-bucket
-    * equi-joins. Band keys are "|"-separated so variable-width integer
-    * minhashes can never alias across slot boundaries. */
-  private[ops] def bandBucketsParam(s: SparkSession, d: String, r: Int, b: Int): DataFrame = {
-    val nPerms = r * b
-    // Spread before the shingle explode: the per-shingle md5 + r·b affine
-    // permutations are the dominant CPU and would otherwise run inside the
-    // one-task scan stage (single-row-group fixture files — see Spread)
-    val sh = graft.util.Spread(
+  /** The documents' (doc_id, shingle) rows, the first step of the
+    * wide-MinHash front end ([[wideShingles]] → [[wideSignature]] →
+    * [[wideBandKeys]]) of [[dedupMinhashWide]] and [[minhashEstimate]].
+    * Spread before the shingle explode: the per-shingle md5 + 64 affine
+    * permutations are the dominant CPU and would otherwise run inside the
+    * one-task scan stage (single-row-group fixture files — see Spread). */
+  private def wideShingles(s: SparkSession, d: String): DataFrame =
+    graft.util.Spread(
       Tables.documents(s, d).select(col("doc_id"), col("text")), col("doc_id"))
       .select(col("doc_id"),
         explode(shingles3(words(col("text")), col("text"))).as("shingle"))
+
+  /** (doc_id, mh0…mh63): slot p is the min of affine permutation p over
+    * the doc's shingles, all 64 from ONE md5 per shingle. Scale shape:
+    * this row, one per doc per map partition (map-side combined), is the
+    * only wide thing on the shuffle. */
+  private def wideSignature(sh: DataFrame): DataFrame = {
     val h = conv(substring(md5(col("shingle")), 1, 8), 16, 10).cast("long")
-    val withH = sh.select(col("doc_id"), h.as("h"))
-    val mins = (0 until nPerms).map(p =>
+    val mins = (0 until WideR * WideB).map(p =>
       min((col("h") * affineA(p) + affineB(p)) % MinhashPrime).as(s"mh$p"))
-    val sig = withH.groupBy("doc_id").agg(mins.head, mins.tail: _*)
-    val bands = (0 until b).map { j =>
-      concat_ws("|", lit(s"$j") +: (0 until r).map(i => col(s"mh${j * r + i}")): _*)
+    sh.select(col("doc_id"), h.as("h")).groupBy("doc_id").agg(mins.head, mins.tail: _*)
+  }
+
+  /** (doc_id, bkey) rows of a [[wideSignature]]: [[WideB]] bands of
+    * [[WideR]] slots, "|"-separated so variable-width integer minhashes
+    * can never alias across slot boundaries. */
+  private def wideBandKeys(sig: DataFrame): DataFrame = {
+    val bands = (0 until WideB).map { j =>
+      concat_ws("|", lit(s"$j") +: (0 until WideR).map(i => col(s"mh${j * WideR + i}")): _*)
     }
     sig.select(col("doc_id"), explode(array(bands: _*)).as("bkey"))
   }
@@ -167,7 +173,7 @@ object Dedup {
     * lower doc_id. */
   def dedupMinhashWide(s: SparkSession, d: String): DataFrame = {
     val wb = Window.partitionBy("bkey")
-    bandBucketsParam(s, d, WideR, WideB)
+    wideBandKeys(wideSignature(wideShingles(s, d)))
       .withColumn("bmin", min("doc_id").over(wb))
       .groupBy("doc_id").agg(min("bmin").as("keeper"))
       .withColumn("is_dup", (col("keeper") < col("doc_id")).cast("int"))
@@ -317,8 +323,8 @@ object Dedup {
     * doc↔band-bucket graph — cluster(doc) = min doc_id reachable through
     * shared buckets. This is the step a production dedup actually needs
     * (pick one survivor per transitive cluster; pairwise flags
-    * over-delete chains A~B~C where A≁C). The closure is
-    * [[dedupClustersFrom]]'s partition-local union-find. */
+    * over-delete chains A~B~C where A≁C). The closure is the
+    * partition-local union-find of [[graft.util.Components.of]]. */
   def dedupClusters(s: SparkSession, d: String): DataFrame =
     dedupClustersFrom(bandBuckets(s, d, spreadInput = false))
 
@@ -330,65 +336,9 @@ object Dedup {
     * NULL is absent, as in the oracle's join formulation. Output:
     * (doc_id, cluster, is_dup) ordered by doc_id. */
   private[graft] def dedupClustersFrom(buckets: DataFrame): DataFrame =
-    closure(buckets).labels
+    graft.util.Components.of(buckets, "doc_id", "bkey", "dedup").labels
       .withColumn("is_dup", (col("cluster") < col("doc_id")).cast("int"))
       .orderBy("doc_id")
-
-  /** One run of the cluster closure: the (doc_id, cluster) labels, the
-    * union-find pass's partition count, its cross-partition edge count
-    * and the label rounds run over those edges. */
-  private[graft] case class Closure(labels: DataFrame, partitions: Int,
-                                    crossEdges: Long, rounds: Int)
-
-  /** The closure in one partition-local pass
-    * ([[graft.plans.PartitionUnionFind]]): the incidence is shuffled
-    * and sorted by bkey, each partition unions the docs of each bucket,
-    * and the (doc_id, root) rows — root = min doc_id of the doc's
-    * component within the partition — are staged once.
-    *
-    * A pass in one partition is the whole closure. Otherwise a doc whose
-    * buckets fell in several partitions has several roots; with lo = the
-    * doc's min root, every root > lo is joined to lo by a cross-partition
-    * edge. The roots' components over those edges are the global
-    * components, each labelled by its min root, so cluster = label(lo),
-    * or lo when no edge touches it. Only the root graph enters the
-    * path-halving loop ([[Similarity.minLabelComponents]]), and only when
-    * it has an edge: at scale the rounds run over the docs whose buckets
-    * straddle partitions, not over the whole incidence.
-    *
-    * Prints one `[cc] dedup` line with the partition and edge counts, so
-    * a run log shows whether label rounds ran. */
-  private[graft] def closure(buckets: DataFrame): Closure = {
-    val roots = graft.util.Ckpt.stage(
-      graft.plans.PartitionUnionFind.roots(buckets, "doc_id", "bkey"))
-    val parts = roots.queryExecution.toRdd.getNumPartitions
-    def log(edges: Long): Unit = System.err.println(
-      s"[cc] dedup union-find partitions=$parts cross_edges=$edges")
-    if (parts <= 1) {
-      log(0L)
-      // coalesce(1) declares the one partition (SinglePartition), so the
-      // final sort and consumers keyed on doc_id or cluster plan no exchange
-      Closure(roots.coalesce(1).withColumnRenamed("root", "cluster"), parts, 0L, 0)
-    } else {
-      val perDoc = graft.util.Ckpt.stage(roots.groupBy("doc_id")
-        .agg(min("root").as("lo"), collect_set("root").as("roots")))
-      val edges = graft.util.Ckpt.stage(perDoc
-        .select(explode(col("roots")).as("src"), col("lo").as("dst"))
-        .where(col("src") > col("dst")).distinct())
-      val n = edges.count()
-      log(n)
-      if (n == 0) Closure(perDoc.select(col("doc_id"), col("lo").as("cluster")), parts, 0L, 0)
-      else {
-        val und = edges.union(edges.select(col("dst").as("src"), col("src").as("dst")))
-        val verts = und.select(col("src").as("vec_id")).distinct()
-          .withColumn("label", col("vec_id"))
-        val (labels, rounds) = Similarity.minLabelComponents(verts, und, "dedup")
-        Closure(perDoc.join(labels, col("lo") === col("vec_id"), "left")
-          .select(col("doc_id"), coalesce(col("label"), col("lo")).as("cluster")),
-          parts, n, rounds)
-      }
-    }
-  }
 
   /** Document-frequency cap on the Jaccard blocking bigrams (VERDICT
     * round-3 item 7): a bigram present in D docs of a (lang, source)
@@ -517,22 +467,11 @@ object Dedup {
     * must not run twice. */
   def minhashEstimate(s: SparkSession, d: String): DataFrame = {
     val nPerms = WideR * WideB
-    val sh = graft.util.Spread(
-      Tables.documents(s, d).select(col("doc_id"), col("text")), col("doc_id"))
-      .select(col("doc_id"),
-        explode(shingles3(words(col("text")), col("text"))).as("shingle"))
-    val h = conv(substring(md5(col("shingle")), 1, 8), 16, 10).cast("long")
-    val mins = (0 until nPerms).map(p =>
-      min((col("h") * affineA(p) + affineB(p)) % MinhashPrime).as(s"mh$p"))
-    val sigWide = graft.util.Ckpt.stage(
-      sh.select(col("doc_id"), h.as("h")).groupBy("doc_id")
-        .agg(mins.head, mins.tail: _*))
+    val sh = wideShingles(s, d)
+    val sigWide = graft.util.Ckpt.stage(wideSignature(sh))
     val sig = sigWide.select(col("doc_id"),
       array((0 until nPerms).map(p => col(s"mh$p")): _*).as("sig"))
-    val bandCols = (0 until WideB).map { j =>
-      concat_ws("|", lit(s"$j") +: (0 until WideR).map(i => col(s"mh${j * WideR + i}")): _*)
-    }
-    val bk = sigWide.select(col("doc_id"), explode(array(bandCols: _*)).as("bkey"))
+    val bk = wideBandKeys(sigWide)
     val pairs = graft.util.Ckpt.stage(
       bk.select(col("doc_id").as("d1"), col("bkey"))
         .join(bk.select(col("doc_id").as("d2"), col("bkey").as("bk2")),

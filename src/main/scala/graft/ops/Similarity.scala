@@ -5,6 +5,8 @@ import graft.functions.VectorExpressions.{doubleDot, floatDot}
 import graft.util.Det
 import graft.util.Det.Dec0
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.catalyst.expressions.KnownNullable
+import org.apache.spark.sql.graftbridge.Bridge
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -104,33 +106,6 @@ object Similarity {
       .filter(col("crn") <= 2)
       .select(q.columns.map(col) :+ col("cid"): _*)
   }
-
-  /** THE min-label connected-components loop, the Spark twin of the
-    * oracle's [[minLabelCtes]]: from base labels (vec_id, label) over
-    * undirected (src, dst) edges, each round takes the min over
-    * neighbors' labels, then path-halves l ← min(l, l(l)); the driver
-    * loop is [[graft.util.Fixpoint.labels]] (staging, changed count, one
-    * `[cc] <tag>` stderr line per round). Every label must be a vertex of
-    * `labels0` so the halving self-join resolves; rounds drop from
-    * component DIAMETER to ~log(diameter). Returns the final labels and
-    * the rounds run. */
-  private[graft] def minLabelComponents(labels0: DataFrame, edges: DataFrame,
-                                        tag: String): (DataFrame, Int) =
-    // NOTE (r14, measured): do NOT fuse two propagate+halve steps into
-    // one staged round — Spark has no common-subexpression reuse across
-    // join branches, so the inner step's edge join recomputes once per
-    // consumer branch (up to 4×): 6 rounds → 4, but 3.3 s → 4.5 s.
-    graft.util.Fixpoint.labels(labels0, tag) { labels =>
-      val nbrMin = edges.join(labels, edges("dst") === labels("vec_id"))
-        .groupBy("src").agg(min("label").as("nl"))
-      val stepped = labels.join(nbrMin, labels("vec_id") === nbrMin("src"), "left")
-        .select(labels("vec_id"), col("label").as("old"),
-          least(col("label"), coalesce(col("nl"), col("label"))).as("l1"))
-      val ptr = stepped.select(col("vec_id").as("pv"), col("l1").as("pl"))
-      stepped.join(ptr, stepped("l1") === ptr("pv"))
-        .select(stepped("vec_id"), least(col("l1"), col("pl")).as("label"),
-          (least(col("l1"), col("pl")) < col("old")).cast("int").as("chg"))
-    }
 
   /** [[cosineTopk]]'s query stride: every [[CosineStride]]-th vector is a
     * query. Named (ADVICE r10) because [[rboRankings]]' b-leg filters
@@ -699,9 +674,9 @@ object Similarity {
     * textbook DBSCAN is order-dependent), noise = the rest.
     *
     * Scale shape: the ε-graph comes from the banded [[bandedPairs]]
-    * candidates (never all-pairs); degrees and the label loop move only
-    * (id, label) pairs; the core clusters are [[minLabelComponents]]
-    * over the core-core subgraph. */
+    * candidates (never all-pairs); degrees move only (id, count) pairs;
+    * the core clusters are [[graft.util.Components.of]] over the core ids
+    * and the core–core pairs. */
   def dbscan(s: SparkSession, d: String): DataFrame = {
     val pairs = once(bandedPairs(once(withNorm(Tables.embeddings(s, d))), DbEps)
       .select("id1", "id2"))
@@ -711,16 +686,15 @@ object Similarity {
     val base = once(Tables.embeddings(s, d).select("vec_id")
       .join(deg, col("vec_id") === col("src"), "left")
       .select(col("vec_id"), coalesce(col("n_neighbors"), lit(0L)).as("n_neighbors")))
-    val coreIds = once(base.filter(col("n_neighbors") >= DbMinPts).select("vec_id"))
-    // staged, so every label round reads the materialized core-core
-    // edges instead of re-joining `und` against the core ids
-    val cc = once(und
-      .join(coreIds.select(col("vec_id").as("cs")), col("src") === col("cs"))
-      .join(coreIds.select(col("vec_id").as("cd")), col("dst") === col("cd"))
-      .select("src", "dst"))
-    val (labels, _) = minLabelComponents(
-      once(coreIds.select(col("vec_id"), col("vec_id").as("label"))), cc, "dbscan")
-    val clab = labels.select(col("vec_id").as("cv"), col("label").as("core_cluster"))
+    val coreIds = base.filter(col("n_neighbors") >= DbMinPts).select("vec_id")
+    val coreEdges = pairs
+      .join(coreIds, col("id1") === col("vec_id"), "left_semi")
+      .join(coreIds, col("id2") === col("vec_id"), "left_semi")
+      .select(col("id2").as("vec_id"), col("id1").as("key"))
+    val labels = graft.util.Components.of(
+      coreIds.select(col("vec_id"), col("vec_id").as("key")).unionAll(coreEdges),
+      "vec_id", "key", "dbscan").labels
+    val clab = labels.select(col("vec_id").as("cv"), col("cluster").as("core_cluster"))
     // border: non-core with a core neighbor takes the min neighboring label
     val borderLab = und
       .join(clab, col("dst") === col("cv"))
@@ -1306,28 +1280,28 @@ object Similarity {
     * surface n-grams, the companion to [[Dedup.dedupClusters]] on the
     * vector side.
     *
-    * Scale: per round, one (edge ⋈ label) join + two key aggregates over
-    * (id, label) pairs — vectors never ride the loop's exchanges; edges
-    * come from the blocked similarity join (never all-pairs). Rounds =
-    * component diameter; `Ckpt.stage` truncates lineage per round. */
+    * Scale: edges come from the blocked similarity join (never
+    * all-pairs); [[graft.util.Components.of]] shuffles only (id, key)
+    * pairs, and its label rounds run only across union-find partitions. */
   def semanticDedup(s: SparkSession, d: String): DataFrame =
     semanticComponents(s, d, once(embedNeardup(s, d).select("id1", "id2")))
 
-  /** [[minLabelComponents]] behind [[semanticDedup]], over an
-    * already-STAGED (id1, id2) pair frame — shared with
-    * [[Dedup.familyFlags]] so a flag query generates the banded
-    * candidate pairs ONCE and derives both the semantic components and
-    * the direct near-dup flag from the same materialized frame. */
+  /** The components behind [[semanticDedup]], over an already-STAGED
+    * (id1, id2) pair frame — shared with [[Dedup.familyFlags]] so a flag
+    * query generates the banded candidate pairs ONCE and derives both the
+    * semantic components and the direct near-dup flag from the same
+    * materialized frame. Every embedding vec_id is a vertex. */
   private[ops] def semanticComponents(
       s: SparkSession, d: String, pairs: DataFrame): DataFrame = {
-    val edges = pairs
-      .unionAll(pairs.select(col("id2").as("id1"), col("id1").as("id2")))
-      .toDF("src", "dst")
-    val (labels, _) = minLabelComponents(once(Tables.embeddings(s, d)
-      .select(col("vec_id"), col("vec_id").as("label"))), edges, "semantic")
-    labels
-      .withColumn("is_dup", (col("label") < col("vec_id")).cast("int"))
-      .withColumnRenamed("label", "cluster")
+    graft.util.Components.of(
+      Tables.embeddings(s, d).select(col("vec_id"), col("vec_id").as("key"))
+        .unionAll(pairs.select(col("id2").as("vec_id"), col("id1").as("key"))),
+      "vec_id", "key", "semantic").labels
+      // a one-partition union-find's root is NOT NULL; the published
+      // schema keeps the nullable cluster of the label-join formulation
+      .select(col("vec_id"),
+        Bridge.column(KnownNullable(Bridge.expression(col("cluster")))).as("cluster"))
+      .withColumn("is_dup", (col("cluster") < col("vec_id")).cast("int"))
       .orderBy("vec_id")
   }
 
@@ -2119,7 +2093,7 @@ object Similarity {
   private[ops] val LabelRounds = 12
 
   /** Unrolled min-label propagation with pointer jumping, the oracle
-    * twin of [[minLabelComponents]]: from
+    * twin of the [[graft.util.Components]] residual label loop: from
     * base labels `$l0`(v, l) over undirected edges `$edges`(src, dst),
     * each round takes the min over neighbors' labels then jumps l ←
     * min(l, l(l)). Converges to the component minimum in ≤

@@ -369,8 +369,9 @@ object TrainingPrep {
     // for the audit pairs. Spread, unlike dedupClusters: its doc_id hash
     // layout serves the audit's doc_id joins (bandBucketsOf scaladoc).
     val b = graft.util.Ckpt.stage(Dedup.bandBucketsOf(Tables.documents(s, d)))
-    val cl = graft.util.Ckpt.stage(Dedup.closure(b).labels
-      .withColumn("split", splitOf(col("cluster"))))
+    val cl = graft.util.Ckpt.stage(
+      graft.util.Components.of(b, "doc_id", "bkey", "split").labels
+        .withColumn("split", splitOf(col("cluster"))))
     val pairs = b.as("x").join(b.as("y"),
         col("x.bkey") === col("y.bkey") && col("x.doc_id") < col("y.doc_id"))
       .select(col("x.doc_id").as("ida"), col("y.doc_id").as("idb"))

@@ -12,7 +12,7 @@ import org.apache.spark.sql.graftbridge.Bridge
 import org.apache.spark.sql.types.{DataType, LongType}
 
 /** Partition-local union-find over a (doc, key) incidence — the custom
-  * operator behind [[graft.ops.Dedup.dedupClustersFrom]].
+  * operator behind [[graft.util.Components.of]].
   *
   * Physical shape: the exec requires clustering AND ascending order on
   * the key, so EnsureRequirements inserts one hash exchange on the key

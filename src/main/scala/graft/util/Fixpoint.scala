@@ -3,11 +3,11 @@ package graft.util
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
-/** The driver loop of the engine's min-label propagation,
-  * [[graft.ops.Similarity.minLabelComponents]] (behind `q_dbscan`,
-  * `q_dedup_semantic` and the cross-partition edges of
-  * [[graft.ops.Dedup.closure]]). The driver holds only two counts per
-  * round, never data.
+/** The driver loop of the engine's min-label propagation: the residual
+  * rounds of [[Components.of]] over the union-find roots joined across
+  * partitions (behind `q_dedup_clusters`, `q_split_cluster_safe`,
+  * `q_dedup_semantic` and `q_dbscan`). The driver holds only two counts
+  * per round, never data.
   *
   * The cap comes from the input, not a constant: labels only decrease,
   * and each round carries every label at least one hop further, so a map

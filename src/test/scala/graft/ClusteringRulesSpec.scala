@@ -5,9 +5,10 @@ import graft.ops.Similarity
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
-/** The shared vector-clustering rules of [[ops.Similarity]] on crafted
-  * inputs the fixture never produces: quantized-cosine ties in the cell
-  * assignment, and a long path in the min-label component loop. */
+/** The shared vector-clustering rules on crafted inputs the fixture
+  * never produces: quantized-cosine ties in [[ops.Similarity]]'s cell
+  * assignment, and a long path through [[util.Components.of]], whose
+  * min-label loop joins the union-find roots across partitions. */
 class ClusteringRulesSpec extends AnyFunSuite {
   private lazy val spark = TestSpark.session
 
@@ -33,16 +34,25 @@ class ClusteringRulesSpec extends AnyFunSuite {
     val path = (0 until pathLen - 1).map(i => (i.toLong, i + 1L))
     val small = Seq((105L, 101L), (101L, 103L))
     val isolated = 200L
-    val und = (path ++ small).flatMap { case (a, b) => Seq((a, b), (b, a)) }
-      .toDF("src", "dst")
     val vertices = (0L until pathLen) ++ Seq(101L, 103L, 105L, isolated)
-    val labels0 = vertices.toDF("vec_id").withColumn("label", col("vec_id"))
-    val (labels, rounds) = Similarity.minLabelComponents(labels0, und, "spec")
-    val got = labels.as[(Long, Long)].collect().toMap
-    val expected = (0L until pathLen).map(_ -> 0L).toMap ++
-      Map(101L -> 101L, 103L -> 101L, 105L -> 101L, isolated -> isolated)
-    assert(got === expected)
-    assert(rounds < pathLen - 1, s"$rounds rounds: path halving did not shortcut the path")
-    util.Ckpt.release(spark)
+    // the edge list as an incidence: a self row per vertex, a row per
+    // edge; without coalescing the union-find runs over 4 partitions and
+    // the label loop joins the roots across them
+    val incidence = (vertices.map(v => (v, v)) ++ (path ++ small).map { case (a, b) => (b, a) })
+      .toDF("vec_id", "key")
+    spark.conf.set("spark.sql.adaptive.coalescePartitions.enabled", "false")
+    try {
+      val c = util.Components.of(incidence, "vec_id", "key", "spec")
+      val got = c.labels.as[(Long, Long)].collect().toMap
+      val rounds = c.rounds
+      info(s"${c.partitions} partitions, ${c.crossEdges} cross edges, $rounds rounds")
+      val expected = (0L until pathLen).map(_ -> 0L).toMap ++
+        Map(101L -> 101L, 103L -> 101L, 105L -> 101L, isolated -> isolated)
+      assert(got === expected)
+      assert(rounds < pathLen - 1, s"$rounds rounds: path halving did not shortcut the path")
+    } finally {
+      spark.conf.unset("spark.sql.adaptive.coalescePartitions.enabled")
+      util.Ckpt.release(spark)
+    }
   }
 }

@@ -4,19 +4,21 @@ import graft.ops.Dedup
 import org.apache.spark.sql.DataFrame
 import org.scalatest.funsuite.AnyFunSuite
 
-/** [[ops.Dedup.dedupClustersFrom]] against a driver-side union-find on
-  * generated incidences. Every case runs twice: with adaptive partition
-  * coalescing, which folds these small incidences into one union-find
-  * partition, and without it, so the pass runs over the session's 4
-  * shuffle partitions and the cross-partition edges and label rounds do
-  * the joining. */
+/** [[ops.Dedup.dedupClustersFrom]] and [[util.Components.of]] against a
+  * driver-side union-find on generated incidences: (doc_id, bkey) band
+  * buckets, and edge lists in the shape `q_dedup_semantic` and `q_dbscan`
+  * pass (a self row per vertex, a row per pair). Every case runs twice:
+  * with adaptive partition coalescing, which folds these small
+  * incidences into one union-find partition, and without it, so the pass
+  * runs over the session's 4 shuffle partitions and the cross-partition
+  * edges and label rounds do the joining. */
 class DedupClustersSpec extends AnyFunSuite {
   private lazy val spark = TestSpark.session
   private val Coalesce = "spark.sql.adaptive.coalescePartitions.enabled"
 
   /** (doc_id, cluster, is_dup) by doc_id: cluster = min doc_id of the
     * doc's component, rows with a NULL doc_id or bkey ignored. */
-  private def reference(rows: Seq[(Option[Long], String)]): Seq[(Long, Long, Int)] = {
+  private def reference[K](rows: Seq[(Option[Long], K)]): Seq[(Long, Long, Int)] = {
     val parent = scala.collection.mutable.Map[Long, Long]()
     def find(x: Long): Long = if (parent(x) == x) x else find(parent(x))
     val kept = rows.collect { case (Some(d), k) if k != null => (d, k) }
@@ -60,6 +62,41 @@ class DedupClustersSpec extends AnyFunSuite {
     assert(b === want, "4 partitions")
   }
 
+  /** An edge list as an incidence: a self row (v, key = v) per vertex,
+    * so an isolated vertex keeps its own label, and a row (b, key = a)
+    * per pair (a, b). */
+  private def edgeRows(vertices: Seq[Long], pairs: Seq[(Long, Long)]): Seq[(Option[Long], Long)] =
+    vertices.map(v => (Option(v), v)) ++ pairs.map { case (a, b) => (Option(b), a) }
+
+  /** [[util.Components.of]]'s (vec_id, cluster) over edge-list rows, in
+    * both modes. */
+  private def checkEdges(rows: Seq[(Option[Long], Long)]): Unit = {
+    import spark.implicits._
+    val want = reference(rows).map { case (v, c, _) => (v, c) }
+    val (a, b) = bothModes(util.Components.of(rows.toDF("vec_id", "key"), "vec_id", "key", "spec")
+      .labels.as[(Long, Long)].collect().toSeq.sorted)
+    assert(a === want, "coalesced")
+    assert(b === want, "4 partitions")
+  }
+
+  test("edge lists: isolated vertices, a path beside a small component, random pairs") {
+    checkEdges(edgeRows((0L until 12L).map(_ * 7), Nil))
+    // ClusteringRulesSpec's graph: a 20-vertex path, a 3-vertex
+    // component and an isolated vertex
+    checkEdges(edgeRows((0L until 20L) ++ Seq(101L, 103L, 105L, 200L),
+      (0L until 19L).map(i => (i, i + 1)) ++ Seq((105L, 101L), (101L, 103L))))
+    for (seed <- 1 to 3) {
+      val rnd = new scala.util.Random(seed)
+      val pairs = Seq.fill(150)((rnd.nextInt(240).toLong, rnd.nextInt(240).toLong))
+      val rows = edgeRows(0L until 240L, pairs)
+      val want = reference(rows)
+      val paired = pairs.flatMap { case (a, b) => Seq(a, b) }.toSet
+      assert(want.exists(r => !paired(r._1)), "an isolated vertex")
+      assert(want.exists(_._3 == 1))
+      checkEdges(rows)
+    }
+  }
+
   test("generated incidences: docs in 1 and 3 buckets, repeated rows, NULLs") {
     for (seed <- 1 to 3) {
       val rnd = new scala.util.Random(seed)
@@ -92,7 +129,7 @@ class DedupClustersSpec extends AnyFunSuite {
     val rows = (0L until 40L).flatMap(i => Seq((Option(i), s"b$i"), (Option(i), s"b${i + 1}")))
     check(rows)
     val (one, four) = bothModes {
-      val c = Dedup.closure(rows.toDF("doc_id", "bkey"))
+      val c = util.Components.of(rows.toDF("doc_id", "bkey"), "doc_id", "bkey", "spec")
       c.labels.count()
       (c.partitions, c.crossEdges, c.rounds)
     }

@@ -21,15 +21,13 @@ class PlanBudgetSpec extends AnyFunSuite {
     * the previous pass's frame 3-4 times, so the unstaged lineage is
     * exponential in the pass count (q_kcore_peel: ~4^6 subtree copies —
     * the optimizer itself OOMs before any exchange could be counted).
-    * The six-family flag queries transit
-    * [[ops.Similarity.minLabelComponents]], whose unstaged lineage is
-    * likewise exponential — and since round 9 every lineage copy carries
-    * the 72-plane banded-LSH expression tree, so even the EXPLAIN string
-    * OOMs the audit JVM.
     * q_zorder_pruning's stage is load-bearing, not just a perf hint: the
     * offsets aggregate and the main branch must observe the SAME
     * materialized monotonically_increasing_id values. q_dbscan and
-    * q_dedup_semantic run the same loop directly.
+    * q_dedup_semantic label through [[util.Components.of]], whose
+    * union-find roots are staged once per closure; the banded-LSH pairs
+    * they read carry a 72-plane expression tree in every unstaged
+    * lineage copy.
     * The staged plan IS the production plan for these; the budget pins
     * the final executed plan over the staged leaves, exactly what
     * graft.PlanAudit measures. */
@@ -75,12 +73,13 @@ class PlanBudgetSpec extends AnyFunSuite {
     ("q_join_star", 1, 5),            // TPC-H Q5: all five dims must broadcast
     // round-4 additions (audit-mode = staged subtrees recomputed inline)
     ("q_pagerank", 10, 1),            // 5 unrolled iterations over the staged edge list
-    // staged audits over the min-label loop's final labels
+    // staged audits over the union-find's staged roots
     ("q_dbscan", 5, 2),               // degree agg + border min-label agg +
                                       // label joins; core/border labels
-                                      // broadcast (audited 5/2)
-    ("q_dedup_semantic", 1, 0),       // the presentation sort over the
-                                      // staged labels (audited 1/0)
+                                      // broadcast (audited 5/3)
+    ("q_dedup_semantic", 0, 0),       // one union-find partition: its
+                                      // coalesce(1) roots need no sort
+                                      // exchange (audited 0/0)
     // round-10 wave: graph metrics + late-interaction + epoch order
     // (r14: modularity/assortativity/reciprocity iterate driver-side over
     // the collected bounded lane matrix — the returned plan is the
